@@ -5,16 +5,19 @@ the sf0.001 synthetic pages table. `queries()` exposes each implemented
 operator from SURVEY.md §2 as a (spark, sf_dir) → DataFrame callable, and
 `oracle_sql()` gives the DuckDB-equivalent ANSI SQL. The `pages` input table
 (BASELINE.json input_hint shape) is synthesized deterministically (seed=42)
-by logport_spark.datagen; its parquet lives under /root/repo/data so the
-DuckDB oracle can read the identical bytes.
+by logport_spark.datagen; its parquet lives under the checkout's `data/`
+directory (or $LOGPORT_SPARK_DATA_DIR) so the DuckDB oracle can read the
+identical bytes. This file puts its own directory first on sys.path, so
+loading it from any copy of the tree runs that copy's `logport_spark`.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -9,8 +9,8 @@ generator is used. The embedded line corpus exercises every branch of the
 reference's parse path (Watch::filterLogLine, src/Watch.cc:377-426):
 unstructured lines, escape-heavy lines, canonical JSON objects/arrays,
 malformed JSON (parse-failure branch), empty lines (dropped), and a
-hot-domain skew knob (~30% of rows on one domain) to exercise salted
-repartitioning.
+hot-domain skew knob (~30% of rows on one domain) to exercise the
+bucketed fan-out write's skew defense.
 
 JSON lines are generated ALREADY in canonical sorted-compact form so that
 `json.loads → json.dumps(sort_keys, compact)` is the identity — this is what
@@ -41,7 +41,10 @@ from .config import (
 SEED = 42
 BASE_TS = datetime(2024, 8, 1, 0, 0, 0)  # naive UTC; session TZ is UTC
 
-DATA_DIR = os.environ.get("LOGPORT_SPARK_DATA_DIR", "/root/repo/data")
+# <checkout>/data, next to the package, so any copy of the tree reads and
+# writes its own data; LOGPORT_SPARK_DATA_DIR overrides it.
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DATA_DIR = os.environ.get("LOGPORT_SPARK_DATA_DIR", os.path.join(_CHECKOUT, "data"))
 
 # docs per scale factor (sf0.1 ≈ 2M routed records at ~20 lines/doc)
 SF_DOCS = {"0.001": 1_000, "0.01": 10_000, "0.1": 100_000, "1": 1_000_000,

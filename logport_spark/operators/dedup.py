@@ -135,21 +135,11 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.5,
 # ---------------------------------------------------------- MinHash+LSH ----
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 64) -> DataFrame:
-    """k min-hashes per doc: sig_i = min over shingles of xxhash64(i, h64)
-    where h64 = xxhash64(sh).
-
-    The (possibly long) shingle string is hashed ONCE; the k permutation
-    hashes re-hash only the resulting 8-byte long — k independent hash
-    functions at a fraction of the string-hashing cost, all JVM-side; one
-    groupBy produces the whole signature."""
-    return minhash_signatures_h64(
-        shingles.select("doc_id", F.xxhash64(F.col("sh")).alias("h64")), num_hashes
-    )
-
-
 def minhash_signatures_h64(shingle_hashes: DataFrame, num_hashes: int = 64) -> DataFrame:
-    """MinHash signatures from pre-hashed shingles (doc_id, h64)."""
+    """k min-hashes per doc from pre-hashed shingles (doc_id, h64):
+    sig_i = min over shingles of xxhash64(i, h64). Each shingle string is
+    hashed once upstream, so the k permutations re-hash only an 8-byte
+    long; one groupBy produces the whole signature."""
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("h64"))).alias(f"h{i}")
         for i in range(num_hashes)

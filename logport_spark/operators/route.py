@@ -1,24 +1,22 @@
-"""Routing: broadcast route resolution, salted repartition, fan-out write.
+"""Routing: broadcast route resolution, dead-letter split, sink compaction.
 
 - R1 route resolution (file→topic, src/LogPort.cc:639-643 +
   src/Database.cc:65-77): broadcast join on route_key → sink + envelope
   constants (hostname/prd/log_type).
 - R2 partitioning (src/KafkaProducer.cc:389-397 uses rdkafka's keyless
-  round-robin): here records land in per-sink table partitions; a hot domain
-  would funnel one partition through one task, so we SALT the repartition —
-  `repartition(sink, pmod(xxhash64(url), salt_buckets))` spreads each sink's
-  write across `salt_buckets` tasks while keeping files grouped per sink.
+  round-robin): records land in per-sink table partitions; a hot domain
+  would funnel one partition through one task, so the fan-out write
+  (plans/ledger._write_sinks) repartitions by the crc32 url bucket, which
+  spreads each sink across every bucket.
 - R3 multi-target fan-out (src/HttpProducer.cc:196-224): one physical write
-  partitioned BY sink — each sink table is a partition directory; a true
-  multi-table fan-out is a loop of filtered writes sharing the same cached
-  upstream (used by the streaming variant).
+  partitioned BY (bucket, sink) — each sink table is a partition directory.
 - K2 dead-letter (src/KafkaProducer.cc:83-126): parse failures are routed to
   the quarantine table alongside the sinks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,17 +30,6 @@ def resolve_route(df: DataFrame, routes: DataFrame) -> DataFrame:
         F.col("log_type").alias("route_log_type"),
     )
     return df.join(F.broadcast(r), "route_key", "left")
-
-
-def salt_col(url_col: str = "url", buckets: int = 16):
-    """Deterministic salt from the url — defuses hot-domain skew."""
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(buckets)).cast("int")
-
-
-def salted_repartition(df: DataFrame, buckets: int = 16, parallelism: int | None = None) -> DataFrame:
-    df = df.withColumn("salt", salt_col(buckets=buckets))
-    n = parallelism or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return df.repartition(int(n), F.col("sink"), F.col("salt"))
 
 
 ROUTED_COLS = [
@@ -62,16 +49,6 @@ ROUTED_COLS = [
 ]
 
 
-def write_routed(df: DataFrame, out_dir: str, salt_buckets: int = 16, extra_partition_cols: list[str] | None = None) -> None:
-    """Fan-out write: one atomic job, per-sink partition directories."""
-    part_cols = (extra_partition_cols or []) + ["sink"]
-    cols = [c for c in ROUTED_COLS if c not in part_cols] + part_cols
-    salted = salted_repartition(df, buckets=salt_buckets)
-    salted.select(*[c for c in cols if c in salted.columns], *(
-        [] if "salt" in cols else []
-    )).drop("salt").write.mode("overwrite").partitionBy(*part_cols).parquet(out_dir)
-
-
 def quarantine(df: DataFrame) -> DataFrame:
     """Dead-letter channel: lines that hit the parse-failure branch.
 
@@ -88,10 +65,10 @@ def quarantine(df: DataFrame) -> DataFrame:
 def compact_sinks(spark, out_dir: str,
                   target_file_bytes: int = 128 << 20) -> dict[str, tuple[int, int]]:
     """OPTIMIZE-style small-file compaction for the routed sink table —
-    the maintenance job a 10^12-row fan-out needs: salted writes
-    deliberately spread each sink across `salt_buckets` tasks (skew
-    defense), so a long-running pipeline accretes small files per sink
-    until scans go metadata-bound. Per sink partition: if the file count
+    the maintenance job a 10^12-row fan-out needs: bucketed writes
+    deliberately spread each sink across many tasks (skew defense), so a
+    long-running pipeline accretes small files per sink until scans go
+    metadata-bound. Per sink partition: if the file count
     exceeds ceil(bytes / target_file_bytes), rewrite JUST that partition
     at the target count via dynamic partition overwrite (the same
     atomic, exactly-once-preserving primitive the ledger and streaming
@@ -99,8 +76,9 @@ def compact_sinks(spark, out_dir: str,
     mix, and row content is untouched; pytest pins count + value-hash
     equality across compaction).
 
-    Handles any key=val partition tree — the run layout (sink=) and the
-    ledger layout (bucket=/sink=) alike. The per-leaf loop is
+    Handles any key=val partition tree — a plain sink= tree, the
+    streaming layout (batch_id=/sink=) and the ledger layout
+    (bucket=/sink=) alike. The per-leaf loop is
     driver-side but bounded by the partition count (sinks are logport's
     topics — tens; ledger buckets are the resume granularity — tens),
     and the directory listing is the local-parquet stand-in for what

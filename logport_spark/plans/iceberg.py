@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import route as R
+from .ledger import sink_rows
 
 SINK_TABLE_DDL = (
     "CREATE TABLE IF NOT EXISTS {table} ("
@@ -46,30 +46,15 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def ensure_sink_table(spark: SparkSession, table: str) -> None:
-    """DDL for the per-sink fan-out table (partition spec = the parquet
-    stand-in's directory layout)."""
-    if not iceberg_available(spark):  # pragma: no cover - probe is the test
-        raise NotImplementedError(
-            "Iceberg runtime not on the classpath — the shipped pipeline "
-            "uses parquet + dynamic partition overwrite + ledger-last "
-            "(plans/ledger.py) as the documented stand-in")
-    spark.sql(SINK_TABLE_DDL.format(table=table))
-
-
-def write_routed_iceberg(routed: DataFrame, table: str,
-                         salt_buckets: int = 16) -> None:
-    """The fan-out write against a real Iceberg table: salted repartition
-    (identical to route.write_routed), then overwritePartitions — a
-    replayed run REPLACES its (bucket, sink) partitions snapshot-atomically
-    instead of appending duplicates, the exact contract the parquet
-    stand-in implements with dynamic overwrite."""
+def write_routed_iceberg(routed: DataFrame, table: str) -> None:
+    """The fan-out write against a real Iceberg table: the same rows and
+    bucket repartition as the parquet write (ledger.sink_rows), then
+    overwritePartitions — a replayed run REPLACES its (bucket, sink)
+    partitions snapshot-atomically instead of appending duplicates, the
+    exact contract the parquet stand-in implements with dynamic overwrite."""
     spark = routed.sparkSession
     if not iceberg_available(spark):
         raise NotImplementedError(
             "Iceberg runtime not on the classpath — use "
             "plans.ledger.run_with_ledger (parquet stand-in)")
-    cols = [c for c in R.ROUTED_COLS if c != "sink"] + ["bucket", "sink"]
-    salted = R.salted_repartition(routed, buckets=salt_buckets)
-    (salted.select(*[c for c in cols if c in salted.columns])  # pragma: no cover
-     .writeTo(table).overwritePartitions())
+    sink_rows(routed).writeTo(table).overwritePartitions()  # pragma: no cover

@@ -20,9 +20,10 @@ Reference semantics re-expressed (NOT ported):
   idempotence trick is subsumed by the sink-overwrite semantics).
 
 Scale notes: the ledger is O(n_buckets) rows per run — thousands, not
-billions; the anti-join against it is a broadcast join. Buckets double as
-the salt for the fan-out write (hash of url ⇒ hot domains spread uniformly
-across buckets), so resume granularity and skew-defusal share one shuffle.
+billions; it is read once per run, and the pending buckets become a literal
+IN-list filter on the input. Buckets double as the salt for the fan-out
+write (hash of url ⇒ hot domains spread uniformly across buckets), so
+resume granularity and skew-defusal share one shuffle.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import route as R
-from .pipeline import parsed_routed
+from .pipeline import parsed_routed, shipped_aggs
 
 DEFAULT_BUCKETS = 64
 
@@ -126,24 +127,6 @@ def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path(out_dir))
 
 
-def committed_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Distinct committed bucket ids (small — broadcast into the anti-join)."""
-    return (
-        read_ledger(spark, out_dir)
-        .filter(F.col("status") == "committed")
-        .select("bucket")
-        .distinct()
-    )
-
-
-def remaining_pages(
-    spark: SparkSession, pages: DataFrame, out_dir: str, n_buckets: int = DEFAULT_BUCKETS
-) -> DataFrame:
-    """Resume scan: pages whose bucket is NOT yet committed (left anti join)."""
-    done = committed_buckets(spark, out_dir)
-    return with_bucket(pages, n_buckets).join(F.broadcast(done), "bucket", "left_anti")
-
-
 def input_fingerprints(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Per-bucket input fingerprint — commutative (any partitioning/order of
     the same url multiset yields the same value), so it's computable with
@@ -168,6 +151,17 @@ def input_fingerprints(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> Da
     )
 
 
+SINK_TABLE_COLS = [c for c in R.ROUTED_COLS if c != "sink"] + ["bucket", "sink"]
+
+
+def sink_rows(routed: DataFrame) -> DataFrame:
+    """The sink table's row layout (partition columns last), shuffled once
+    by bucket: the resume unit and the hot-domain salt in one exchange.
+    Shared by the parquet write below and plans/iceberg.py."""
+    return (routed.select(*[c for c in SINK_TABLE_COLS if c in routed.columns])
+            .repartition(F.col("bucket")))
+
+
 def _write_sinks(routed: DataFrame, out_dir: str) -> None:
     """Idempotent fan-out write: dynamic overwrite of (bucket, sink) dirs.
 
@@ -175,10 +169,8 @@ def _write_sinks(routed: DataFrame, out_dir: str) -> None:
     only partitions present in `routed` are replaced — committed buckets from
     earlier runs are untouched, uncommitted buckets are replaced not appended.
     """
-    cols = [c for c in R.ROUTED_COLS if c not in ("sink",)] + ["bucket", "sink"]
     (
-        routed.select(*[c for c in cols if c in routed.columns])
-        .repartition(F.col("bucket"))
+        sink_rows(routed)
         .write.mode("overwrite")
         .partitionBy("bucket", "sink")
         .parquet(out_dir + "/sinks")
@@ -225,9 +217,12 @@ def run_with_ledger(
             "a fixed input snapshot (ledger-resume contract); pages changed "
             "inside already-committed buckets and would be silently skipped "
             "— use a fresh out_dir for the new snapshot")
-    todo = remaining_pages(spark, pages, out_dir, n_buckets)
-    if only_buckets is not None:
-        todo = todo.filter(F.col("bucket").isin(only_buckets))
+    # The buckets this run is responsible for: not yet committed (and, for a
+    # simulated crash, inside only_buckets). The same list filters the input
+    # here and the stats re-scan below.
+    universe = [b for b in range(n_buckets)
+                if b not in done and (only_buckets is None or b in only_buckets)]
+    todo = with_bucket(pages, n_buckets).filter(F.col("bucket").isin(universe))
     # persisted watch/unwatch mutations under THIS out_dir (store.py) bind
     # to its runs — the logport watches-table contract
     routed = parsed_routed(spark, todo.drop("bucket"), config_dir=out_dir)
@@ -235,11 +230,9 @@ def run_with_ledger(
     _write_sinks(routed, out_dir)
     # Ledger rows: per-bucket aggregates computed from the JUST-WRITTEN sink
     # partitions (a compact parquet re-scan) instead of re-evaluating the
-    # whole parse DAG a second time. Every bucket this run was responsible
-    # for gets a committed row — including buckets that routed ZERO rows —
-    # so resume converges instead of rescanning empty buckets forever.
-    universe = [b for b in range(n_buckets)
-                if b not in done and (only_buckets is None or b in only_buckets)]
+    # whole parse DAG a second time. Every bucket in the universe gets a
+    # committed row — including buckets that routed ZERO rows — so resume
+    # converges instead of rescanning empty buckets forever.
     # Only the "nothing ever written" first-run case (fully empty input, no
     # sinks/ dir yet) may be tolerated; any other failure (corrupt files,
     # schema drift, transient FS errors) must propagate so the run fails
@@ -250,11 +243,7 @@ def run_with_ledger(
             spark.read.parquet(out_dir + "/sinks")
             .filter(F.col("bucket").isin(universe))
         )
-        stats = written.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("rows_routed"),
-            F.sum(F.col("record_bytes") + F.lit(1)).alias("bytes_shipped"),
-            F.sum(F.col("parse_fail").cast("long")).alias("parse_failures"),
-        )
+        stats = written.groupBy("bucket").agg(*shipped_aggs())
         stats_rows = {r["bucket"]: r for r in stats.collect()}
     else:
         stats_rows = {}

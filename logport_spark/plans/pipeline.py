@@ -7,13 +7,14 @@ parallelism, and the per-sink Kafka topics become per-sink table partitions.
 
 The DAG is shuffle-minimal by construction:
   scan(pages, html pruned) → explode+filter (narrow) → broadcast joins
-  (narrow) → envelope UDF (narrow) → ONE shuffle (the salted repartition
-  before the fan-out write) → per-sink metrics (partial agg map-side).
+  (narrow) → envelope UDF (narrow) → ONE shuffle (the bucket repartition
+  before the fan-out write, plans/ledger.py) → per-sink metrics (partial
+  agg map-side).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import parse as P
@@ -53,24 +54,18 @@ def parsed_routed(spark: SparkSession, pages: DataFrame,
                              config_dir=config_dir)
 
 
-def sink_metrics(routed: DataFrame) -> DataFrame:
-    """A1/A2: per-sink rows routed, bytes shipped (+1/record newline,
-    src/KafkaProducer.cc:101-108), parse failures."""
-    return routed.groupBy("sink").agg(
+def shipped_aggs() -> list[Column]:
+    """A1/A2, the shipped-bytes rule: rows routed, bytes shipped (+1/record
+    newline, src/KafkaProducer.cc:101-108), parse failures. One definition
+    for every grain it is grouped by (per sink here, per bucket in the
+    ledger)."""
+    return [
         F.count(F.lit(1)).alias("rows_routed"),
         F.sum(F.col("record_bytes") + F.lit(1)).alias("bytes_shipped"),
         F.sum(F.col("parse_fail").cast("long")).alias("parse_failures"),
-    )
+    ]
 
 
-def run_batch(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Execute the fan-out write and return the per-sink metrics DataFrame."""
-    routed = parsed_routed(spark, pages)
-    R.write_routed(routed, out_dir, salt_buckets=salt_buckets)
-    written = spark.read.parquet(out_dir)
-    return sink_metrics(written)
+def sink_metrics(routed: DataFrame) -> DataFrame:
+    """Per-sink shipped metrics."""
+    return routed.groupBy("sink").agg(*shipped_aggs())

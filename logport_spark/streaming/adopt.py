@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import routed_from_lines
-from .stream import SINK_COLS
+from .stream import write_batch_sinks
 
 
 def adopt_stream(spark: SparkSession, host: str, port: int,
@@ -153,15 +153,7 @@ def run_adopt(
             F.row_number().over(
                 Window.partitionBy("url").orderBy("_seq")).cast("int")
         ).drop("_seq")
-        routed = routed_from_lines(sp, lines)
-        (
-            routed.select(*SINK_COLS)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "sink")
-            .parquet(out_dir + "/sinks")
-        )
+        write_batch_sinks(routed_from_lines(sp, lines), batch_id, out_dir)
 
     framed = adopt_lines(adopt_stream(spark, host, port, name), name,
                          fixed_ts, tagged=tagged)

@@ -28,6 +28,22 @@ from ..plans.pipeline import parsed_routed
 SINK_COLS = ["url", "line_no", "record", "record_bytes", "parse_fail", "sink"]
 
 
+def write_batch_sinks(routed: DataFrame, batch_id: int, out_dir: str) -> None:
+    """One micro-batch's sink write: SINK_COLS under (batch_id, sink) with
+    DYNAMIC partition overwrite (the same idempotent write as
+    plans/ledger._write_sinks), so a batch replayed after a crash between
+    the write and the checkpoint commit overwrites its own partitions
+    instead of appending duplicates."""
+    (
+        routed.select(*SINK_COLS)
+        .withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", "sink")
+        .parquet(out_dir + "/sinks")
+    )
+
+
 def pages_stream(spark: SparkSession, pages_dir: str, max_files: int = 2) -> DataFrame:
     """Incremental scan: new parquet files under pages_dir become micro-batches
     (the inotify IN_MODIFY analog).
@@ -55,24 +71,12 @@ def run_stream_pipeline(
     max_files: int = 2,
 ) -> None:
     """Run the full parse→enrich→route DAG incrementally until no new files
-    remain (availableNow), writing per-(batch, sink) partitions.
-
-    Exactly-once into the sink tables: each micro-batch writes under its own
-    batch_id partition with DYNAMIC partition overwrite (the same idempotent
-    write as plans/ledger._write_sinks), so a batch replayed after a crash
-    between the write and the checkpoint commit overwrites its own
-    partitions instead of appending duplicates."""
+    remain (availableNow), writing per-(batch, sink) partitions
+    exactly once (write_batch_sinks)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        routed = parsed_routed(batch_df.sparkSession, batch_df)
-        (
-            routed.select(*SINK_COLS)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "sink")
-            .parquet(out_dir + "/sinks")
-        )
+        write_batch_sinks(parsed_routed(batch_df.sparkSession, batch_df),
+                          batch_id, out_dir)
 
     q = (
         pages_stream(spark, pages_dir, max_files)

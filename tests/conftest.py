@@ -1,8 +1,17 @@
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
-from logport_spark.session import get_spark
+# The checkout this file lives in, so tests import its `logport_spark`,
+# `__spark_entry__`, `bench` and `tools` whatever the working directory.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from logport_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

@@ -51,9 +51,6 @@ def test_bench_registrations_resolve():
     """Every name bench.py registers (headline suite + dedup ladder) must
     resolve to a registered query — a typo would silently drop the entry
     from the measurement, not fail."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import bench
     import __spark_entry__ as em
 
@@ -72,9 +69,6 @@ def test_registry_counts_pinned():
     (VERDICT r5 follow-up #8: the docs said 142, the judge counted 145 —
     the asserted truth is 50 driver-contract + 93 baselines = 143, each
     with exactly one oracle and no name registered on both sides)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as em
 
     q, b = em.queries(), em.baseline_queries()

@@ -9,12 +9,7 @@ driver uses (via tools/driver_sim helpers), at the driver's sf0.01 scale.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -35,7 +30,7 @@ def duck():
 
 def test_baselines_match_oracles(spark, duck):
     import __spark_entry__ as entrymod
-    from driver_sim import canon_pandas, table_hash
+    from tools.driver_sim import canon_pandas, table_hash
 
     qs = entrymod.baseline_queries()
     oracles = entrymod.baseline_oracle_sql()

@@ -17,7 +17,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_pipeline_runs_from_pyfiles_zip(tmp_path):
-    sys.path.insert(0, REPO)
     from tools.package_pyfiles import build
 
     zip_path = build(str(tmp_path / "logport_spark.zip"))
@@ -52,3 +51,36 @@ def test_pipeline_runs_from_pyfiles_zip(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert "ZIPRUN_OK" in r.stdout
+
+
+def test_copied_tree_runs_its_own_code(tmp_path):
+    """A copy of the tree, loaded by file path from an unrelated working
+    directory with no PYTHONPATH or data-dir override, imports ITS OWN
+    package and keeps its data beside it — never the checkout it was
+    copied from."""
+    import shutil
+
+    copy = tmp_path / "copy"
+    shutil.copytree(os.path.join(REPO, "logport_spark"), copy / "logport_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    shutil.copy(os.path.join(REPO, "__spark_entry__.py"), copy)
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    child = textwrap.dedent(f"""
+        import importlib.util
+        spec = importlib.util.spec_from_file_location(
+            "__spark_entry__", {str(copy / "__spark_entry__.py")!r})
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+        import logport_spark
+        from logport_spark import datagen
+        print(logport_spark.__file__)
+        print(datagen.DATA_DIR)
+    """)
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "LOGPORT_SPARK_DATA_DIR")}
+    r = subprocess.run([sys.executable, "-c", child], cwd=str(elsewhere),
+                       env=env, capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-3000:]
+    pkg_file, data_dir = r.stdout.split()[-2:]
+    assert pkg_file == str(copy / "logport_spark" / "__init__.py"), pkg_file
+    assert data_dir == str(copy / "data"), data_dir

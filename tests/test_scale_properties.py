@@ -11,25 +11,6 @@ from pyspark.sql import functions as F
 from logport_spark import datagen
 
 
-def test_salted_repartition_defuses_hot_domain(spark, pages_small):
-    """~30% of pages share one domain; after the salted repartition no
-    shuffle partition may dominate (max <= 3x mean over non-empty parts)."""
-    from logport_spark.operators.route import salted_repartition
-    from logport_spark.plans.pipeline import parsed_routed
-
-    routed = parsed_routed(spark, pages_small)
-    hot = routed.groupBy("domain").count().orderBy(F.desc("count")).first()
-    assert hot["count"] > 0.2 * routed.count()  # skew actually present
-    salted = salted_repartition(routed, buckets=16, parallelism=8)
-    sizes = [
-        r["n"] for r in
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    ]
-    mean = sum(sizes) / len(sizes)
-    assert max(sizes) <= 3 * mean, f"partition sizes: {sorted(sizes, reverse=True)[:5]}"
-
-
 def test_pipeline_deterministic(spark, pages_small):
     """Same input -> identical record multiset across independent runs."""
     from logport_spark.plans.pipeline import parsed_routed

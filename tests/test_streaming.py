@@ -172,26 +172,25 @@ def test_stream_dedup_drops_redeliveries(spark, tmp_path_factory):
 
 
 def test_sink_layout_prunes_partitions(spark, tmp_path_factory):
-    """The fan-out write lays one directory per sink; a per-sink read must
-    plan partition pruning (PartitionFilters), not a full scan."""
+    """The fan-out write lays one directory per (bucket, sink); a per-sink
+    read must plan partition pruning (PartitionFilters), not a full scan."""
     import pandas as pd
 
-    from logport_spark.operators.route import write_routed
-    from logport_spark.plans.pipeline import parsed_routed
+    from logport_spark.plans.ledger import read_routed, run_with_ledger
 
     out = str(tmp_path_factory.mktemp("sinks"))
     pdf = pd.DataFrame(datagen.gen_docs(range(100)))
     pages = spark.createDataFrame(pdf, schema=datagen.PAGES_DDL)
-    write_routed(parsed_routed(spark, pages), out)
-    back = spark.read.parquet(out)
+    run_with_ledger(spark, pages, out, run_id="layout", n_buckets=8)
+    back = read_routed(spark, out)
     one = back.filter(F.col("sink") == back.select("sink").first()["sink"])
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(sink" in plan
 
 
 def test_compact_sinks_preserves_rows_and_bounds_files(spark, tmp_path_factory):
-    """OPTIMIZE-style compaction: the salted fan-out write spreads each
-    sink over many small files; compact_sinks rewrites each over-split
+    """OPTIMIZE-style compaction: a sink= tree written by 16 tasks holds
+    many small files per sink; compact_sinks rewrites each over-split
     sink partition to its byte-targeted file count via dynamic overwrite
     — row count AND content identical (value hash over every envelope),
     file count collapsed, untouched partitions left alone."""
@@ -200,13 +199,14 @@ def test_compact_sinks_preserves_rows_and_bounds_files(spark, tmp_path_factory):
 
     import pandas as pd
 
-    from logport_spark.operators.route import compact_sinks, write_routed
+    from logport_spark.operators.route import compact_sinks
     from logport_spark.plans.pipeline import parsed_routed
 
     out = str(tmp_path_factory.mktemp("sinks"))
     pdf = pd.DataFrame(datagen.gen_docs(range(120)))
     pages = spark.createDataFrame(pdf, schema=datagen.PAGES_DDL)
-    write_routed(parsed_routed(spark, pages), out, salt_buckets=16)
+    (parsed_routed(spark, pages).select("url", "line_no", "record", "sink")
+     .repartition(16).write.mode("overwrite").partitionBy("sink").parquet(out))
 
     def state():
         rows = sorted(map(str, spark.read.parquet(out)
