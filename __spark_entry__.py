@@ -52,13 +52,9 @@ def _lp_parse_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lp_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logport_spark.operators.enrich import enrich, load_lookups, with_domain
-    from logport_spark.operators.route import resolve_route
+    from logport_spark.plans.pipeline import route
 
-    pages = _pages(spark, sf_dir).select("url", "lang")
-    lookups = load_lookups(spark)
-    df = enrich(with_domain(pages), lookups)
-    df = resolve_route(df, lookups["routes"])
+    df = route(spark, _pages(spark, sf_dir).select("url", "lang"))
     return df.select("url", "domain", "tld", "category", "lang", "locale", "sink")
 
 
@@ -101,20 +97,15 @@ def _lp_resume_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lp_replay_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 replay: dead-letter lines union live lines through the same
     parse→enrich→route→envelope path."""
-    from logport_spark.operators import enrich as E
-    from logport_spark.operators import parse as P
-    from logport_spark.operators import route as R
+    from logport_spark.operators.parse import explode_lines
     from logport_spark.plans.ledger import replay_quarantine
+    from logport_spark.plans.pipeline import routed_from_lines
 
     sf = datagen.sf_of_dir(sf_dir)
     datagen.ensure_fixtures(sf)
     dl = spark.read.parquet(f"{DATA}/deadletter")
-    live = P.explode_lines(_pages(spark, sf_dir))
-    lines = replay_quarantine(spark, dl, live)
-    lookups = E.load_lookups(spark)
-    df = R.resolve_route(E.enrich(E.with_domain(lines), lookups), lookups["routes"])
-    df = P.with_envelope(df, F.col("route_hostname"), F.col("url"),
-                         F.col("route_prd"), F.col("route_log_type"))
+    live = explode_lines(_pages(spark, sf_dir))
+    df = routed_from_lines(spark, replay_quarantine(spark, dl, live))
     return df.select("url", "line_no", "record", "parse_fail", "sink")
 
 

@@ -379,6 +379,8 @@ def cmd_bench(args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .plans.ledger import DEFAULT_BUCKETS
+
     p = argparse.ArgumentParser(prog="logport_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -390,7 +392,7 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--pages", required=True)
         sp.add_argument("--out", required=True)
         sp.add_argument("--run-id", default=None)
-        sp.add_argument("--buckets", type=int, default=64)
+        sp.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS)
         common(sp)
         sp.set_defaults(fn=cmd_run)
     sp = sub.add_parser("status")

@@ -146,7 +146,6 @@ class Settings:
         default_factory=lambda: {
             "default.sink": "sink_default",
             "default.brokers": "kafka://localhost:9092",
-            "salt.buckets": "16",
             "ledger.buckets": "64",
         }
     )

@@ -15,9 +15,9 @@ Reference semantics re-expressed (NOT ported):
   is rewritten on resume with identical content (deterministic pipeline), so
   the final table equals a fresh run's — the pytest gate.
 - S3 dead-letter replay (src/InotifyWatcher.cc:208-247): parse failures land
-  in a quarantine table; `replay` unions them back through the same parse
-  path at the start of the next run (the reference's rename-to-temp
-  idempotence trick is subsumed by the sink-overwrite semantics).
+  in a quarantine table; `replay_quarantine` unions them with live lines
+  for callers to pass to `pipeline.routed_from_lines` (the reference's
+  rename-to-temp trick is subsumed by the sink-overwrite semantics).
 
 Scale notes: the ledger is O(n_buckets) rows per run — thousands, not
 billions; it is read once per run, and the pending buckets become a literal
@@ -225,7 +225,7 @@ def run_with_ledger(
     todo = with_bucket(pages, n_buckets).filter(F.col("bucket").isin(universe))
     # persisted watch/unwatch mutations under THIS out_dir (store.py) bind
     # to its runs — the logport watches-table contract
-    routed = parsed_routed(spark, todo.drop("bucket"), config_dir=out_dir)
+    routed = parsed_routed(spark, todo, config_dir=out_dir)
     routed = with_bucket(routed, n_buckets)
     _write_sinks(routed, out_dir)
     # Ledger rows: per-bucket aggregates computed from the JUST-WRITTEN sink

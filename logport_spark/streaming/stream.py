@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import parsed_routed
+from ..plans.pipeline import parsed_routed, route
 
 SINK_COLS = ["url", "line_no", "record", "record_bytes", "parse_fail", "sink"]
 
@@ -153,16 +153,12 @@ def windowed_sink_counts(
 
     The event-time twin of sink_metrics: late pages beyond the watermark are
     dropped from state; windows emit as (window_start, window_end, sink, n)."""
-    from ..operators import enrich as E
-    from ..operators import parse as P
-    from ..operators import route as R
+    from ..operators.parse import explode_lines
 
-    src = pages_stream(spark, pages_dir, max_files)
-    lines = P.explode_lines(src)
-    lookups = E.load_lookups(spark)
-    routed = R.resolve_route(E.enrich(E.with_domain(lines), lookups), lookups["routes"])
+    routed = route(spark, pages_stream(spark, pages_dir, max_files))
+    lines = explode_lines(routed, keep_cols=("warc_ts", "sink"))
     agg = (
-        routed.withWatermark("warc_ts", watermark)
+        lines.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "sink")
         .agg(F.count(F.lit(1)).alias("rows_routed"))
         .select(

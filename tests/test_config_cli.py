@@ -20,11 +20,11 @@ def test_scheme_consistency():
 def test_settings_precedence(monkeypatch):
     """env > setting > default (src/LogPort.cc:961-1048)."""
     s = Settings()
-    assert s.get("salt.buckets", env={}) == "16"          # default
-    s.values["salt.buckets"] = "32"
-    assert s.get("salt.buckets", env={}) == "32"          # setting beats default
-    env = {"LOGPORT_SPARK_SALT_BUCKETS": "64"}
-    assert s.get("salt.buckets", env=env) == "64"         # env beats setting
+    assert s.get("ledger.buckets", env={}) == "64"        # default
+    s.values["ledger.buckets"] = "32"
+    assert s.get("ledger.buckets", env={}) == "32"        # setting beats default
+    env = {"LOGPORT_SPARK_LEDGER_BUCKETS": "128"}
+    assert s.get("ledger.buckets", env=env) == "128"      # env beats setting
     assert s.get("nonexistent.key", env={}) is None
 
 
@@ -36,9 +36,9 @@ def test_cli_routes(capsys):
 
 
 def test_cli_settings(capsys):
-    assert cli.main(["settings", "--set", "salt.buckets=99"]) == 0
+    assert cli.main(["settings", "--set", "ledger.buckets=99"]) == 0
     out = capsys.readouterr().out
-    assert "salt.buckets=99" in out
+    assert "ledger.buckets=99" in out
     assert "default.sink=sink_default" in out
 
 
@@ -88,21 +88,21 @@ def test_cli_watch_unwatch_set_unset_roundtrip(tmp_path, capsys):
         ConfigStore(out).unwatch("__default__")
 
     # settings: set persists, env still wins, unset falls back to default
-    assert cli.main(["set", "--out", out, "salt.buckets", "42"]) == 0
+    assert cli.main(["set", "--out", out, "ledger.buckets", "42"]) == 0
     capsys.readouterr()
     assert cli.main(["settings", "--out", out]) == 0
-    assert "salt.buckets=42" in capsys.readouterr().out
-    os.environ["LOGPORT_SPARK_SALT_BUCKETS"] = "77"
+    assert "ledger.buckets=42" in capsys.readouterr().out
+    os.environ["LOGPORT_SPARK_LEDGER_BUCKETS"] = "77"
     try:
         assert cli.main(["settings", "--out", out]) == 0
-        assert "salt.buckets=77" in capsys.readouterr().out
+        assert "ledger.buckets=77" in capsys.readouterr().out
     finally:
-        del os.environ["LOGPORT_SPARK_SALT_BUCKETS"]
-    assert cli.main(["unset", "--out", out, "salt.buckets"]) == 0
+        del os.environ["LOGPORT_SPARK_LEDGER_BUCKETS"]
+    assert cli.main(["unset", "--out", out, "ledger.buckets"]) == 0
     capsys.readouterr()
     assert cli.main(["settings", "--out", out]) == 0
-    assert "salt.buckets=16" in capsys.readouterr().out
-    assert cli.main(["unset", "--out", out, "salt.buckets"]) == 1
+    assert "ledger.buckets=64" in capsys.readouterr().out
+    assert cli.main(["unset", "--out", out, "ledger.buckets"]) == 1
 
 
 def test_persisted_routes_bind_to_runs(spark, pages_small, tmp_path,
@@ -166,7 +166,7 @@ def test_cli_run_and_status(spark, pages_small, tmp_path, capsys, monkeypatch):
     assert rep["ack"]["msgs"] == run_out["rows_routed"]
     # compact: the ledger layout writes ONE file per (bucket, sink) leaf
     # by construction, so a fresh run is already compact — the verb must
-    # be a safe no-op here (the fragmented salted-run layout is exercised
+    # be a safe no-op here (a fragmented over-split layout is exercised
     # in test_streaming::test_compact_sinks_preserves_rows_and_bounds_files)
     assert cli.main(["compact", "--out", out_dir, "--target-mb", "1024"]) == 0
     comp = json.loads(capsys.readouterr().out)

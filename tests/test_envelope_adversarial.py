@@ -78,9 +78,11 @@ def hostile_pages(spark):
     return spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_DDL)
 
 
-def test_hostile_corpus_byte_identity(spark, hostile_pages):
+def test_hostile_corpus_byte_identity(spark, hostile_pages, pages_small):
+    from logport_spark.operators.parse import explode_lines
+    from logport_spark.operators.route import ROUTED_COLS
     from logport_spark.oracle import run_oracle
-    from logport_spark.plans.pipeline import parsed_routed
+    from logport_spark.plans.pipeline import parsed_routed, routed_from_lines
 
     pages_local = [r.asDict() for r in hostile_pages.collect()]
     want = {(r["url"], r["line_no"]): r["record"]
@@ -91,6 +93,14 @@ def test_hostile_corpus_byte_identity(spark, hostile_pages):
     assert len(got) == len(want)
     bad = [(k, got[k], want[k]) for k in want if got.get(k) != want[k]]
     assert not bad, f"{len(bad)} mismatches; first: {bad[0]}"
+
+    # cross-grain identity: routing pages then splitting them ships the same
+    # rows as splitting first and routing every line
+    for pages in (hostile_pages, pages_small):
+        by_page = parsed_routed(spark, pages).select(*ROUTED_COLS)
+        by_line = routed_from_lines(spark, explode_lines(pages)).select(*ROUTED_COLS)
+        assert by_page.exceptAll(by_line).count() == 0
+        assert by_line.exceptAll(by_page).count() == 0
 
 
 def test_jvm_json_quote_equals_dumps(spark):

@@ -59,15 +59,42 @@ def test_enrich_uses_broadcast_joins(spark, pages_small):
     assert "SortMergeJoin" not in plan
 
 
+def _plan_nodes(node):
+    """Depth-first walk of a physical plan, through the AQE wrapper and its
+    query stages."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if name.endswith("QueryStage"):
+        yield from _plan_nodes(node.plan())
+        return
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
 def test_parse_path_has_no_shuffle(spark, pages_small):
-    """scan -> explode -> broadcast-enrich -> envelope is exchange-free
-    (the only Exchange at scale is the explicit salted repartition)."""
+    """scan -> broadcast enrich/route per page -> explode -> envelope is
+    exchange-free (the only Exchange at scale is the bucket repartition
+    before the ledger's fan-out write), and the three lookup joins run
+    below the line Generate, once per page."""
     from logport_spark.plans.pipeline import parsed_routed
 
-    plan = parsed_routed(spark, pages_small)._jdf.queryExecution().executedPlan().toString()
+    routed = parsed_routed(spark, pages_small)
+    routed.collect()  # AQE fixes the plan that runs only once the query has run
+    executed = routed._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
+    assert "isFinalPlan=true" in plan
     # BroadcastExchange is fine; a hash-partitioned shuffle exchange is not
     assert "Exchange hashpartitioning" not in plan
     assert "ShuffledHashJoin" not in plan and "SortMergeJoin" not in plan
+    names = [n.nodeName() for n in _plan_nodes(executed)]
+    assert names.count("BroadcastHashJoin") == 3
+    gen = next(n for n in _plan_nodes(executed) if n.nodeName() == "Generate")
+    below = [n.nodeName() for n in _plan_nodes(gen)]
+    assert below.count("BroadcastHashJoin") == 3
 
 
 def test_observer_lines_plan_is_codegen_only(spark):
