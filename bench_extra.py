@@ -3,11 +3,13 @@
 here — guide §1.4 noop-sink isolation plus the r6 bytes-moved ledger).
 
 For each selected query this harness times the noop-forced evaluation
-best-of-N AND records the actual bytes the query moved, from Spark's own
-stage metrics (UI REST API; the session here enables the UI, bench.py's
-does not): scan input bytes, shuffle write bytes, shuffle read bytes.
-That turns plan-shape claims ("the decision shuffles carry metadata, not
-text") into recorded evidence — VERDICT r5 "Next round" item #3.
+best-of-N AND records the bytes the query moved and the plan that ran, from
+Spark's own status stores (logport_spark/profile.py; no Spark UI): scan
+input bytes, shuffle write bytes, shuffle read bytes, the completed stage
+count and the final AQE plan. That turns plan-shape claims ("the decision
+shuffles carry metadata, not text") into recorded evidence — VERDICT r5
+"Next round" item #3. Running the same query list on two commits compares
+their executed plans as well as their bytes.
 
 Usage:
     python bench_extra.py                       # default query set, sf0.1
@@ -15,7 +17,10 @@ Usage:
     SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... # same env contract as bench.py
     BENCH_EXTRA_REPS=3                          # best-of-N (default 2)
 
-Writes BENCH/bytes_ledger.json and prints one JSON line per query.
+Writes BENCH/bytes_ledger.json and prints one JSON line per query (the
+ledger's keys plus the final `plan`). `sec` times building the query plus
+its noop write; bytes and stages come from the last timed repetition and
+count the jobs building ran too (schema reads, eager checkpoint rounds).
 """
 
 from __future__ import annotations
@@ -23,15 +28,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "2"))
-UI_PORT = int(os.environ.get("BENCH_EXTRA_UI_PORT", "4047"))
 
 DEFAULT_QUERIES = [
     # the line-grain family (r6 headline optimization target)
@@ -43,48 +45,12 @@ DEFAULT_QUERIES = [
     "lp_sink_metrics", "lp_envelope", "bm25_topk", "training_export",
 ]
 
-
-_UI_BASE = None  # set from sparkContext.uiWebUrl (NOT the requested port:
-#                  a port conflict silently rebinds the UI to port+1 and
-#                  a hardcoded URL would read some OTHER app's stages)
-
-
-def _rest(path: str):
-    with urllib.request.urlopen(
-            f"{_UI_BASE}/api/v1/{path}", timeout=10) as r:
-        return json.load(r)
-
-
-def _stage_totals() -> dict:
-    """Cumulative bytes over all completed stages of the app so far."""
-    apps = _rest("applications")
-    app_id = apps[0]["id"]
-    tot = {"input_bytes": 0, "shuffle_write_bytes": 0,
-           "shuffle_read_bytes": 0, "n_stages": 0}
-    for st in _rest(f"applications/{app_id}/stages?status=complete"):
-        tot["input_bytes"] += st.get("inputBytes", 0)
-        tot["shuffle_write_bytes"] += st.get("shuffleWriteBytes", 0)
-        tot["shuffle_read_bytes"] += st.get("shuffleReadBytes", 0)
-        tot["n_stages"] += 1
-    return tot
-
-
-def _settled_stage_totals() -> dict:
-    """_stage_totals once the async listener bus has drained: the status
-    store is fed asynchronously, so a snapshot taken right after .save()
-    returns can miss late stage-completion events. Poll until two
-    consecutive reads agree (bounded)."""
-    prev = _stage_totals()
-    for _ in range(25):
-        time.sleep(0.2)
-        cur = _stage_totals()
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
+BYTE_KEYS = ("input_bytes", "shuffle_write_bytes", "shuffle_read_bytes",
+             "n_stages")
 
 
 def main(argv: list[str]) -> None:
+    from logport_spark.profile import profile
     from logport_spark.session import get_spark
 
     import __spark_entry__ as em
@@ -95,18 +61,7 @@ def main(argv: list[str]) -> None:
     if missing:
         raise SystemExit(f"unknown queries: {missing}")
 
-    spark = get_spark("bench_extra", cpus=CPUS, extra_conf={
-        "spark.ui.enabled": "true",
-        "spark.ui.port": str(UI_PORT),
-        # the ledger diffs CUMULATIVE stage totals; default retention
-        # (1000 stages) would silently evict early stages mid-run and
-        # corrupt the deltas on long query lists / higher REPS
-        "spark.ui.retainedStages": "100000",
-        "spark.ui.retainedJobs": "100000",
-    })
-    sc = spark.sparkContext
-    global _UI_BASE
-    _UI_BASE = sc.uiWebUrl
+    spark = get_spark("bench_extra", cpus=CPUS)
 
     # untimed warm-up: Python worker pool + codegen JIT (bench.py rationale)
     qs[names[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -114,32 +69,16 @@ def main(argv: list[str]) -> None:
 
     ledger: dict[str, dict] = {}
     for name in names:
-        sc.setJobDescription(f"bench_extra: {name}")
-        best = float("inf")
+        runs = []
         for _ in range(REPS):
-            t0 = time.time()
-            qs[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite").save()
-            best = min(best, time.time() - t0)
+            runs.append(profile(spark, f"bench_extra: {name}",
+                                lambda: qs[name](spark, SF_DIR)))
             spark.catalog.clearCache()
-        # bytes for ONE evaluation: run once more between two SETTLED
-        # snapshots (listener bus is async — see _settled_stage_totals)
-        before = _settled_stage_totals()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        after = _settled_stage_totals()
-        spark.catalog.clearCache()
-        sc.setJobDescription(None)
-        rec = {
-            "sec": round(best, 3),
-            "input_bytes": after["input_bytes"] - before["input_bytes"],
-            "shuffle_write_bytes": (after["shuffle_write_bytes"]
-                                    - before["shuffle_write_bytes"]),
-            "shuffle_read_bytes": (after["shuffle_read_bytes"]
-                                   - before["shuffle_read_bytes"]),
-            "n_stages": after["n_stages"] - before["n_stages"],
-        }
+        rec = {"sec": min(r["wall_s"] for r in runs),
+               **{k: runs[-1][k] for k in BYTE_KEYS}}
         ledger[name] = rec
-        print(json.dumps({"query": name, **rec}), flush=True)
+        print(json.dumps({"query": name, **rec, "plan": runs[-1]["plan"]}),
+              flush=True)
 
     out = {"sf_dir": SF_DIR, "cpus": CPUS, "reps": REPS,
            "load_avg": round(os.getloadavg()[0], 2), "queries": ledger}

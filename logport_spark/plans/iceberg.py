@@ -26,13 +26,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .ledger import sink_rows
+from .ledger import SINK_TABLE_COLS, sink_rows
+
+# column types of the sink row layout; every column not named is a STRING
+_SINK_COL_TYPES = {"line_no": "INT", "warc_ts": "TIMESTAMP",
+                   "record_bytes": "BIGINT", "is_obj": "BOOLEAN",
+                   "parse_fail": "BOOLEAN", "bucket": "INT"}
 
 SINK_TABLE_DDL = (
     "CREATE TABLE IF NOT EXISTS {table} ("
-    " url STRING, line_no INT, record STRING, record_bytes BIGINT,"
-    " parse_fail BOOLEAN, bucket INT, sink STRING)"
-    " USING iceberg PARTITIONED BY (bucket, sink)"
+    + ", ".join(f"{c} {_SINK_COL_TYPES.get(c, 'STRING')}"
+                for c in SINK_TABLE_COLS)
+    + ") USING iceberg PARTITIONED BY (bucket, sink)"
 )
 
 

@@ -213,19 +213,25 @@ def test_wire_substream_rows_bounded_under_hot_domain(spark, pages_small):
 def test_iceberg_sink_gate_and_ddl_shape(spark, pages_small):
     """Iceberg sink (plans/iceberg.py): gated off in this container (no
     runtime on the classpath); the DDL pins the partition spec to the
-    parquet stand-in's directory layout and the write path raises with the
-    stand-in named."""
+    parquet stand-in's directory layout, declares exactly the columns and
+    types the write sends (ledger.sink_rows), and the write path raises
+    with the stand-in named."""
     import pytest
+    from pyspark.sql.types import DataType
 
     from logport_spark.plans.iceberg import (
         SINK_TABLE_DDL, iceberg_available, write_routed_iceberg)
-    from logport_spark.plans.ledger import with_bucket
+    from logport_spark.plans.ledger import sink_rows, with_bucket
     from logport_spark.plans.pipeline import parsed_routed
 
     assert not iceberg_available(spark)  # this container has no runtime
     ddl = SINK_TABLE_DDL.format(table="cat.db.sinks")
     assert "USING iceberg" in ddl and "PARTITIONED BY (bucket, sink)" in ddl
     routed = with_bucket(parsed_routed(spark, pages_small))
+    cols = ddl[ddl.index("(") + 1:ddl.index(") USING")]
+    declared = [(f.name, f.dataType) for f in DataType.fromDDL(cols).fields]
+    written = [(f.name, f.dataType) for f in sink_rows(routed).schema.fields]
+    assert declared == written
     with pytest.raises(NotImplementedError, match="ledger"):
         write_routed_iceberg(routed, "cat.db.sinks")
 

@@ -1,7 +1,10 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: annotated executedPlan snapshots for the queries
-whose physical shape the 100 TB design depends on. Run after any operator
-change: `python tools/dump_plans.py`."""
+"""Regenerate PLANS.md: annotated executed-plan records for the queries
+whose physical shape the 100 TB design depends on. Each query runs to a
+noop sink under logport_spark.profile, so every section shows the final
+AQE plan that ran (`isFinalPlan=true`) and its operators' row and byte
+counters, not the pre-execution plan. Run after any operator change:
+`python tools/dump_plans.py`."""
 
 from __future__ import annotations
 
@@ -15,13 +18,19 @@ SF = "/root/testdata/sf0.01"
 
 ANNOTATED = {
     "lp_envelope": (
-        "The parse hot path. Everything from the scan to the envelope concat "
-        "is ONE WholeStageCodegen span — no exchange. ArrowEvalPython appears "
-        "once, fed a NULL-masked line column (JSON candidates only). "
-        "ReadSchema excludes `html` (the widest column)."
+        "The parse hot path, with no shuffle exchange. Each page is enriched "
+        "and routed BEFORE the line split: the three lookup "
+        "BroadcastHashJoins (domain, lang, route) run on the page rows "
+        "(10,000 here), then Generate + Filter emit the lines (185,071), all "
+        "in ONE WholeStageCodegen span from the scan. ArrowEvalPython "
+        "appears once, fed a NULL-masked line column (JSON candidates only; "
+        "it still receives every line), and it ends that span: the envelope "
+        "concat is a second codegen span. ReadSchema excludes `html` (the "
+        "widest column)."
     ),
     "lp_sink_metrics": (
-        "Full DAG + per-sink aggregation: partial_ aggregate map-side, one "
+        "Full DAG + per-sink aggregation: pages are routed before the line "
+        "Generate (as in lp_envelope), partial_ aggregate map-side, one "
         "Exchange on `sink` (7 groups), final aggregate. The only wide step "
         "in the whole pipeline."
     ),
@@ -52,36 +61,43 @@ ANNOTATED = {
     "embedding_lsh_pairs": (
         "Embedding near-dup at scale: ONE ArrowEvalPython computes all 16 "
         "band keys per row (numpy matmul), posexplode, then a hash join on "
-        "(t, key) — the shuffle is keyed on band buckets, never an O(n^2) "
-        "cross product; only deduped candidates reach the exact-cosine "
+        "(t, key) — never an O(n^2) cross product; AQE broadcasts one band "
+        "table here (8,000 rows), so the only keyed shuffle is the (d1, d2) "
+        "candidate dedup; only deduped candidates reach the exact-cosine "
         "filter."
     ),
     "corpus_clean": (
-        "Curation composite: window dedup on md5(text) feeds BOTH branches "
-        "from an InMemoryTableScan (persisted once); the near-dup drop set "
-        "is pair-survivor-sized and enters a broadcast left-anti join."
+        "Curation composite: exact dedup on md5(text) is a min(struct) "
+        "aggregate keyed on text_md5 (partial SortAggregate map-side, not a "
+        "window), persisted once and read by BOTH branches from an "
+        "InMemoryTableScan; the near-dup drop set is pair-survivor-sized, "
+        "but the executed left-anti join is a SortMergeJoin shuffled on "
+        "doc_id, not a broadcast."
     ),
     "ann_ivf_topk": (
-        "IVF-flat: centroids are plan LITERALS, so corpus cell assignment "
-        "is a zero-shuffle narrow map (no exchange, no Python) over the "
-        "scan; probed cells broadcast into the candidate join and only "
-        "candidates reach the exact rerank."
+        "IVF-flat: centroids ride the Arrow kernel's closure, so corpus cell "
+        "assignment is one narrow MapInPandas over the scan — Python, but no "
+        "keyed shuffle (the RoundRobin Exchange below it is the `_emb` "
+        "single-file ingest widen); probed cells broadcast into the "
+        "candidate join and only candidates reach the exact rerank."
     ),
     "dedup_clusters": (
-        "Connected components: the returned labels read from an "
-        "InMemoryTableScan — every propagation round materializes ONE label "
-        "table (persist + fixpoint count) so lineage never stacks rounds; "
-        "each round is two shuffles (edge join on id, pointer-jump join on "
-        "label), O(log diameter) rounds total. r6: the fixpoint count is a "
-        "filter over the materialized round (old label rides along) — the "
-        "per-round convergence self-join is gone — and round 1 skips the "
-        "identity pointer jump."
+        "Connected components: the returned labels are a Scan ExistingRDD of "
+        "the last round's localCheckpoint — the rounds run while the query "
+        "is built, each materializing ONE label table (checkpoint + fixpoint "
+        "count) so lineage never stacks rounds; each round is two shuffles "
+        "(edge join on id, pointer-jump join on label), O(log diameter) "
+        "rounds total. r6: the fixpoint count is a filter over the "
+        "materialized round (old label rides along) — the per-round "
+        "convergence self-join is gone — and round 1 skips the identity "
+        "pointer jump."
     ),
     "text_repetition": (
         "Gopher repetition signals: the whole operator is a single Project "
         "over the scan — sorted-shingle folds are per-row JVM aggregate() "
-        "lambdas, so there is NO exchange and NO Python in the plan; it "
-        "scales like a map."
+        "lambdas, so there is NO keyed exchange and NO Python in the plan; "
+        "it scales like a map. The one RoundRobin Exchange is the `_docs` "
+        "single-file ingest widen, absent on a many-file table."
     ),
     "contamination_scan": (
         "Eval-contamination semi-join: train collapses to DISTINCT 64-bit "
@@ -92,58 +108,70 @@ ANNOTATED = {
     "lm_bits": (
         "Unigram LM scoring: explode → (doc_id, tok) partial agg (r4: the "
         "join input is per-doc DISTINCT tokens, not occurrences — 'the' "
-        "crosses the token shuffle once per doc) → partial-agg vocabulary "
-        "→ the corpus-total via a BroadcastNestedLoopJoin of ONE row → "
+        "crosses the token shuffle once per doc) → partial-agg vocabulary → "
+        "the corpus-total via a BroadcastNestedLoopJoin of ONE row → "
         "token-keyed join back → count-weighted per-doc mean. Vocabulary "
-        "stays distributed; the only broadcast is the single-row total."
+        "stays distributed, but at this scale AQE also broadcasts the "
+        "per-doc token side of the token-keyed join (BuildLeft), so the "
+        "single-row total is not the only broadcast."
     ),
     "line_dedup_corpus": (
-        "C4 corpus line dedup (r6 shape): posexplode line METADATA "
-        "(128-bit fingerprint + in-doc-first flag, no text) → "
-        "min(struct) agg on (h1, h2) (map-side combine — no window, so "
-        "a boilerplate line repeated corpus-wide combines before the "
-        "exchange) → per-doc keep-list agg → doc-keyed join back to the "
-        "un-exploded docs rebuilds text (BroadcastHashJoin at this "
-        "scale). Corpus text appears in NO exchange."
+        "C4 corpus line dedup (r6 shape): posexplode line METADATA (128-bit "
+        "fingerprint + in-doc-first flag, no text) → min(struct) agg on (h1, "
+        "h2) (map-side combine — no window, so a boilerplate line repeated "
+        "corpus-wide combines before the exchange) → per-doc keep-list agg → "
+        "doc-keyed join back to the un-exploded docs rebuilds text. At "
+        "runtime AQE broadcasts the DOCS side of that join (BuildRight: "
+        "10,000 split-text rows, 16.5 MiB), not the keep-list, so corpus "
+        "text crosses one BroadcastExchange; neither shuffle exchange "
+        "carries text."
     ),
     "strip_boilerplate": (
         "Boilerplate removal (r6 shape): the per-doc distinct set is the "
         "narrow in-doc-first flag (zero shuffle), line doc-freq is ONE "
         "partial agg over bare 16-byte fingerprints, the ≥min_docs set "
         "(tiny) BROADCAST anti-joins the line METADATA stream, and the "
-        "per-doc keep-list joins back to the un-exploded docs for the "
-        "text rebuild. No text in any exchange."
+        "per-doc keep-list joins back to the un-exploded docs for the text "
+        "rebuild, where AQE broadcasts the docs text side (BuildRight, "
+        "10,000 rows): text crosses that one BroadcastExchange and no "
+        "shuffle exchange."
     ),
     "domain_boilerplate": (
-        "Per-domain site chrome (r6 shape): per-doc distinct via the "
-        "narrow in-doc-first flag → (domain, fingerprint) doc-freq "
-        "partial agg → the ≥min_docs set anti-joins the line METADATA "
-        "stream on (domain, h1, h2) — SHUFFLED, not broadcast, because "
-        "at web scale the set grows with domain count (millions of hosts "
-        "× chrome lines); AQE demotes it to broadcast when small. "
-        "Skew-safe: a hot domain's rows split across its distinct lines. "
-        "Per-doc keep-list + doc-keyed join rebuild, no text in any "
-        "exchange — the whole line family's r6 shape."
+        "Per-domain site chrome (r6 shape): per-doc distinct via the narrow "
+        "in-doc-first flag → (domain, fingerprint) doc-freq partial agg → "
+        "the ≥min_docs set anti-joins the line METADATA stream on (domain, "
+        "h1, h2) — SHUFFLED, not broadcast, because at web scale the set "
+        "grows with domain count (millions of hosts × chrome lines); AQE "
+        "demotes it to broadcast when small. Skew-safe: a hot domain's rows "
+        "split across its distinct lines. Per-doc keep-list + doc-keyed join "
+        "rebuild — the whole line family's r6 shape, with its runtime catch: "
+        "AQE broadcasts the docs text side of the rebuild (BuildRight, "
+        "10,000 rows), so text crosses one BroadcastExchange; no shuffle "
+        "exchange carries text."
     ),
     "semantic_dedup_pairs": (
-        "SemDeDup: plan-literal centroid scoring (narrow map, no "
-        "exchange) -> cell self-join on bare (cell, id) -> vectors "
-        "re-joined by id for the exact-cosine verify — the "
-        "embedding_lsh_pairs tail with cells instead of bands."
+        "SemDeDup: centroid scoring in one narrow MapInPandas (centroids "
+        "ride the Arrow kernel's closure; the RoundRobin Exchange below it "
+        "is the `_emb` single-file ingest widen) -> cell self-join on bare "
+        "(cell, id) -> vectors re-joined by id for the exact-cosine verify — "
+        "the embedding_lsh_pairs tail with cells instead of bands."
     ),
     "web_curation": (
-        "End-to-end pages curation (r6 fused line shape): url keep-max "
-        "agg -> left-semi on url -> fingerprint-keyed fused df+keep-first "
-        "agg over in-doc-first line metadata -> per-doc keep-list -> "
-        "doc-keyed rebuild join -> n_kept filter. Every wide step is an "
-        "aggregating exchange with map-side combine over metadata; no "
-        "window over a content key and no text in any exchange."
+        "End-to-end pages curation (r6 fused line shape): url keep-max agg "
+        "-> left-semi on url -> fingerprint-keyed fused df+keep-first agg "
+        "over in-doc-first line metadata -> per-doc keep-list -> doc-keyed "
+        "rebuild join -> n_kept filter. Every shuffle is an aggregating "
+        "exchange with map-side combine over metadata and no window has a "
+        "content key, but AQE broadcasts the docs text side of the rebuild "
+        "join (BuildRight, 10,000 rows), so text crosses one "
+        "BroadcastExchange."
     ),
     "pack_sequences": (
-        "Sequence packing: hash shard (pure row function) → ONE exchange "
-        "on shard → per-shard Window running sum (n_shards independent "
-        "bounded sorts, no global order) → first-fit pack_id as a "
-        "codegen'd projection."
+        "Sequence packing: hash shard (pure row function) → ONE exchange on "
+        "shard (after the `_docs` single-file ingest widen, a RoundRobin "
+        "Exchange absent on a many-file table) → per-shard Window running "
+        "sum (n_shards independent bounded sorts, no global order) → "
+        "first-fit pack_id as a codegen'd projection."
     ),
     "html_extract": (
         "HTML→text extraction: ZERO exchanges — cast-reinterpret + "
@@ -158,8 +186,9 @@ ANNOTATED = {
         "freq = hash-keyed partial+final agg; ≥2 set semi-joins back "
         "(broadcast at this SF, SMJ at scale); duplicated starts collapse "
         "per doc (collect_list bounded by doc length); rebuild is a "
-        "codegen'd filter/exists over the token array. Text never crosses "
-        "an exchange."
+        "codegen'd filter/exists over the token array. Text crosses only the "
+        "`_docs` single-file ingest widen (RoundRobin, absent on a many-file "
+        "table); no keyed exchange carries it."
     ),
     "corpus_shuffle": (
         "Deterministic corpus shuffle: md5/shard/sort_key are pure row "
@@ -180,8 +209,9 @@ ANNOTATED = {
         "Identical exchange subtrees dedupe via ReuseExchange at runtime."
     ),
     "domain_mix": (
-        "Temperature mix: ONE tiny partial+final count on the domain key, "
-        "a 1-row min() broadcast-nested-loop onto the domain table, and a "
+        "Temperature mix: a tiny partial+final count on the domain key — "
+        "executed twice, from two scans: once for the domain table and once "
+        "for its 1-row min(), which broadcast-nested-loops onto it — and a "
         "BroadcastHashJoin feeding the md5-bucket Filter — the page stream "
         "itself never exchanges; at 100 TB the only shuffled bytes are "
         "(domain, count) pairs."
@@ -193,11 +223,13 @@ ANNOTATED = {
         "singleton tail is combined map-side and never written."
     ),
     "lm_bits2": (
-        "Bigram stupid backoff: transitions zip two array slices in "
-        "codegen; (doc_id, w1, w2) pre-aggregation makes every downstream "
-        "join input per-doc distinct, so the three token-keyed hash joins "
-        "(bigram counts, c1, c2) see Zipf hot keys once per doc. The "
-        "bigram count table derives FROM the pre-agg via ReuseExchange."
+        "Bigram stupid backoff: transitions zip two array slices in codegen; "
+        "(doc_id, w1, w2) pre-aggregation makes every downstream join input "
+        "per-doc distinct, so the three token-keyed hash joins (bigram "
+        "counts, c1, c2) see Zipf hot keys once per doc. The bigram count "
+        "table does NOT derive from the pre-agg: it re-runs the (doc_id, w1, "
+        "w2) aggregate, and runtime ReuseExchange shares only the `_docs` "
+        "single-file ingest widen below it."
     ),
     "bpe_pairs": (
         "BPE merge induction: the token stream collapses to the distinct-"
@@ -209,38 +241,50 @@ ANNOTATED = {
         "Keep-longest retention over near-dup clusters: the pair-mining DAG "
         "(minhash bands + label propagation) feeds ONE exchange on "
         "cluster_id shared by the size count and the rank window; the sort "
-        "key (len) is computed before the shuffle so text never moves."
+        "key (len) is computed before the shuffle, so text crosses no keyed "
+        "exchange (only the `_docs` single-file ingest widen)."
     ),
     "bm25_topk": (
         "BM25 probe retrieval: the exploded token stream hits the broadcast "
         "query-term semi-join BEFORE the (doc_id, tok) count — the only "
-        "corpus-sized shuffle carries query-term postings; idf/stats/"
-        "query-weights are broadcast (no SortMergeJoin in the plan); top-k "
-        "is TWO-PHASE — per-(query, doc-hash-salt) partial top-k, then a "
-        "final rank over <= 64k survivors — so no single task ever sorts "
-        "a query's full candidate set (the 5M ladder measured that cliff)."
+        "corpus-sized keyed shuffle carries query-term postings (the "
+        "RoundRobin Exchanges over the scans are the `_docs` single-file "
+        "ingest widen); idf/stats/query-weights are broadcast (no "
+        "SortMergeJoin in the plan); top-k is TWO-PHASE — per-(query, "
+        "doc-hash-salt) partial top-k, then a final rank over <= 64k "
+        "survivors — so no single task ever sorts a query's full candidate "
+        "set (the 5M ladder measured that cliff)."
     ),
     "domain_kl": (
         "Token-distribution drift: (domain, tok) partial+final count, the "
-        "corpus distribution summed FROM those partials (the corpus is "
-        "read once), 1-row total via BroadcastNestedLoopJoin, final "
-        "domain-keyed aggregate. All linear, no cartesian."
+        "corpus distribution summed FROM those partials — yet the executed "
+        "plan reads the corpus twice: the branch joined on domain carries an "
+        "IsNotNull(source) filter, so the corpus-count branch does not reuse "
+        "its (domain, tok) exchange, 1-row total via "
+        "BroadcastNestedLoopJoin, final domain-keyed aggregate. All linear, "
+        "no cartesian."
     ),
     "normalize_docs": (
         "Unicode canonicalization: ONE ArrowEvalPython fed a NULL-masked "
-        "column (non-ASCII rows only cross into Python); lower/whitespace/"
-        "trim stay in the codegen span; zero exchanges."
+        "column (non-ASCII rows only cross into Python); "
+        "lower/whitespace/trim stay in the codegen span; no keyed exchange "
+        "(the one RoundRobin Exchange is the `_docs` single-file ingest "
+        "widen, absent on a many-file table)."
     ),
     "chunk_docs": (
         "Window-stride chunking: token array materialized once per row, "
-        "sequence() starts, Generate posexplode as the only row-count "
-        "change — a pure map stage, zero exchanges, zero Python."
+        "sequence() starts, Generate posexplode as the only row-count change "
+        "— a pure map stage, zero Python, no keyed exchange (the one "
+        "RoundRobin Exchange is the `_docs` single-file ingest widen, absent "
+        "on a many-file table)."
     ),
     "domain_terms": (
-        "Log-odds distinctive vocabulary: domain_kl's skeleton — one "
-        "(domain, tok) shuffle, corpus counts from the partials, 1-row "
-        "total broadcast — plus a rank window whose partitions are "
-        "per-domain vocabularies (Zipf-bounded, not corpus-sized)."
+        "Log-odds distinctive vocabulary: domain_kl's skeleton, executed "
+        "quirk included — the corpus is read and shuffled on (domain, tok) "
+        "twice (the corpus-count branch does not reuse the other's "
+        "exchange), corpus counts from those partials, 1-row total broadcast "
+        "— plus a rank window whose partitions are per-domain vocabularies "
+        "(Zipf-bounded, not corpus-sized)."
     ),
     "budget_select": (
         "Token-budget selection: prefix-of-global-sort semantics with ONE "
@@ -267,9 +311,11 @@ ANNOTATED = {
     "export_manifest": (
         "Export manifest: shard/digest/token-count are codegen row "
         "functions; ONE partial+final aggregate on shard — map-side combine "
-        "reduces every partition to <= n_shards rows before the only (tiny) "
-        "shuffle. The checksum is a commutative decimal(38,0) sum, so no "
-        "ordering constraint exists anywhere in the plan."
+        "reduces every partition to <= n_shards rows before the only keyed "
+        "(tiny) shuffle; the RoundRobin Exchange over the scan is the "
+        "`_docs` single-file ingest widen. The checksum is a commutative "
+        "decimal(38,0) sum, so no ordering constraint exists anywhere in the "
+        "plan."
     ),
     "training_export": (
         "The export final mile as one DAG: unigram scoring's token-keyed "
@@ -364,11 +410,12 @@ ANNOTATED = {
         "projection arithmetic after the window."
     ),
     "epoch_upsample": (
-        "Fractional-epoch mixture is a narrow map end-to-end: scan → "
-        "filter (n>=1) → sequence()/explode — zero Exchange, zero "
-        "Python; the per-stratum (base, threshold) CASE literals fold "
-        "into the codegen span. Output volume is the recipe's Σw·n_docs, "
-        "produced from ONE scan regardless of the max epoch count."
+        "Fractional-epoch mixture is a narrow map end-to-end: scan → filter "
+        "(n>=1) → sequence()/explode — zero Python, no keyed Exchange (the "
+        "one RoundRobin Exchange is the `_docs` single-file ingest widen); "
+        "the per-stratum (base, threshold) CASE literals fold into the "
+        "codegen span. Output volume is the recipe's Σw·n_docs, produced "
+        "from ONE scan regardless of the max epoch count."
     ),
     "inverted_index": (
         "Index build: posexplode in the scan span, then the two "
@@ -394,11 +441,12 @@ ANNOTATED = {
         "archive sink."
     ),
     "gopher_signals": (
-        "All six remaining Table-A1 rules evaluate in ONE codegen "
-        "Project over the scan: the token/line arrays materialize as "
-        "shared columns (folds have no CSE across expressions), the "
-        "rest is filter/aggregate arithmetic on them — zero Exchange, "
-        "zero Python."
+        "All six remaining Table-A1 rules evaluate in ONE codegen Project "
+        "over the scan: the token/line arrays materialize as shared columns "
+        "(folds have no CSE across expressions), the rest is "
+        "filter/aggregate arithmetic on them — zero Python and no keyed "
+        "Exchange (the one RoundRobin Exchange is the `_docs` single-file "
+        "ingest widen, absent on a many-file table)."
     ),
     "filter_funnel": (
         "The attrition report reuses corpus_clean_v2's narrow signal "
@@ -419,29 +467,31 @@ ANNOTATED = {
     ),
     "robots_filter": (
         "The verdict join keys everything on host: rules synthesize and "
-        "parse per DISTINCT host (partial-agg distinct, window over "
-        "~10-row host partitions), the match join fans out O(rules/host) "
-        "per url with the startswith residual evaluated in the join, and "
-        "precedence is a partial-aggregated max of length*2+allow — no "
-        "window over urls, no per-url sort. AQE broadcasts the rule side "
-        "when |hosts| is small; at web scale both sides shuffle on host "
-        "and a hot host skews no worse than the url table itself."
+        "parse per DISTINCT host (partial-agg distinct, window over ~10-row "
+        "host partitions), the match join fans out O(rules/host) per url "
+        "with the startswith residual evaluated in the join, and precedence "
+        "is a partial-aggregated max of length*2+allow — no window over "
+        "urls, no per-url sort. AQE broadcasts one side when it is small — "
+        "here the URL side (BuildLeft: url, host, path), not the rule side; "
+        "at web scale both sides shuffle on host and a hot host skews no "
+        "worse than the url table itself."
     ),
     "weighted_sample": (
         "A-ES weighted sampling: one narrow md5+ln codegen map, then "
-        "TakeOrderedAndProject — every partition keeps its local top-k, "
-        "the driver merges |partitions|*k rows. No Exchange of the data, "
-        "no global sort; the corpus never moves for the sample."
+        "TakeOrderedAndProject — every partition keeps its local top-k, the "
+        "driver merges |partitions|*k rows. No keyed exchange, no global "
+        "sort; the corpus moves only through the `_docs` single-file ingest "
+        "widen (RoundRobin, absent on a many-file table)."
     ),
     "lang_segments": (
         "Token explode through ONE codegen CASE over the disjoint marker "
-        "sets, then partial-aggregated counts; the dominant-language "
-        "argmax is max(struct(cnt, -lang_idx)) — no window. Deliberately "
-        "NOT per-line HOF filters: five interpreted size(filter(...)) "
-        "columns measured bimodal 2-32s at 500k docs on the identical "
-        "plan (BENCH/BASELINE.md session-9 note); this shape holds a "
-        "stable steady state. Exchanges carry line-count-bounded rows — "
-        "text never crosses a shuffle."
+        "sets, then partial-aggregated counts; the dominant-language argmax "
+        "is max(struct(cnt, -lang_idx)) — no window. Deliberately NOT "
+        "per-line HOF filters: five interpreted size(filter(...)) columns "
+        "measured bimodal 2-32s at 500k docs on the identical plan "
+        "(BENCH/BASELINE.md session-9 note); this shape holds a stable "
+        "steady state. Keyed exchanges carry line-count-bounded rows — text "
+        "crosses only the `_docs` single-file ingest widen."
     ),
     "ann_pq_topk": (
         "PQ-ADC: ONE ArrowEvalPython (the encode kernel) feeding a pure "
@@ -475,11 +525,13 @@ ANNOTATED = {
         "|host-graph|-sized."
     ),
     "crawl_plan": (
-        "The fetch-plan composite: the robots verdict join (host-keyed, "
-        "rule side tiny) feeds the politeness window — the schedule's "
-        "(domain, bucket) exchange is the only wide step over the "
-        "allowed-url stream, and the crawl-delay column rides the "
-        "verdict join instead of a second rules pass."
+        "The fetch-plan composite: the robots verdict join (host-keyed; at "
+        "this scale AQE broadcasts the URL side into the rule match) feeds "
+        "the politeness window. The schedule's (domain, bucket) exchange is "
+        "not the only wide step over the url stream: the stream is also "
+        "hash-shuffled on url for the verdict join, which AQE turned into a "
+        "broadcast only after that shuffle ran, and the crawl-delay column "
+        "rides the verdict join instead of a second rules pass."
     ),
     "recrawl_policy": (
         "Two snapshot scans collapse to (url, digest) inside their scan "
@@ -489,14 +541,15 @@ ANNOTATED = {
         "the aggregate output."
     ),
     "quality_lr_step": (
-        "One logistic-regression GD step (the returned training trace is "
-        "a LocalTableScan of K driver-collected rows — THIS is the "
-        "repeated plan): the feature pass is pure codegen inside the scan "
-        "span (ReadSchema: text, lang only), and the gradient+loss is ONE "
-        "partial+final aggregate with the current weights as literals — "
-        "one row crosses to the driver per step, nothing else shuffles. "
-        "In deployment the feature table is localCheckpoint'ed once, so "
-        "steps 2..K never rescan the corpus."
+        "One logistic-regression GD step (the returned training trace is a "
+        "LocalTableScan of K driver-collected rows — THIS is the repeated "
+        "plan): the feature pass is pure codegen inside the scan span "
+        "(ReadSchema: text, lang only), and the gradient+loss is ONE "
+        "partial+final aggregate with the current weights as literals — one "
+        "row crosses to the driver per step, and the only other exchange is "
+        "the `_docs` single-file ingest widen. In deployment the feature "
+        "table is localCheckpoint'ed once, so steps 2..K never rescan the "
+        "corpus."
     ),
     "quality_pr_curve": (
         "The threshold sweep rides training's checkpointed feature "
@@ -508,11 +561,12 @@ ANNOTATED = {
     "embed_docs": (
         "The text->embedding tower feeding every ANN/SemDeDup consumer: "
         "explode -> ONE partial-aggregated (doc_id, dim_id) count -> a "
-        "doc-keyed norm agg -> a join that reuses the aggregate's "
-        "partitioning (no extra exchange). The hashing-trick stand-in is "
-        "pure codegen; the sentence-transformer swap point "
-        "(embed_docs_model) is a mapInPandas with the same exploded "
-        "contract, pytest-pinned equal on the fake path."
+        "doc-keyed norm agg with its own doc_id exchange -> a join to it "
+        "that AQE broadcasts (BuildRight) rather than one that reuses the "
+        "aggregate's partitioning. The hashing-trick stand-in is pure "
+        "codegen; the sentence-transformer swap point (embed_docs_model) is "
+        "a mapInPandas with the same exploded contract, pytest-pinned equal "
+        "on the fake path."
     ),
     "hybrid_rrf_topk": (
         "RRF fusion of the BM25 leg (pruned posting aggregation — the "
@@ -571,11 +625,12 @@ ANNOTATED = {
         "shuffles every distinct token. One IEEE division per estimate."
     ),
     "cms_heavy_hitters": (
-        "Count-Min: each token explodes to d=4 salted cells, "
-        "partial_sum caps a partition's contribution at d*w=4096 rows "
-        "before the one bounded exchange; the probe side broadcasts "
-        "into the counter table (BuildLeft on a <=4096-row relation), "
-        "so point estimation moves no corpus data at all."
+        "Count-Min: each token explodes to d=4 salted cells, partial_sum "
+        "caps a partition's contribution at d*w=4096 rows before the one "
+        "bounded exchange; the probe side broadcasts into the counter table "
+        "(BuildRight: the probe cells are the build side, the <=4096-row "
+        "counter table streams), so point estimation moves no corpus data at "
+        "all."
     ),
     "kmv_domain_sim": (
         "Bottom-k overlap: the only corpus-linear work is the distinct "
@@ -618,23 +673,56 @@ ANNOTATED = {
         "after the KL aggregate is constant-size; no Python anywhere."
     ),
     "text_near_pairs": (
-        "Exact all-pairs cosine, hybrid form (similarity.hybrid_near_"
-        "pairs): one ArrowEvalPython/mapInPandas span is the blocked GEMM "
-        "over the dense head (the quadratic part, in BLAS instead of a "
-        "~230M-row dim join — 169s -> ~2s at 5k docs), the sparse tail "
-        "joins on rare dims only, and the final project rounds and "
-        "filters. Output bit-equal to the unpruned AllPairs join "
-        "(Cauchy-Schwarz emission floor with 4dp rounding slack)."
+        "Exact all-pairs cosine, hybrid form (similarity.hybrid_near_pairs): "
+        "one ArrowEvalPython/mapInPandas span is the blocked GEMM over the "
+        "dense head (the quadratic part, in BLAS instead of a ~230M-row dim "
+        "join — 169s -> ~2s at 5k docs), the sparse tail joins on rare dims "
+        "only (here its aggregate came back empty, so AQE dropped the "
+        "left-outer SortMergeJoin and the whole tail branch at runtime), and "
+        "the final project rounds and filters. Output bit-equal to the "
+        "unpruned AllPairs join (Cauchy-Schwarz emission floor with 4dp "
+        "rounding slack)."
     ),
 }
 
 
+# counters that depend on the data, not on timing, so PLANS.md only
+# changes when a plan or its input does
+METRICS = ("number of output rows", "shuffle records written",
+           "shuffle bytes written", "data size", "size of files read",
+           "spill size", "number of sort fallback tasks")
+
+
+def _section(name: str, note: str, rec: dict) -> list[str]:
+    plan = re.sub(r"file:[^\s,\]]+", "file:...", rec["plan"])
+    # elide giant folded array literals (bloom bitmap, IVF centroids, PQ
+    # lookup tables): keep the first few elements so the plan stays readable
+    num = r"-?[\d.]+(?:E-?\d+)?"
+    plan = re.sub(
+        rf"\[((?:{num},){{8}})(?:{num},){{32,}}({num})\]",
+        lambda m: f"[{m.group(1)}... <literal elided> ...,{m.group(2)}]",
+        plan)
+    counters = []
+    for n in rec["nodes"]:
+        vals = [f"{k}={n['metrics'][k]:,.0f}" for k in METRICS
+                if n["metrics"].get(k)]
+        if vals:
+            counters.append(f"{n['name']}: " + ", ".join(vals))
+    return (["", f"## {name}", "", note, "", "```", plan.rstrip(), "```"]
+            + (["", "Operator counters:", "", "```", *counters, "```"]
+               if counters else []))
+
+
 def main() -> None:
+    from logport_spark.profile import profile
     from logport_spark.session import get_spark
 
     import __spark_entry__ as em
 
-    spark = get_spark("dump_plans", cpus=8)
+    # AQE wraps only plans with an exchange or subquery; forcing it on the
+    # rest changes none of their operators and marks every plan final
+    spark = get_spark("dump_plans", cpus=8, extra_conf={
+        "spark.sql.adaptive.forceApply": "true"})
     qs = {**em.queries(), **getattr(em, "baseline_queries", dict)()}
 
     def _bpe_round(spark_, sf):
@@ -652,22 +740,16 @@ def main() -> None:
 
     qs["quality_lr_step"] = _qlr_step
     out = [
-        "# PLANS — physical-plan evidence (sf0.01, regenerate via tools/dump_plans.py)",
+        "# PLANS — executed-plan evidence (sf0.01, regenerate via tools/dump_plans.py)",
         "",
-        "Each section: why the plan shape matters at 100 TB, then the",
-        "executedPlan (pre-AQE-finalization; AQE may further coalesce at runtime).",
+        "Each section: why the plan shape matters at 100 TB, then the final",
+        "AQE plan of the query's noop run (logport_spark/profile.py) and the",
+        "row and byte counters of its operators.",
     ]
     for name, note in ANNOTATED.items():
-        df = qs[name](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = re.sub(r"file:[^\s,\]]+", "file:...", plan)
-        # elide giant folded array literals (bloom bitmap, IVF centroids):
-        # keep the first few elements so the plan stays readable
-        plan = re.sub(
-            r"\[((?:-?\d+,){8})(?:-?\d+,){32,}(-?\d+)\]",
-            lambda m: f"[{m.group(1)}... <literal elided> ...,{m.group(2)}]",
-            plan)
-        out += ["", f"## {name}", "", note, "", "```", plan.rstrip(), "```"]
+        out += _section(name, note,
+                        profile(spark, name, lambda: qs[name](spark, SF)))
+        spark.catalog.clearCache()
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "PLANS.md")
     with open(path, "w") as f:
