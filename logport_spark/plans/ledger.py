@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -201,7 +202,7 @@ def run_with_ledger(
     (/root/reference/src/LogPort.cc watch table semantics)."""
     led = read_ledger(spark, out_dir).filter(F.col("status") == "committed")
     stored_fp: dict[int, int | None] = {}
-    for r in led.select("bucket", "input_fp", "commit_seq").collect():
+    for r in led.select("bucket", "input_fp").collect():
         stored_fp[r["bucket"]] = r["input_fp"]
     done = set(stored_fp)
     cur_fp = {r["bucket"]: r["input_fp"]
@@ -248,18 +249,20 @@ def run_with_ledger(
     else:
         stats_rows = {}
     seq = int(time.time() * 1000)
-    ledger_rows = spark.createDataFrame(
+    # Built from pandas (Arrow), the rows are a LocalRelation: neither the
+    # append below nor the caller's collect of the returned frame runs a
+    # Python-worker job, as a list-built (parallelized RDD) frame would.
+    ledger_rows = spark.createDataFrame(pd.DataFrame(
         [(run_id, b,
           stats_rows[b]["rows_routed"] if b in stats_rows else 0,
           stats_rows[b]["bytes_shipped"] if b in stats_rows else 0,
           stats_rows[b]["parse_failures"] if b in stats_rows else 0,
           "committed", seq, cur_fp.get(b, 0)) for b in universe],
+        columns=[c.split()[0] for c in LEDGER_SCHEMA.split(", ")]),
         LEDGER_SCHEMA,
     )
     ledger_rows.coalesce(1).write.mode("append").parquet(ledger_path(out_dir))
-    return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path(out_dir)).filter(
-        F.col("run_id") == run_id
-    )
+    return ledger_rows
 
 
 def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -45,9 +45,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
-from .dedup_stream import (line_dedup_core, process_batch_dedup,
-                           run_docs_stream, write_batch_partition)
+from .dedup_stream import line_dedup_core, process_batch_dedup
+from .stream import drain, pages_stream, write_batch_partition
 
 
 def gate_docs(docs: DataFrame,
@@ -83,7 +84,7 @@ def run_stream_curation(
     max_files: int = 1,
     n_state_buckets: int = 32,
     line_dedup: bool = False,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Continuous curation: drain available raw-doc files, gate each
     micro-batch, and feed survivors through the cross-batch near-dup
     protocol. clean/ accrues the gated, deduplicated corpus exactly-once
@@ -98,7 +99,8 @@ def run_stream_curation(
     gate evaluation or minting MinHash state), and the rebuilt docs flow
     on. The line-hash state lives under the same out_dir
     (state/lines, (batch_id, hb) partitions) and inherits the replay and
-    compaction contracts unchanged."""
+    compaction contracts unchanged. Returns the drain's per-batch progress
+    records."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # NO widen here: repartitioning the raw batch text before the
@@ -124,9 +126,9 @@ def run_stream_curation(
             # batch (all writes are batch_id dynamic overwrites — replay
             # rewrites every one, so intra-batch order is free)
             write_batch_partition(
-                fresh.select("h", "hb"), batch_id,
+                fresh.select("h", "hb").repartition("hb"), batch_id,
                 out_dir.rstrip("/") + "/state/lines", "hb")
             fresh.unpersist()
 
-    run_docs_stream(spark, docs_dir, checkpoint_dir, process,
-                    max_files=max_files)
+    return drain(pages_stream(spark, docs_dir, max_files)
+                 .writeStream.foreachBatch(process), checkpoint_dir)

@@ -67,12 +67,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from ..operators.dedup import (
     doc_shingles,
     lsh_verified_pairs,
     minhash_signatures_h64,
 )
+from .stream import drain, pages_stream, write_batch_partition
 
 NUM_HASHES = 64
 BANDS = 16
@@ -250,7 +252,8 @@ def process_batch_dedup(batch_df: DataFrame, batch_id: int, out_dir: str,
     write_batch_partition(final_sig, batch_id, sigs_dir)
     final_bands = band_rows(final_sig).withColumn(
         "kb", F.pmod(F.col("key"), F.lit(n_state_buckets)).cast("int"))
-    write_batch_partition(final_bands, batch_id, bands_dir, "kb")
+    write_batch_partition(final_bands.repartition("kb"), batch_id,
+                          bands_dir, "kb")
     sig.unpersist()
     sig_all.unpersist()
     sh.unpersist()
@@ -323,61 +326,24 @@ def process_batch_line_dedup(batch_df: DataFrame, batch_id: int,
                                      n_state_buckets=n_state_buckets)
     write_batch_partition(rebuilt, batch_id,
                           out_dir.rstrip("/") + "/clean")
-    write_batch_partition(fresh.select("h", "hb"), batch_id,
+    write_batch_partition(fresh.select("h", "hb").repartition("hb"), batch_id,
                           out_dir.rstrip("/") + "/state/lines", "hb")
     fresh.unpersist()
 
 
-def write_batch_partition(df: DataFrame, batch_id: int, path: str,
-                          *parts: str) -> None:
-    """The protocol's one write shape: idempotent dynamic overwrite of the
-    micro-batch's own batch_id partition (replay rewrites itself).
-
-    Bucket-partitioned state (`parts` non-empty) is repartitioned on the
-    bucket column first, so each batch writes exactly ONE file per bucket
-    dir instead of (tasks × buckets) shards — measured 1,056 → ~65 files
-    per 10k-doc batch, and every later batch's pruned state scan lists
-    32× fewer files (the listing cost that dominates a month-deep
-    stream on an object store). Trade: one writer per bucket — state
-    write parallelism equals n_state_buckets, so size buckets to the
-    cluster, not the data (state rows are 8-24 B each; a hot bucket is
-    bounded by hash uniformity, not key skew)."""
-    if parts:
-        df = df.repartition(*[F.col(p) for p in parts])
-    (df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id", *parts).parquet(path))
-
-
 def run_stream_line_dedup(spark: SparkSession, docs_dir: str, out_dir: str,
                           checkpoint_dir: str, max_files: int = 1,
-                          n_state_buckets: int = 32) -> None:
-    """availableNow stream driving process_batch_line_dedup."""
-    run_docs_stream(
-        spark, docs_dir, checkpoint_dir,
-        lambda df, bid: process_batch_line_dedup(
-            df, bid, out_dir, n_state_buckets=n_state_buckets),
-        max_files=max_files)
+                          n_state_buckets: int = 32
+                          ) -> list[StreamingQueryProgress]:
+    """availableNow stream driving process_batch_line_dedup; returns the
+    drain's per-batch progress records."""
 
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        process_batch_line_dedup(batch_df, batch_id, out_dir,
+                                 n_state_buckets=n_state_buckets)
 
-def run_docs_stream(spark: SparkSession, docs_dir: str, checkpoint_dir: str,
-                    process, max_files: int = 1) -> None:
-    """availableNow file-source stream over a parquet docs directory,
-    draining `max_files` per micro-batch into `process(batch_df, batch_id)`
-    with the checkpoint carrying batch identity across restarts."""
-    schema = spark.read.option("pathGlobFilter", "*.parquet").parquet(docs_dir).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return drain(pages_stream(spark, docs_dir, max_files)
+                 .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def run_stream_minhash_dedup(
@@ -389,10 +355,11 @@ def run_stream_minhash_dedup(
     est_threshold: float = 0.7,
     max_files: int = 1,
     n_state_buckets: int = 32,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Continuous corpus ingestion with in-batch exact and cross-batch
     estimated near-dup removal (module docstring). Drains available files
-    (availableNow) with `max_files` per micro-batch."""
+    (availableNow) with `max_files` per micro-batch and returns the drain's
+    per-batch progress records."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         process_batch_dedup(batch_df, batch_id, out_dir,
@@ -400,8 +367,8 @@ def run_stream_minhash_dedup(
                             est_threshold=est_threshold,
                             n_state_buckets=n_state_buckets)
 
-    run_docs_stream(spark, docs_dir, checkpoint_dir, process,
-                    max_files=max_files)
+    return drain(pages_stream(spark, docs_dir, max_files)
+                 .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 def _fs_swap(spark: SparkSession, tmp: str, dst: str) -> None:

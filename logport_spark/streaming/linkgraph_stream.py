@@ -53,8 +53,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from ..operators.linkgraph import URL_DOMAIN_RE, extract_links
+from .stream import drain, pages_stream, write_batch_partition
 
 
 def _links_partial(pages: DataFrame) -> DataFrame:
@@ -83,39 +85,21 @@ def run_stream_linkgraph(
     out_dir: str,
     checkpoint_dir: str,
     max_files: int = 1,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain available page files (availableNow, `max_files` per
     micro-batch), appending link/host partials under each batch's own
-    batch_id partition."""
+    batch_id partition. Returns the drain's per-batch progress records."""
     links_dir = out_dir.rstrip("/") + "/state/links"
     hosts_dir = out_dir.rstrip("/") + "/state/hosts"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         pages = batch_df.persist()
-
-        def _write(df: DataFrame, path: str) -> None:
-            (df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id").parquet(path))
-
-        _write(_links_partial(pages), links_dir)
-        _write(_hosts_partial(pages), hosts_dir)
+        write_batch_partition(_links_partial(pages), batch_id, links_dir)
+        write_batch_partition(_hosts_partial(pages), batch_id, hosts_dir)
         pages.unpersist()
 
-    schema = (spark.read.option("pathGlobFilter", "*.parquet")
-              .parquet(pages_dir).schema)
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(pages_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return drain(pages_stream(spark, pages_dir, max_files)
+                 .writeStream.foreachBatch(process), checkpoint_dir)
 
 
 _LINKS_DDL = ("src_domain string, dst_domain string, src_url string, "

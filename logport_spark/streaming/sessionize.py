@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .stream import drain, pages_stream
+
 OUT_DDL = (
     "user_id long, session_start timestamp, session_end timestamp, n_events int"
 )
@@ -82,20 +84,8 @@ def run_sessionize(
 ) -> DataFrame:
     """Drive the sessionizer over a (time-ordered) parquet directory with
     availableNow; returns the emitted closed sessions."""
-    schema = spark.read.parquet(events_dir).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(events_dir)
-    )
-    q = (
-        sessionize_stream(src.select("user_id", "ts"), gap_sec)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = pages_stream(spark, events_dir, max_files)
+    drain(sessionize_stream(src.select("user_id", "ts"), gap_sec)
+          .writeStream.outputMode("append").format("memory")
+          .queryName(query_name), checkpoint_dir)
     return spark.table(query_name)

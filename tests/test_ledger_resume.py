@@ -92,6 +92,20 @@ def test_rerun_is_idempotent(spark, pages_small, fresh_routed, tmp_path_factory)
     assert lg.filter(F.col("run_id") == "b").count() == 0
 
 
+def test_repeated_run_id_returns_only_its_own_commits(
+        spark, pages_small, tmp_path_factory):
+    """run_with_ledger returns the rows THIS call committed: a second call
+    with the same run_id (two CLI runs in one second share the default
+    run_{epoch} id) commits nothing and must return nothing, not the
+    first call's ledger rows."""
+    out = str(tmp_path_factory.mktemp("same_run_id"))
+    first = L.run_with_ledger(spark, pages_small, out, run_id="s", n_buckets=8)
+    assert first.count() == 8
+    again = L.run_with_ledger(spark, pages_small, out, run_id="s", n_buckets=8)
+    assert again.count() == 0
+    assert L.read_ledger(spark, out).count() == 8
+
+
 def test_empty_buckets_converge(spark, pages_small, tmp_path_factory):
     """Buckets that route zero rows (or hold no pages) still get committed
     ledger rows, so resume converges: exactly one ledger row per bucket ever,

@@ -84,3 +84,59 @@ def test_copied_tree_runs_its_own_code(tmp_path):
     pkg_file, data_dir = r.stdout.split()[-2:]
     assert pkg_file == str(copy / "logport_spark" / "__init__.py"), pkg_file
     assert data_dir == str(copy / "data"), data_dir
+
+
+def _code_sites(words: set[str], subdir: str = "logport_spark") -> dict:
+    """{word: {"<module path>::<enclosing function>"}} for every code token
+    in `words` under `subdir`: a name, an attribute ('.x') or a string
+    literal ('"x"'). Docstrings and comments are not code tokens, so prose
+    never counts."""
+    import ast
+    import io
+    import tokenize
+
+    sites: dict[str, set[str]] = {w: set() for w in words}
+    root = os.path.join(REPO, subdir)
+    for d, _, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(d, fn)
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            funcs = [(n.lineno, n.end_lineno, n.name)
+                     for n in ast.walk(ast.parse(src))
+                     if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            rel = os.path.relpath(path, REPO)
+            prev = ""
+            for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+                word = "." + tok.string if prev == "." else tok.string
+                prev = tok.string
+                if tok.type not in (tokenize.NAME, tokenize.STRING) or word not in words:
+                    continue
+                line = tok.start[0]
+                inner = max((f for f in funcs if f[0] <= line <= f[1]),
+                            key=lambda f: f[0], default=(0, 0, "<module>"))
+                sites[word].add(f"{rel}::{inner[2]}")
+    return sites
+
+
+def test_one_micro_batch_protocol():
+    """Every streaming runner goes through streaming/stream.py: one file
+    source (pages_stream; adopt's socket source is the only other
+    readStream), one availableNow drain, one batch_id dynamic-overwrite
+    write. Only the two runners that hand back a running query start one
+    themselves."""
+    stream = "logport_spark/streaming/stream.py"
+    sites = _code_sites({".awaitTermination", "availableNow", ".readStream",
+                         '"partitionOverwriteMode"'})
+    assert sites[".awaitTermination"] == {f"{stream}::drain"}
+    assert sites["availableNow"] == {f"{stream}::drain"}
+    assert sites['"partitionOverwriteMode"'] == {
+        f"{stream}::write_batch_partition"}
+    assert sites[".readStream"] == {
+        f"{stream}::pages_stream",
+        "logport_spark/streaming/adopt.py::adopt_stream"}
+    starts = _code_sites({".start"}, "logport_spark/streaming")[".start"]
+    assert starts == {f"{stream}::drain", f"{stream}::run_stream_kafka",
+                      "logport_spark/streaming/adopt.py::run_adopt"}

@@ -46,6 +46,50 @@ def test_stream_restart_is_exactly_once(spark, pages_dir, tmp_path_factory):
     assert spark.read.parquet(out + "/sinks").count() == n1
 
 
+@pytest.fixture(scope="module")
+def three_files_dir(spark, tmp_path_factory):
+    """Three page files of 30 pages each: one micro-batch per file."""
+    import pandas as pd
+
+    d = str(tmp_path_factory.mktemp("pages_three"))
+    for i in range(3):
+        spark.createDataFrame(
+            pd.DataFrame(datagen.gen_docs(range(30 * i, 30 * (i + 1)))),
+            schema=datagen.PAGES_DDL).coalesce(1).write.mode("append").parquet(d)
+    return d
+
+
+def test_drain_returns_per_batch_progress(spark, three_files_dir,
+                                          tmp_path_factory):
+    """A runner returns one progress record per micro-batch; a restart on
+    the same checkpoint finds nothing new and reports only idle batches."""
+    from logport_spark.streaming.stream import run_stream_pipeline
+
+    out = str(tmp_path_factory.mktemp("drain_out"))
+    ckpt = str(tmp_path_factory.mktemp("drain_ckpt"))
+    recs = run_stream_pipeline(spark, three_files_dir, out, ckpt, max_files=1)
+    assert [r["batchId"] for r in recs] == [0, 1, 2]
+    assert sum(r["numInputRows"] for r in recs) == 90
+    assert all("addBatch" in r["durationMs"] for r in recs)
+    again = run_stream_pipeline(spark, three_files_dir, out, ckpt, max_files=1)
+    assert again and all(r["numInputRows"] == 0 for r in again)
+
+
+def test_drain_surfaces_batch_failure(spark, three_files_dir, tmp_path_factory):
+    """A micro-batch that raises fails the drain with the query's exception."""
+    from pyspark.errors import StreamingQueryException
+
+    from logport_spark.streaming.stream import drain, pages_stream
+
+    def process(batch_df, batch_id):
+        raise ValueError("batch failed")
+
+    ckpt = str(tmp_path_factory.mktemp("drain_fail_ckpt"))
+    with pytest.raises(StreamingQueryException, match="batch failed"):
+        drain(pages_stream(spark, three_files_dir, 1)
+              .writeStream.foreachBatch(process), ckpt)
+
+
 def test_stream_replayed_batch_is_idempotent(spark, pages_dir, tmp_path_factory):
     """Crash-replay simulation: delete the LAST checkpoint commit (as if the
     process died between the sink write and the commit) and re-run — the
