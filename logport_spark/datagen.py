@@ -478,7 +478,9 @@ def ensure_hyperplanes(dim: int = 64, n_planes: int = 64) -> str:
 
 
 def ensure_lookups() -> dict[str, str]:
-    """Write the small lookup/config tables once; return name→path."""
+    """Write the small lookup/config tables once, for the readers that need
+    them as files (the DuckDB oracles, bench.py); return name→path. The
+    pipeline builds the same rows in the driver (enrich.load_lookups)."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq

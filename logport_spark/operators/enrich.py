@@ -9,11 +9,13 @@ O(domains) ≪ executor memory; at 100 TB the fact side never moves).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_ROUTE_KEY
-from ..datagen import ensure_lookups
+from ..config import (DEFAULT_ROUTE_KEY, domain_tld_rows, lang_locale_rows,
+                      routes_rows)
+from ..store import ConfigStore
 
 
 def with_domain(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -69,30 +71,19 @@ def url_blocklist(pages: DataFrame, blocklist: list[str],
 
 def load_lookups(spark: SparkSession,
                  config_dir: str | None = None) -> dict[str, DataFrame]:
-    """Lookup tables for the broadcast joins. When ``config_dir`` names an
-    out_dir whose ConfigStore holds persisted route mutations
-    (`watch`/`unwatch` CLI verbs, store.py), those routes REPLACE the
-    built-in seed — the run consumes the same bytes the CLI wrote, the
-    logport watches-table contract. Absent store (the common case): the
-    static defaults, zero extra cost."""
-    paths = ensure_lookups()
-    out = {name: spark.read.parquet(path) for name, path in paths.items()}
-    if config_dir is not None:
-        import os
-
-        from ..store import ConfigStore
-
-        store = ConfigStore(config_dir)
-        if os.path.exists(store.routes_path):
-            rows = store.list_routes()
-            out["routes"] = spark.createDataFrame(
-                [(r["id"], r["route_key"], r["sink"], r["producer_type"],
-                  r["brokers"], r["product_code"], r["log_type"],
-                  r["hostname"]) for r in rows],
-                "id long, route_key string, sink string, "
-                "producer_type string, brokers string, product_code string, "
-                "log_type string, hostname string")
-    return out
+    """Lookup tables for the broadcast joins, built in the driver from the
+    rows it already holds: each is a LocalRelation, so no file is read or
+    written and no job runs until the join broadcasts it. When
+    ``config_dir`` names an out_dir, its ConfigStore's routes (the persisted
+    `watch`/`unwatch` CLI mutations, store.py; the built-in seed when none
+    were ever made) REPLACE the built-in table — the run consumes the same
+    bytes the CLI wrote, the logport watches-table contract."""
+    routes = (ConfigStore(config_dir).list_routes() if config_dir is not None
+              else routes_rows())
+    return {name: spark.createDataFrame(pd.DataFrame(rows))
+            for name, rows in (("domain_tld", domain_tld_rows()),
+                               ("lang_locale", lang_locale_rows()),
+                               ("routes", routes))}
 
 
 def enrich(df: DataFrame, lookups: dict[str, DataFrame]) -> DataFrame:

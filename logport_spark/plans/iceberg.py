@@ -26,19 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .ledger import SINK_TABLE_COLS, sink_rows
+from .ledger import SINK_SCHEMA, sink_rows
 
-# column types of the sink row layout; every column not named is a STRING
-_SINK_COL_TYPES = {"line_no": "INT", "warc_ts": "TIMESTAMP",
-                   "record_bytes": "BIGINT", "is_obj": "BOOLEAN",
-                   "parse_fail": "BOOLEAN", "bucket": "INT"}
-
-SINK_TABLE_DDL = (
-    "CREATE TABLE IF NOT EXISTS {table} ("
-    + ", ".join(f"{c} {_SINK_COL_TYPES.get(c, 'STRING')}"
-                for c in SINK_TABLE_COLS)
-    + ") USING iceberg PARTITIONED BY (bucket, sink)"
-)
+SINK_TABLE_DDL = ("CREATE TABLE IF NOT EXISTS {table} (" + SINK_SCHEMA
+                  + ") USING iceberg PARTITIONED BY (bucket, sink)")
 
 
 def iceberg_available(spark: SparkSession) -> bool:

@@ -53,6 +53,12 @@ EST_RECORDS_PER_PAGE = 20
 EST_BYTES_PER_PAGE = 512  # compressed parquet footprint of one page row
 
 
+def plan_bytes(df: DataFrame) -> int:
+    """The optimized plan's sizeInBytes statistic: for a file scan, the sum
+    of its file sizes, already known from the listing — no job, no RPC."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def estimated_pages(df) -> int:
     """Zero-job page-count estimate for bucket sizing: the optimized plan's
     sizeInBytes (the sum of scan file sizes, already known from the listing
@@ -62,8 +68,7 @@ def estimated_pages(df) -> int:
     scale and at most one pow2 step at large scale — and unlike
     ``df.count()`` it never spends an extra job touching every file footer,
     which at 10^12 rows is a real scan."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return max(1, size // EST_BYTES_PER_PAGE)
+    return max(1, plan_bytes(df) // EST_BYTES_PER_PAGE)
 
 
 def scaled_buckets(n_rows: int, max_rows_per_stream: int = MAX_ROWS_PER_STREAM,
@@ -118,14 +123,18 @@ def _dir_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _sinks_dir_exists(spark: SparkSession, out_dir: str) -> bool:
-    return _dir_exists(spark, out_dir.rstrip("/") + "/sinks")
+def read_declared(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+    """One of the pipeline's own parquet tables, read with its declared
+    schema: no inference job, and a directory that does not exist yet (the
+    legitimate "nothing ever written" case) reads as an empty scan of zero
+    paths, which runs no Python worker. Any other read failure (corrupt
+    files, schema drift) still raises when the frame is evaluated."""
+    return spark.read.schema(ddl).parquet(
+        *([path] if _dir_exists(spark, path) else []))
 
 
 def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
-    if not _dir_exists(spark, ledger_path(out_dir)):
-        return spark.createDataFrame([], LEDGER_SCHEMA)
-    return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path(out_dir))
+    return read_declared(spark, ledger_path(out_dir), LEDGER_SCHEMA)
 
 
 def input_fingerprints(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -153,6 +162,14 @@ def input_fingerprints(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> Da
 
 
 SINK_TABLE_COLS = [c for c in R.ROUTED_COLS if c != "sink"] + ["bucket", "sink"]
+
+# column types of the sink row layout; every column not named is a STRING
+_SINK_COL_TYPES = {"line_no": "INT", "warc_ts": "TIMESTAMP",
+                   "record_bytes": "BIGINT", "is_obj": "BOOLEAN",
+                   "parse_fail": "BOOLEAN", "bucket": "INT"}
+
+SINK_SCHEMA = ", ".join(f"{c} {_SINK_COL_TYPES.get(c, 'STRING')}"
+                        for c in SINK_TABLE_COLS)
 
 
 def sink_rows(routed: DataFrame) -> DataFrame:
@@ -234,20 +251,15 @@ def run_with_ledger(
     # whole parse DAG a second time. Every bucket in the universe gets a
     # committed row — including buckets that routed ZERO rows — so resume
     # converges instead of rescanning empty buckets forever.
-    # Only the "nothing ever written" first-run case (fully empty input, no
-    # sinks/ dir yet) may be tolerated; any other failure (corrupt files,
-    # schema drift, transient FS errors) must propagate so the run fails
-    # BEFORE committing ledger rows — otherwise every not-yet-done bucket
-    # would be committed with zeroed metrics and never re-counted on resume.
-    if _sinks_dir_exists(spark, out_dir):
-        written = (
-            spark.read.parquet(out_dir + "/sinks")
-            .filter(F.col("bucket").isin(universe))
-        )
-        stats = written.groupBy("bucket").agg(*shipped_aggs())
-        stats_rows = {r["bucket"]: r for r in stats.collect()}
-    else:
-        stats_rows = {}
+    # A missing sinks/ dir (fully empty input, nothing ever written) reads
+    # as empty; any other failure (corrupt files, schema drift, transient FS
+    # errors) propagates so the run fails BEFORE committing ledger rows —
+    # otherwise every not-yet-done bucket would be committed with zeroed
+    # metrics and never re-counted on resume.
+    stats = (read_declared(spark, out_dir + "/sinks", SINK_SCHEMA)
+             .filter(F.col("bucket").isin(universe))
+             .groupBy("bucket").agg(*shipped_aggs()))
+    stats_rows = {r["bucket"]: r for r in stats.collect()}
     seq = int(time.time() * 1000)
     # Built from pandas (Arrow), the rows are a LocalRelation: neither the
     # append below nor the caller's collect of the returned frame runs a

@@ -1,8 +1,9 @@
 """Relational/test-data table readers + the broadcast lookup tables.
 
 The lookup tables (routes, domain_tld, lang_locale) are the engine's
-watches/settings analog (reference src/Database.cc:65-84): tiny, read once,
-broadcast to every executor by the enrichment joins."""
+watches/settings analog (reference src/Database.cc:65-84): tiny, built in
+the driver from rows it already holds (no file read), broadcast to every
+executor by the enrichment joins."""
 
 from __future__ import annotations
 

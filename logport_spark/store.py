@@ -5,8 +5,9 @@ The reference persists `watch`/`unwatch`/`set`/`unset` mutations to SQLite
 so they survive across invocations. Here the store is two single-file
 PARQUET tables under `<out_dir>/config/` — written with pyarrow directly
 (no JVM spin-up for a control-plane verb; a CLI `watch` returns in
-milliseconds) yet readable by any Spark job as an ordinary table, so the
-pipeline's broadcast route join consumes the SAME bytes the CLI wrote.
+milliseconds). The pipeline reads the stored bytes through `list_routes`
+(operators/enrich.load_lookups builds its routes lookup in the driver from
+them), so its broadcast route join consumes the SAME bytes the CLI wrote.
 
 Semantics:
 - routes: the built-in ROUTES list (config.py) is the SEED; the first

@@ -74,6 +74,7 @@ from ..operators.dedup import (
     lsh_verified_pairs,
     minhash_signatures_h64,
 )
+from ..plans.ledger import plan_bytes, read_declared
 from .stream import drain, pages_stream, write_batch_partition
 
 NUM_HASHES = 64
@@ -133,35 +134,21 @@ def ensure_parallelism(df: DataFrame,
     (uncapped either way) and 10-batch legs drifting identically with
     ambient load, i.e. no local effect — while the same batches on a
     2000-core cluster get ~41/~416 real tasks, not 2000 near-empty
-    ones. Input bytes come
-    from the batch's own file statuses (driver-cached listing; both call
-    sites pass the RAW file-source batch, where the partition count read
-    is known-cheap); an un-listable input falls back to the uncapped
-    widen.
+    ones. Input bytes are the plan's size statistic (ledger.plan_bytes,
+    which ledger.estimated_pages reads too): no RPC and no job, and unlike
+    ``df.inputFiles()`` it is still filled in for the micro-batch handed
+    to foreachBatch.
 
     The batch-side session.ensure_min_parallelism intentionally has NO
     such cap: it wraps one-shot CPU-heavy scans (tiny parquet, seconds of
     shingling) where bytes are the wrong proxy for work; this helper runs
     per micro-batch forever, where over-widening mints near-empty tasks
     on every trigger."""
-    sc = df.sparkSession.sparkContext
     par = df.sparkSession.sparkContext.defaultParallelism
     cur = df.rdd.getNumPartitions()
     if cur >= par:
         return df
-    want = par
-    try:
-        files = df.inputFiles()
-        if files:
-            hconf = sc._jsc.hadoopConfiguration()
-            jpath = sc._jvm.org.apache.hadoop.fs.Path
-            total = 0
-            for f in files:
-                p = jpath(f)
-                total += p.getFileSystem(hconf).getFileStatus(p).getLen()
-            want = min(par, max(cur, -(-total // target_bytes_per_task)))
-    except Exception:
-        pass
+    want = min(par, max(cur, -(-plan_bytes(df) // target_bytes_per_task)))
     if cur < want:
         return df.repartition(want)
     return df
@@ -171,11 +158,7 @@ def _read_state(spark: SparkSession, path: str, ddl: str,
                 exclude_batch: int) -> DataFrame:
     """Read a state table, pruning the excluded batch's partitions at scan
     level (the crash-replay contract — module docstring)."""
-    from ..plans.ledger import _dir_exists
-
-    if not _dir_exists(spark, path):
-        return spark.createDataFrame([], ddl)
-    return (spark.read.schema(ddl + ", batch_id long").parquet(path)
+    return (read_declared(spark, path, ddl + ", batch_id long")
             .filter(F.col("batch_id") != F.lit(exclude_batch))
             .drop("batch_id"))
 

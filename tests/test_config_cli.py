@@ -108,8 +108,9 @@ def test_cli_watch_unwatch_set_unset_roundtrip(tmp_path, capsys):
 def test_persisted_routes_bind_to_runs(spark, pages_small, tmp_path,
                                        capsys, monkeypatch):
     """A watch mutation persisted under an out_dir changes where THAT
-    out_dir's runs route records — load_lookups reads the store's parquet,
-    so the CLI and the pipeline consume the same bytes."""
+    out_dir's runs route records — load_lookups builds the routes table
+    from the store's list_routes, so the CLI and the pipeline consume the
+    same bytes."""
     from pyspark.sql import functions as F
 
     from logport_spark.store import ConfigStore
@@ -133,6 +134,40 @@ def test_persisted_routes_bind_to_runs(spark, pages_small, tmp_path,
            .filter(F.col("sink") == "sink_news_v2")
            .select("record").first().record)
     assert '"prd":"prd5000"' in rec
+
+
+def test_lookups_are_built_in_the_driver(spark, tmp_path, monkeypatch):
+    """The lookup tables are built in the driver from rows it already holds
+    (the built-in seed, or a ConfigStore's stored routes): each plans as a
+    LocalRelation with the lookup schema, and nothing is written under the
+    data dir."""
+    from pyspark.sql.types import DataType
+
+    from logport_spark import datagen
+    from logport_spark.operators.enrich import load_lookups
+    from logport_spark.store import ConfigStore
+
+    data = tmp_path / "data"
+    data.mkdir()
+    monkeypatch.setattr(datagen, "DATA_DIR", str(data))
+    out_dir = str(tmp_path / "out")
+    ConfigStore(out_dir).watch("news", "sink_news_v2")
+    want = {
+        "domain_tld": "domain string, tld string, category string",
+        "lang_locale": "lang string, locale string",
+        "routes": "id bigint, route_key string, sink string, "
+                  "producer_type string, brokers string, product_code string, "
+                  "log_type string, hostname string",
+    }
+    stored = load_lookups(spark, config_dir=out_dir)
+    for lookups in (load_lookups(spark), stored):
+        for name, ddl in want.items():
+            assert lookups[name].schema == DataType.fromDDL(ddl), name
+            plan = lookups[name]._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation", name
+    sinks = {r.route_key: r.sink for r in stored["routes"].collect()}
+    assert sinks["news"] == "sink_news_v2"
+    assert list(data.iterdir()) == []
 
 
 def test_cli_run_and_status(spark, pages_small, tmp_path, capsys, monkeypatch):

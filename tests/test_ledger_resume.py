@@ -121,6 +121,33 @@ def test_empty_buckets_converge(spark, pages_small, tmp_path_factory):
     assert L.read_ledger(spark, out).count() == 64   # second run added nothing
 
 
+def test_absent_ledger_is_an_empty_declared_scan(spark, tmp_path):
+    """A fresh out_dir's ledger reads as an empty scan of zero paths with
+    the declared schema — no list-built frame (Scan ExistingRDD), which
+    starts a Python-worker job to return no rows."""
+    from pyspark.sql.types import DataType
+
+    led = L.read_ledger(spark, str(tmp_path / "absent"))
+    assert led.schema == DataType.fromDDL(L.LEDGER_SCHEMA)
+    assert led.count() == 0
+    assert "ExistingRDD" not in led._jdf.queryExecution().executedPlan().toString()
+
+
+def test_unreadable_sinks_fail_before_the_ledger_commit(spark, pages_small,
+                                                        tmp_path):
+    """Only a missing sinks/ dir reads as empty: an unreadable sink file in
+    a bucket the run is responsible for fails the stats re-scan, and no
+    ledger row is written (the bucket is never committed with zeroed
+    metrics)."""
+    out = str(tmp_path / "out")
+    bogus = tmp_path / "out" / "sinks" / "bucket=0" / "sink=sink_bogus"
+    bogus.mkdir(parents=True)
+    (bogus / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="sink_bogus"):
+        L.run_with_ledger(spark, pages_small, out, run_id="bad", n_buckets=4)
+    assert L.read_ledger(spark, out).count() == 0
+
+
 def test_ledger_metrics_match_sink_metrics(spark, pages_small, tmp_path_factory):
     """Per-bucket ledger aggregates roll up to the per-sink oracle counts."""
     from logport_spark.plans.pipeline import parsed_routed, sink_metrics

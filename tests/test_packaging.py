@@ -140,3 +140,25 @@ def test_one_micro_batch_protocol():
     starts = _code_sites({".start"}, "logport_spark/streaming")[".start"]
     assert starts == {f"{stream}::drain", f"{stream}::run_stream_kafka",
                       "logport_spark/streaming/adopt.py::run_adopt"}
+
+
+def test_small_tables_build_no_rdd_and_infer_no_schema():
+    """Small tables stay in the driver: no list-built frame anywhere in the
+    package (a parallelized RDD whose first action starts a Python worker
+    to return rows the driver already holds), and the ledger reads its own
+    tables with their declared schemas — only read_routed, which may point
+    at another layout, infers one."""
+    import ast
+
+    for d, _, files in os.walk(os.path.join(REPO, "logport_spark")):
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(d, fn), encoding="utf-8") as f:
+                    assert "createDataFrame([]" not in f.read(), fn
+    with open(os.path.join(REPO, "logport_spark", "plans", "ledger.py"),
+              encoding="utf-8") as f:
+        src = f.read()
+    funcs = {n.name: ast.get_source_segment(src, n)
+             for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)}
+    infer = "spark.read.parquet("
+    assert src.count(infer) == funcs["read_routed"].count(infer) == 1

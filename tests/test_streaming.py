@@ -877,3 +877,38 @@ def test_ensure_parallelism_cap_is_input_proportional(spark, tmp_path):
                for f in os.listdir(big_dir) if f.endswith(".parquet"))
     want = min(par, max(1, -(-size // (64 * 1024))))
     assert ensure_parallelism(big).rdd.getNumPartitions() == want
+
+
+def test_ensure_parallelism_caps_a_stream_batch(spark, tmp_path):
+    """The widen cap holds for the micro-batch foreachBatch hands over,
+    whose inputFiles() is empty: a ~1 KB stream batch stays one partition
+    instead of widening to defaultParallelism."""
+    from logport_spark.streaming.dedup_stream import ensure_parallelism
+    from logport_spark.streaming.stream import drain, pages_stream
+
+    pages_dir = str(tmp_path / "tiny")
+    spark.range(10).selectExpr("id as doc_id", "repeat('x', 10) as text") \
+        .coalesce(1).write.mode("overwrite").parquet(pages_dir)
+    seen = []
+
+    def process(batch_df, batch_id):
+        seen.append(ensure_parallelism(batch_df).rdd.getNumPartitions())
+
+    drain(pages_stream(spark, pages_dir, 1).writeStream.foreachBatch(process),
+          str(tmp_path / "ckpt"))
+    assert seen == [1]
+
+
+def test_absent_state_is_an_empty_declared_scan(spark, tmp_path):
+    """A state table that does not exist yet reads as an empty scan of zero
+    paths with the declared schema — no list-built frame (Scan
+    ExistingRDD)."""
+    from pyspark.sql.types import DataType
+
+    from logport_spark.streaming.dedup_stream import _read_state
+
+    ddl = "key long, doc_id long"
+    st = _read_state(spark, str(tmp_path / "absent"), ddl, exclude_batch=0)
+    assert st.schema == DataType.fromDDL(ddl)
+    assert st.count() == 0
+    assert "ExistingRDD" not in st._jdf.queryExecution().executedPlan().toString()
