@@ -39,14 +39,19 @@ def _spark(cpus: int | None = None):
 
 
 def cmd_run(args) -> int:
+    from .config import Settings
     from .plans import ledger as L
+    from .store import ConfigStore
 
     spark = _spark(args.cpus)
     pages = spark.read.parquet(args.pages)
     run_id = args.run_id or f"run_{int(time.time())}"
+    # --buckets, else env > the out_dir's stored setting > default
+    n_buckets = args.buckets or int(Settings(
+        values=ConfigStore(args.out).settings_values()).get("ledger.buckets"))
     t0 = time.time()
     rows = L.run_with_ledger(spark, pages, args.out, run_id=run_id,
-                             n_buckets=args.buckets).collect()
+                             n_buckets=n_buckets).collect()
     n = sum(r["rows_routed"] for r in rows)
     b = sum(r["bytes_shipped"] for r in rows)
     f = sum(r["parse_failures"] for r in rows)
@@ -309,11 +314,13 @@ def cmd_compact(args) -> int:
 def cmd_compact_state(args) -> int:
     """Streaming-state retention (the maintenance twin of `compact` for
     the cross-batch dedup stream): fold committed batch partitions into
-    the -1 generation — state listing cost stays O(generations) over a
-    month-deep stream. Pass --checkpoint so a crashed batch's partitions
-    survive for its replay (omit ONLY after a clean shutdown)."""
-    from .streaming.dedup_stream import (compact_clean, compact_dedup_state,
-                                         last_committed_batch)
+    the -1 generation through stream.fold_batches — state listing cost
+    stays O(generations) over a month-deep stream. --out and --checkpoint
+    may be any Hadoop path (a local dir, file://, hdfs://). Pass
+    --checkpoint so a crashed batch's partitions survive for its replay
+    (omit ONLY after a clean shutdown)."""
+    from .streaming.dedup_stream import compact_clean, compact_dedup_state
+    from .streaming.stream import last_committed_batch
 
     spark = _spark(args.cpus)
     kwargs = {"checkpoint_dir": args.checkpoint} if args.checkpoint else {}
@@ -322,7 +329,7 @@ def cmd_compact_state(args) -> int:
         compact_clean(spark, args.out, **kwargs)
     print(json.dumps({
         "out": args.out,
-        "folded_through_batch": (last_committed_batch(args.checkpoint)
+        "folded_through_batch": (last_committed_batch(spark, args.checkpoint)
                                  if args.checkpoint else None),
         "clean_folded": bool(args.clean),
     }))
@@ -379,8 +386,6 @@ def cmd_bench(args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
-    from .plans.ledger import DEFAULT_BUCKETS
-
     p = argparse.ArgumentParser(prog="logport_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -392,7 +397,8 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--pages", required=True)
         sp.add_argument("--out", required=True)
         sp.add_argument("--run-id", default=None)
-        sp.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS)
+        sp.add_argument("--buckets", type=int, default=None,
+                        help="default: the ledger.buckets setting")
         common(sp)
         sp.set_defaults(fn=cmd_run)
     sp = sub.add_parser("status")
@@ -446,11 +452,15 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--target-mb", type=int, default=128)
     common(sp)
     sp.set_defaults(fn=cmd_compact)
-    sp = sub.add_parser("compact-state")
+    sp = sub.add_parser("compact-state",
+                        help="fold committed stream batches (state/ and, "
+                             "with --clean, clean/) into one generation; "
+                             "any Hadoop path")
     sp.add_argument("--out", required=True)
     sp.add_argument("--checkpoint", default=None,
-                    help="stream checkpoint dir; folds only committed "
-                         "batches (omit only after a clean shutdown)")
+                    help="stream checkpoint dir (any Hadoop path); folds "
+                         "only committed batches (omit only after a clean "
+                         "shutdown)")
     sp.add_argument("--sig-files", dest="sig_files", type=int, default=8)
     sp.add_argument("--clean", action="store_true",
                     help="also fold the clean/ output view")

@@ -85,36 +85,31 @@ def compact_sinks(spark, out_dir: str,
     Iceberg's rewrite_data_files metadata scan does (plans/iceberg.py
     gates the real thing). Returns {partition_path: (files_before,
     files_after)} for the leaves rewritten."""
-    import os
+    from ..plans.ledger import hadoop_fs
 
-    leaves: list[tuple[str, list[tuple[str, str]]]] = []
-
-    def walk(d: str, spec: list[tuple[str, str]]) -> None:
-        parts = [e for e in sorted(os.listdir(d))
-                 if "=" in e and os.path.isdir(os.path.join(d, e))]
-        if not parts:
-            if spec:
-                leaves.append((d, spec))
-            return
-        for e in parts:
-            k, v = e.split("=", 1)
-            walk(os.path.join(d, e), spec + [(k, v)])
-
-    walk(out_dir, [])
+    fs, root = hadoop_fs(spark, out_dir)
+    base = fs.makeQualified(root).toString()
+    leaves: dict[str, list[int]] = {}  # leaf dir -> its parquet file sizes
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        if st.getPath().getName().endswith(".parquet"):
+            leaves.setdefault(st.getPath().getParent().toString(),
+                              []).append(st.getLen())
     done: dict[str, tuple[int, int]] = {}
-    for d, spec in leaves:
-        files = [os.path.join(d, f) for f in os.listdir(d)
-                 if f.endswith(".parquet")]
-        if not files:
+    for d, sizes in sorted(leaves.items()):
+        segs = d[len(base):].strip("/").split("/")
+        if not all("=" in seg for seg in segs):
             continue
-        nbytes = sum(os.path.getsize(f) for f in files)
+        spec = [seg.split("=", 1) for seg in segs]
+        n_files, nbytes = len(sizes), sum(sizes)
         target = max(1, -(-nbytes // target_file_bytes))
-        if len(files) <= target:
+        if n_files <= target:
             continue
         part = spark.read.parquet(d).repartition(target)
         for k, v in spec:
             part = part.withColumn(k, F.lit(v))
         (part.write.mode("overwrite")
          .partitionBy(*[k for k, _ in spec]).parquet(out_dir))
-        done["/".join(f"{k}={v}" for k, v in spec)] = (len(files), target)
+        done["/".join(f"{k}={v}" for k, v in spec)] = (n_files, target)
     return done

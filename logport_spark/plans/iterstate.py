@@ -26,9 +26,9 @@ connected_components: an uncut 300-round plan hangs Catalyst), so durable
 mode costs one parquet write per round instead of one localCheckpoint —
 the same I/O class, now restartable.
 
-All filesystem access goes through the Hadoop FS API (any scheme — HDFS,
-S3A, local), never Python ``os``: state_dir lives on the shared cluster
-filesystem in a real deployment.
+All filesystem access goes through plans/ledger.py's Hadoop FS helpers
+(any scheme — HDFS, S3A, local), never Python ``os``: state_dir lives on
+the shared cluster filesystem in a real deployment.
 """
 
 from __future__ import annotations
@@ -38,11 +38,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+from .ledger import hadoop_fs, list_names, path_exists
 
 
 def input_fp(df: DataFrame, *cols: str) -> int:
@@ -87,8 +83,7 @@ class IterState:
         return f"{self.dir}/meta"
 
     def _check_or_write_meta(self) -> None:
-        fs, hpath, jvm = _fs(self.spark, self._meta_path())
-        if fs.exists(hpath):
+        if path_exists(self.spark, self._meta_path()):
             got = self.spark.read.parquet(self._meta_path()).head()
             want_params = json.dumps(self.params)
             if int(got["input_fp"]) != self.fp or got["params"] != want_params:
@@ -110,20 +105,11 @@ class IterState:
 
     def latest_round(self) -> int:
         """Highest k with a committed (_SUCCESS-marked) round, else -1."""
-        fs, hpath, jvm = _fs(self.spark, self.dir)
-        if not fs.exists(hpath):
-            return -1
-        best = -1
-        for status in fs.listStatus(hpath):
-            name = status.getPath().getName()
-            if not name.startswith("round="):
-                continue
-            k = int(name.split("=", 1)[1])
-            marker = jvm.org.apache.hadoop.fs.Path(
-                f"{self._round_path(k)}/_SUCCESS")
-            if fs.exists(marker):
-                best = max(best, k)
-        return best
+        rounds = [int(n.split("=", 1)[1])
+                  for n in list_names(self.spark, self.dir)
+                  if n.startswith("round=")]
+        return max((k for k in rounds if path_exists(
+            self.spark, f"{self._round_path(k)}/_SUCCESS")), default=-1)
 
     def load(self, k: int) -> DataFrame:
         return self.spark.read.parquet(self._round_path(k))
@@ -143,9 +129,8 @@ class IterState:
         return f"{self.dir}/_DONE"
 
     def mark_done(self) -> None:
-        fs, hpath, _ = _fs(self.spark, self._done_path())
+        fs, hpath = hadoop_fs(self.spark, self._done_path())
         fs.create(hpath, True).close()
 
     def is_done(self) -> bool:
-        fs, hpath, _ = _fs(self.spark, self._done_path())
-        return bool(fs.exists(hpath))
+        return path_exists(self.spark, self._done_path())

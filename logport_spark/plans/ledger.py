@@ -111,16 +111,40 @@ def ledger_path(out_dir: str) -> str:
     return out_dir.rstrip("/") + "/_ledger"
 
 
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence probe (works for any scheme, not just local).
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) for `path`: the one way the
+    pipeline touches the filesystem its own tables live on, so every
+    probe, listing and swap works for any scheme (HDFS, S3A, file://, a
+    plain local path), never only for local disk."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
-    Used to distinguish the legitimate "nothing ever written" first-run case
-    from real read failures (corrupt/locked files, schema drift), which must
-    propagate instead of being swallowed into empty results."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe: tells the legitimate "nothing ever written"
+    first-run case from real read failures (corrupt/locked files, schema
+    drift), which must propagate instead of being swallowed into empty
+    results."""
+    fs, hpath = hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def list_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the children of directory `path`, or [] when it is absent."""
+    fs, hpath = hadoop_fs(spark, path)
+    return ([st.getPath().getName() for st in fs.listStatus(hpath)]
+            if fs.exists(hpath) else [])
+
+
+def swap_dir(spark: SparkSession, src: str, dst: str) -> None:
+    """Generation swap: replace directory `dst` with `src` by delete, then
+    rename (logport's rename-to-temp discipline, src/InotifyWatcher.cc:
+    218-231). A failed rename raises: `src` still holds the new
+    generation."""
+    fs, hdst = hadoop_fs(spark, dst)
+    fs.delete(hdst, True)
+    if not fs.rename(hadoop_fs(spark, src)[1], hdst):
+        raise IOError(f"rename {src} -> {dst} failed")
 
 
 def read_declared(spark: SparkSession, path: str, ddl: str) -> DataFrame:
@@ -130,7 +154,7 @@ def read_declared(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     paths, which runs no Python worker. Any other read failure (corrupt
     files, schema drift) still raises when the frame is evaluated."""
     return spark.read.schema(ddl).parquet(
-        *([path] if _dir_exists(spark, path) else []))
+        *([path] if path_exists(spark, path) else []))
 
 
 def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -240,6 +264,9 @@ def run_with_ledger(
     # here and the stats re-scan below.
     universe = [b for b in range(n_buckets)
                 if b not in done and (only_buckets is None or b in only_buckets)]
+    if not universe:
+        # nothing left to commit: no route, no sink write, no ledger append
+        return led.limit(0)
     todo = with_bucket(pages, n_buckets).filter(F.col("bucket").isin(universe))
     # persisted watch/unwatch mutations under THIS out_dir (store.py) bind
     # to its runs — the logport watches-table contract

@@ -50,7 +50,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ledger import path_exists
+
 MANIFEST_DIR = "_manifest"
+MANIFEST_DDL = ("file string, col string, min_v string, max_v string, "
+                "null_count long, row_count long")
 
 # Morton spread: 0b...abcd -> 0b...0a0b0c0d (32 bits -> even bits of 64).
 # Magic masks are the textbook "interleave by binary magic numbers" set
@@ -272,10 +276,13 @@ def update_manifest(spark: SparkSession, path: str,
 
 
 def _read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(f"{path}/{MANIFEST_DIR}")
-    except Exception:
+    """The manifest table, or None when none was built or an overwrite that
+    died left `_manifest/` empty. A manifest that does not read raises."""
+    man = f"{path}/{MANIFEST_DIR}"
+    if not path_exists(spark, man):
         return None
+    df = spark.read.schema(MANIFEST_DDL).parquet(man)
+    return df if df.inputFiles() else None
 
 
 def pruned_files(spark: SparkSession, path: str, col: str,

@@ -32,9 +32,10 @@ ladder" / "State-depth scaling"):
   * state row depth: ~4% per-batch cost at 10× depth — not the knob to
     worry about.
   * generation count: +48% per batch at 100 raw generations (file
-    listing/opens, not rows). Run compact_dedup_state every ~50-100
-    micro-batches (stream stopped, checkpoint-aware); it returns the
-    batch below the 1-generation floor.
+    listing/opens, not rows). Run compact_dedup_state (and compact_clean
+    for clean/) every ~50-100 micro-batches (stream stopped,
+    checkpoint-aware; both fold through stream.fold_batches); it returns
+    the batch below the 1-generation floor.
   * n_state_buckets: state-write parallelism equals the bucket count
     (one file per bucket per batch) and the per-batch state scan reads
     only the batch's own buckets — size to the cluster's write slots,

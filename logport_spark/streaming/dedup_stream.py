@@ -50,7 +50,8 @@ skipping, or a bucketed table for a shuffle-free state side. The
 signature table is only touched for candidate ids (semi-joined), so it
 never bounds the batch. `compact_dedup_state` merges the per-batch
 partitions into one batch_id=-1 generation so state file count stays
-bounded over a long-lived stream.
+bounded over a long-lived stream; like every compaction verb it runs the
+protocol's one fold, stream.fold_batches.
 
 CRASH-REPLAY CONTRACT — a replayed micro-batch must NOT see the state it
 wrote before the crash: its own (sig, band) rows would self-match every
@@ -75,7 +76,8 @@ from ..operators.dedup import (
     minhash_signatures_h64,
 )
 from ..plans.ledger import plan_bytes, read_declared
-from .stream import drain, pages_stream, write_batch_partition
+from .stream import (drain, fold_batches, last_committed_batch, pages_stream,
+                     write_batch_partition)
 
 NUM_HASHES = 64
 BANDS = 16
@@ -354,57 +356,6 @@ def run_stream_minhash_dedup(
                  .writeStream.foreachBatch(process), checkpoint_dir)
 
 
-def _fs_swap(spark: SparkSession, tmp: str, dst: str) -> None:
-    """Replace `dst` with `tmp` via the Hadoop FileSystem API (works on any
-    supported store, not just local disk)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(dst).getFileSystem(conf)
-    fs.delete(hpath(dst), True)
-    if not fs.rename(hpath(tmp), hpath(dst)):
-        raise IOError(f"rename {tmp} -> {dst} failed")
-
-
-def last_committed_batch(checkpoint_dir: str) -> int:
-    """Highest micro-batch id the Structured Streaming checkpoint has
-    COMMITTED (the `commits/<id>` write-ahead markers), or -1 if none. A
-    batch whose outputs exist but whose commit marker doesn't will be
-    REPLAYED on restart — retention/compaction must leave its partitions
-    alone (fold them and the replay would self-match against its own
-    state, silently emptying the batch — the r4 crash-replay bug,
-    reintroducible through careless compaction)."""
-    import os
-
-    commits = os.path.join(checkpoint_dir, "commits")
-    if not os.path.isdir(commits):
-        return -1
-    ids = [int(f) for f in os.listdir(commits) if f.isdigit()]
-    return max(ids, default=-1)
-
-
-def _fold_partitions(spark: SparkSession, path: str, ddl: str,
-                     fold_max: int | None, repartition, parts: list[str],
-                     ) -> None:
-    """Rewrite a batch_id-partitioned state dir: batches <= fold_max (and
-    the prior -1 generation) merge into batch_id=-1; newer (possibly
-    uncommitted) batches are rewritten under their own batch_id. The swap
-    is crash-safe delete+rename (sibling .compact dir)."""
-    df = spark.read.schema(ddl + ", batch_id long").parquet(path)
-    if fold_max is None:
-        folded = df.drop("batch_id").withColumn(
-            "batch_id", F.lit(-1).cast("long"))
-    else:
-        folded = df.withColumn(
-            "batch_id",
-            F.when(F.col("batch_id") <= F.lit(fold_max),
-                   F.lit(-1).cast("long")).otherwise(F.col("batch_id")))
-    (repartition(folded)
-     .write.mode("overwrite").partitionBy("batch_id", *parts)
-     .parquet(path + ".compact"))
-    _fs_swap(spark, path + ".compact", path)
-
-
 def compact_dedup_state(spark: SparkSession, out_dir: str,
                         sig_files: int = 8,
                         checkpoint_dir: str | None = None) -> None:
@@ -424,33 +375,23 @@ def compact_dedup_state(spark: SparkSession, out_dir: str,
     caller asserts a CLEAN shutdown (everything folds, the original
     behavior).
 
-    Crash safety: the new generation is written to a sibling `.compact`
-    dir and swapped in with delete+rename. If the swap itself dies between
-    the two operations, state is rebuildable — it is a pure function of
-    clean/ (signatures + band rows of the kept docs), no information lives
-    only in state/."""
-    import os
-
+    Crash safety: a rerun recovers a fold that died (fold_batches), and
+    state is rebuildable anyway — a pure function of clean/ (signatures +
+    band rows of the kept docs). An absent table is skipped."""
     fold_max = (None if checkpoint_dir is None
-                else last_committed_batch(checkpoint_dir))
-    if os.path.isdir(out_dir.rstrip("/") + "/state/bands"):
-        _fold_partitions(
-            spark, out_dir.rstrip("/") + "/state/bands",
-            "band int, key long, doc_id long, kb int", fold_max,
-            lambda df: df.repartition("batch_id", "kb"), ["kb"])
-    # round-robin repartition: ≤ sig_files files PER surviving batch_id
-    # dir — file count stays ≤ sig_files × generations
-    if os.path.isdir(out_dir.rstrip("/") + "/state/sigs"):
-        _fold_partitions(
-            spark, out_dir.rstrip("/") + "/state/sigs",
-            "doc_id long, sig array<long>", fold_max,
-            lambda df: df.repartition(sig_files), [])
-    if os.path.isdir(out_dir.rstrip("/") + "/state/lines"):
-        # the line-dedup stream's hash state — same fold, hb partitions
-        _fold_partitions(
-            spark, out_dir.rstrip("/") + "/state/lines",
-            "h long, hb int", fold_max,
-            lambda df: df.repartition("batch_id", "hb"), ["hb"])
+                else last_committed_batch(spark, checkpoint_dir))
+    state = out_dir.rstrip("/") + "/state"
+    for path, ddl, repartition, parts in (
+            (state + "/bands", "band int, key long, doc_id long, kb int",
+             lambda df: df.repartition("batch_id", "kb"), ["kb"]),
+            # round-robin repartition: ≤ sig_files files PER surviving
+            # batch_id dir — file count stays ≤ sig_files × generations
+            (state + "/sigs", "doc_id long, sig array<long>",
+             lambda df: df.repartition(sig_files), []),
+            # the line-dedup stream's hash state — hb partitions
+            (state + "/lines", "h long, hb int",
+             lambda df: df.repartition("batch_id", "hb"), ["hb"])):
+        fold_batches(spark, path, ddl, fold_max, repartition, parts)
 
 
 def compact_clean(spark: SparkSession, out_dir: str,
@@ -464,10 +405,10 @@ def compact_clean(spark: SparkSession, out_dir: str,
     its rows duplicated in -1). Row content is untouched; every reader of
     clean/ sees the identical document set."""
     fold_max = (None if checkpoint_dir is None
-                else last_committed_batch(checkpoint_dir))
+                else last_committed_batch(spark, checkpoint_dir))
     clean_dir = out_dir.rstrip("/") + "/clean"
     schema = spark.read.parquet(clean_dir).drop("batch_id").schema
     ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                     for f in schema.fields)
-    _fold_partitions(spark, clean_dir, ddl, fold_max,
-                     lambda df: df.repartition(files), [])
+    fold_batches(spark, clean_dir, ddl, fold_max,
+                 lambda df: df.repartition(files))

@@ -38,8 +38,8 @@ operator must join its own past).
 STATE GROWTH: state/links grows with distinct (page, target, anchor)
 triples — the same order as the corpus's external-link mass, i.e. the
 edge list any host-graph build materializes anyway. A long-lived stream
-folds the per-batch partitions with `compact_linkgraph_state` (same
-delete+rename generation swap as compact_dedup_state): partials
+folds the per-batch partitions with `compact_linkgraph_state`, two
+calls of the protocol's one fold (stream.fold_batches): partials
 re-aggregate at the same grain into one batch_id=-1 generation, so file
 count is bounded and the merge-on-read views get fewer, larger inputs.
 
@@ -56,7 +56,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from ..operators.linkgraph import URL_DOMAIN_RE, extract_links
-from .stream import drain, pages_stream, write_batch_partition
+from ..plans.ledger import read_declared
+from .stream import (drain, fold_batches, last_committed_batch, pages_stream,
+                     write_batch_partition)
 
 
 def _links_partial(pages: DataFrame) -> DataFrame:
@@ -107,9 +109,8 @@ _LINKS_DDL = ("src_domain string, dst_domain string, src_url string, "
 
 
 def _read_links(spark: SparkSession, out_dir: str) -> DataFrame:
-    return (spark.read.schema(_LINKS_DDL + ", batch_id long")
-            .parquet(out_dir.rstrip("/") + "/state/links")
-            .drop("batch_id"))
+    return read_declared(spark, out_dir.rstrip("/") + "/state/links",
+                         _LINKS_DDL + ", batch_id long").drop("batch_id")
 
 
 def read_host_graph(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -127,8 +128,8 @@ def read_host_graph(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def read_crawled_hosts(spark: SparkSession, out_dir: str) -> DataFrame:
     """Distinct host set of every page streamed so far (1 column: domain)."""
-    return (spark.read.schema("domain string, batch_id long")
-            .parquet(out_dir.rstrip("/") + "/state/hosts")
+    return (read_declared(spark, out_dir.rstrip("/") + "/state/hosts",
+                          "domain string, batch_id long")
             .drop("batch_id").distinct())
 
 
@@ -160,49 +161,23 @@ def compact_linkgraph_state(spark: SparkSession, out_dir: str,
                             checkpoint_dir: str | None = None) -> None:
     """Offline state maintenance: fold batch_id partitions into one
     batch_id=-1 generation, re-aggregating links at the partial grain (the
-    merge is associative, so compaction never changes any view's answer).
-    Same crash-safe delete+rename generation swap as compact_dedup_state;
-    run with the stream stopped.
+    merge is associative, so compaction never changes any view's answer),
+    and collapsing hosts to the distinct set. Both go through
+    stream.fold_batches; run with the stream stopped.
 
     Retention safety (r4 verdict #7, same argument as compact_dedup_state):
     with ``checkpoint_dir`` given, only COMMITTED batches fold — a crashed
     batch's partitions stay under their own batch_id, so the restart's
     idempotent re-write of that partition cannot double-count its links
     against a folded copy in the -1 generation."""
-    from .dedup_stream import _fs_swap, last_committed_batch
-
     fold_max = (None if checkpoint_dir is None
-                else last_committed_batch(checkpoint_dir))
-    links_dir = out_dir.rstrip("/") + "/state/links"
-    hosts_dir = out_dir.rstrip("/") + "/state/hosts"
-
-    raw = (spark.read.schema(_LINKS_DDL + ", batch_id long")
-           .parquet(links_dir))
-    fold = raw if fold_max is None else raw.filter(
-        F.col("batch_id") <= fold_max)
-    folded = (
-        fold.groupBy("src_domain", "dst_domain", "src_url", "anchor")
-        .agg(F.sum("n").alias("n"))
-        .withColumn("batch_id", F.lit(-1).cast("long"))
-    )
-    if fold_max is not None:
-        folded = folded.unionByName(
-            raw.filter(F.col("batch_id") > fold_max))
-    (folded.repartition(link_files)
-     .write.mode("overwrite").partitionBy("batch_id")
-     .parquet(links_dir + ".compact"))
-
-    raw_h = (spark.read.schema("domain string, batch_id long")
-             .parquet(hosts_dir))
-    fold_h = raw_h if fold_max is None else raw_h.filter(
-        F.col("batch_id") <= fold_max)
-    hosts = (fold_h.select("domain").distinct()
-             .withColumn("batch_id", F.lit(-1).cast("long")))
-    if fold_max is not None:
-        hosts = hosts.unionByName(raw_h.filter(F.col("batch_id") > fold_max))
-    (hosts.coalesce(1)
-     .write.mode("overwrite").partitionBy("batch_id")
-     .parquet(hosts_dir + ".compact"))
-
-    _fs_swap(spark, links_dir + ".compact", links_dir)
-    _fs_swap(spark, hosts_dir + ".compact", hosts_dir)
+                else last_committed_batch(spark, checkpoint_dir))
+    state = out_dir.rstrip("/") + "/state"
+    fold_batches(spark, state + "/links", _LINKS_DDL, fold_max,
+                 lambda df: df.repartition(link_files),
+                 merge=lambda df: df.groupBy(
+                     "src_domain", "dst_domain", "src_url", "anchor")
+                 .agg(F.sum("n").alias("n")))
+    fold_batches(spark, state + "/hosts", "domain string", fold_max,
+                 lambda df: df.coalesce(1),
+                 merge=lambda df: df.distinct())

@@ -20,6 +20,10 @@ defined here once:
   idempotent replay, exactly-once into the output tables (same write
   discipline as plans/ledger.py). Inside foreachBatch it is the
   multi-target fan-out (src/HttpProducer.cc:196-224).
+- `fold_batches` is its undo, the one retention fold every compaction
+  verb runs: committed batches (`last_committed_batch`) merge into one
+  batch_id=-1 generation, swapped in through plans/ledger.py's Hadoop-FS
+  helpers, so it works on any Hadoop path.
 
 Watermark on warc_ts bounds state for late pages; window aggregates emit
 per (window, sink) — the streaming twin of sink_metrics.
@@ -32,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 
+from ..plans.ledger import (hadoop_fs, list_names, path_exists, swap_dir,
+                            with_bucket)
 from ..plans.pipeline import parsed_routed, route
 
 SINK_COLS = ["url", "line_no", "record", "record_bytes", "parse_fail", "sink"]
@@ -56,6 +62,51 @@ def write_batch_partition(df: DataFrame, batch_id: int, path: str,
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("batch_id", *parts).parquet(path))
+
+
+def last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int:
+    """Highest micro-batch id the Structured Streaming checkpoint has
+    COMMITTED (the `commits/<id>` write-ahead markers), or -1 if none. A
+    batch whose outputs exist but whose commit marker doesn't will be
+    REPLAYED on restart — retention/compaction must leave its partitions
+    alone (fold them and the replay would self-match against its own
+    state, silently emptying the batch — the r4 crash-replay bug,
+    reintroducible through careless compaction)."""
+    return max((int(n) for n in list_names(spark, checkpoint_dir + "/commits")
+                if n.isdigit()), default=-1)
+
+
+def fold_batches(spark: SparkSession, path: str, ddl: str,
+                 fold_max: int | None, repartition, parts=(),
+                 merge=lambda df: df) -> None:
+    """Retention, the undo of write_batch_partition's per-batch growth:
+    rewrite the batch_id-partitioned table at `path` (columns `ddl`) so
+    batches <= `fold_max` (all of them when None, and the prior -1
+    generation) pass through `merge` and land in batch_id=-1, while newer
+    (possibly uncommitted) batches keep their own batch_id. `repartition`
+    sets the file layout of the new generation and `parts` its
+    sub-partitions below batch_id. The new generation is written to a
+    sibling `.compact` dir and swapped in with delete+rename (swap_dir);
+    run with the stream stopped. An absent table has nothing to fold; if
+    its `.compact` sibling exists, a swap died after its delete, and the
+    sibling (the only copy) is renamed into place before the fold."""
+    tmp = path + ".compact"
+    if not path_exists(spark, path):
+        if not path_exists(spark, tmp):
+            return
+        swap_dir(spark, tmp, path)
+    # a fold that died mid-write left partitions the overwrite would keep
+    fs, htmp = hadoop_fs(spark, tmp)
+    fs.delete(htmp, True)
+    df = spark.read.schema(ddl + ", batch_id long").parquet(path)
+    old = df if fold_max is None else df.filter(F.col("batch_id") <= fold_max)
+    folded = merge(old.drop("batch_id")).withColumn(
+        "batch_id", F.lit(-1).cast("long"))
+    if fold_max is not None:
+        folded = folded.unionByName(df.filter(F.col("batch_id") > fold_max))
+    (repartition(folded)
+     .write.mode("overwrite").partitionBy("batch_id", *parts).parquet(tmp))
+    swap_dir(spark, tmp, path)
 
 
 def write_batch_sinks(routed: DataFrame, batch_id: int, out_dir: str) -> None:
@@ -144,7 +195,6 @@ def run_stream_deliver(
     drain's per-batch progress records."""
     from ..operators.transport import deliver
     from ..operators.wire import batch_messages
-    from ..plans.ledger import with_bucket
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         routed = parsed_routed(batch_df.sparkSession, batch_df)

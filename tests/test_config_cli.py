@@ -211,6 +211,28 @@ def test_cli_run_and_status(spark, pages_small, tmp_path, capsys, monkeypatch):
     assert st2["rows_routed"] == run_out["rows_routed"]
 
 
+def test_cli_run_takes_buckets_from_the_stored_setting(
+        spark, pages_small, tmp_path, capsys, monkeypatch):
+    """`run` without --buckets commits as many buckets as the out_dir's
+    persisted ledger.buckets setting says (env > stored > default), not
+    the built-in 64."""
+    import json
+
+    from logport_spark.plans import ledger as L
+
+    pages_dir = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "out")
+    pages_small.write.parquet(pages_dir)
+    monkeypatch.delenv("LOGPORT_SPARK_LEDGER_BUCKETS", raising=False)
+    monkeypatch.setattr(cli, "_spark", lambda cpus=None: spark)
+    assert cli.main(["set", "--out", out_dir, "ledger.buckets", "8"]) == 0
+    capsys.readouterr()
+    assert cli.main(["run", "--pages", pages_dir, "--out", out_dir,
+                     "--run-id", "stored8"]) == 0
+    assert json.loads(capsys.readouterr().out)["buckets_committed"] == 8
+    assert L.read_ledger(spark, out_dir).count() == 8
+
+
 def test_cli_adopt_end_to_end(spark, tmp_path, capsys):
     """`adopt` forks a real command and ships stdout AND stderr as distinct
     substreams plus the exit event — one invocation, like the reference's

@@ -106,6 +106,53 @@ def test_repeated_run_id_returns_only_its_own_commits(
     assert L.read_ledger(spark, out).count() == 8
 
 
+def test_rerun_over_committed_ledger_writes_nothing(spark, tmp_path):
+    """A rerun over a fully committed ledger has nothing to commit: it
+    rewrites no sink file, appends no (empty) ledger file, runs only the
+    committed-ledger read and the input-fingerprint pass (the drift check
+    still holds), and returns an empty frame that plans no Scan
+    ExistingRDD."""
+    import os
+    import uuid
+
+    import pandas as pd
+
+    from logport_spark import datagen
+
+    pages = spark.createDataFrame(pd.DataFrame(datagen.gen_docs(range(300))),
+                                  schema=datagen.PAGES_DDL)
+    out = str(tmp_path / "out")
+    L.run_with_ledger(spark, pages, out, run_id="first", n_buckets=8)
+
+    def files(sub):
+        return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(os.path.join(out, sub)) for f in fs}
+
+    ledger_before, sinks_before = files("_ledger"), files("sinks")
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    prior = {k: sc.getLocalProperty(k) for k in props}
+    group = f"rerun-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        again = L.run_with_ledger(spark, pages, out, run_id="again",
+                                  n_buckets=8)
+    finally:
+        for k, v in prior.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert len(files("_ledger")) == len(ledger_before)
+    assert files("_ledger") == ledger_before
+    assert files("sinks") == sinks_before
+    assert len(jobs) <= 3, jobs
+    assert again.count() == 0
+    assert "ExistingRDD" not in \
+        again._jdf.queryExecution().executedPlan().toString()
+
+
 def test_empty_buckets_converge(spark, pages_small, tmp_path_factory):
     """Buckets that route zero rows (or hold no pages) still get committed
     ledger rows, so resume converges: exactly one ledger row per bucket ever,

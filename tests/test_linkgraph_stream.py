@@ -130,6 +130,60 @@ def test_linkgraph_compaction_preserves_answers(spark, lg_pages_dir,
     assert n_files <= 2
 
 
+def test_linkgraph_compaction_finishes_an_interrupted_swap(
+        spark, lg_pages_dir, tmp_path_factory):
+    """A swap that died between its delete and its rename leaves the new
+    generation only in the `.compact` sibling. The next compaction finishes
+    the rename instead of folding the absent table into an empty one."""
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("lg_swap_out"))
+    ckpt = str(tmp_path_factory.mktemp("lg_swap_ckpt"))
+    run_stream_linkgraph(spark, lg_pages_dir, out, ckpt, max_files=2)
+    g_before = _canon_graph(read_host_graph(spark, out))
+    h_before = {r["domain"] for r in read_crawled_hosts(spark, out).collect()}
+    for t in ("links", "hosts"):
+        shutil.move(f"{out}/state/{t}", f"{out}/state/{t}.compact")
+
+    # under dynamic overwrite an empty write would leave the sibling alone
+    # by accident; the fold must not depend on the session's mode
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(mode)
+    spark.conf.set(mode, "static")
+    try:
+        compact_linkgraph_state(spark, out, link_files=2,
+                                checkpoint_dir=ckpt)
+    finally:
+        spark.conf.set(mode, prior)
+
+    assert _canon_graph(read_host_graph(spark, out)) == g_before
+    assert {r["domain"] for r in
+            read_crawled_hosts(spark, out).collect()} == h_before
+    assert not os.path.exists(out + "/state/links.compact")
+
+
+def test_linkgraph_compaction_ignores_a_stale_compact_dir(
+        spark, lg_pages_dir, tmp_path_factory):
+    """A compaction that died mid-write leaves partitions in the `.compact`
+    sibling while the table itself is intact. The next compaction replaces
+    the whole sibling, so none of them is swapped in beside the new
+    generation."""
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("lg_stale_out"))
+    ckpt = str(tmp_path_factory.mktemp("lg_stale_ckpt"))
+    run_stream_linkgraph(spark, lg_pages_dir, out, ckpt, max_files=2)
+    g_before = _canon_graph(read_host_graph(spark, out))
+    links = out + "/state/links"
+    shutil.copytree(links + "/batch_id=0", links + ".compact/batch_id=99")
+
+    compact_linkgraph_state(spark, out, link_files=2, checkpoint_dir=ckpt)
+
+    assert {p for p in os.listdir(links)
+            if p.startswith("batch_id=")} == {"batch_id=-1"}
+    assert _canon_graph(read_host_graph(spark, out)) == g_before
+
+
 def test_linkgraph_compaction_spares_uncommitted_batch(spark, lg_pages_dir,
                                                        tmp_path_factory):
     """r4 verdict #7: with checkpoint_dir passed, a crashed (uncommitted)
@@ -137,9 +191,22 @@ def test_linkgraph_compaction_spares_uncommitted_batch(spark, lg_pages_dir,
     batch_id, so the restart's idempotent partition overwrite cannot
     double-count them against a folded copy — views unchanged after
     compact → replay → full compact."""
+    _spares_uncommitted_case(spark, lg_pages_dir, tmp_path_factory, "")
+
+
+def test_linkgraph_compaction_spares_uncommitted_batch_on_file_uri(
+        spark, lg_pages_dir, tmp_path_factory):
+    """The same crash, compaction and replay, every path handed over as a
+    file:// URI."""
+    _spares_uncommitted_case(spark, lg_pages_dir, tmp_path_factory,
+                             "file://")
+
+
+def _spares_uncommitted_case(spark, lg_pages_dir, tmp_path_factory, prefix):
     out = str(tmp_path_factory.mktemp("lg_retain_out"))
     ckpt = str(tmp_path_factory.mktemp("lg_retain_ckpt"))
-    run_stream_linkgraph(spark, lg_pages_dir, out, ckpt, max_files=1)
+    run_stream_linkgraph(spark, prefix + lg_pages_dir, prefix + out,
+                         prefix + ckpt, max_files=1)
     g_before = _canon_graph(read_host_graph(spark, out))
     last = max(int(f) for f in os.listdir(ckpt + "/commits")
                if f.isdigit())
@@ -150,7 +217,8 @@ def test_linkgraph_compaction_spares_uncommitted_batch(spark, lg_pages_dir,
     if os.path.exists(crc):
         os.remove(crc)
 
-    compact_linkgraph_state(spark, out, link_files=2, checkpoint_dir=ckpt)
+    compact_linkgraph_state(spark, prefix + out, link_files=2,
+                            checkpoint_dir=prefix + ckpt)
     parts = {p for p in os.listdir(out + "/state/links")
              if p.startswith("batch_id=")}
     assert parts == {"batch_id=-1", f"batch_id={last}"}, parts
@@ -158,11 +226,13 @@ def test_linkgraph_compaction_spares_uncommitted_batch(spark, lg_pages_dir,
     assert _canon_graph(read_host_graph(spark, out)) == g_before
 
     # restart replays the crashed batch; views unchanged
-    run_stream_linkgraph(spark, lg_pages_dir, out, ckpt, max_files=1)
+    run_stream_linkgraph(spark, prefix + lg_pages_dir, prefix + out,
+                         prefix + ckpt, max_files=1)
     assert _canon_graph(read_host_graph(spark, out)) == g_before
 
     # clean shutdown → full fold
-    compact_linkgraph_state(spark, out, link_files=2, checkpoint_dir=ckpt)
+    compact_linkgraph_state(spark, prefix + out, link_files=2,
+                            checkpoint_dir=prefix + ckpt)
     assert {p for p in os.listdir(out + "/state/links")
             if p.startswith("batch_id=")} == {"batch_id=-1"}
     assert _canon_graph(read_host_graph(spark, out)) == g_before

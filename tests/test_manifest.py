@@ -174,6 +174,24 @@ def test_update_manifest_incremental_append_and_compaction(spark, tmp_path):
     assert got == 101
 
 
+def test_empty_manifest_dir_rebuilds_in_full(spark, tmp_path):
+    """An overwrite of _manifest/ that died after Spark cleared the dir
+    leaves it empty: update_manifest treats that as no manifest and
+    rebuilds, instead of comparing cols against an empty column set."""
+    import os
+
+    from logport_spark.plans.manifest import update_manifest
+
+    p = str(tmp_path / "tbl")
+    _rows(spark).repartition(4).write.parquet(p)
+    os.makedirs(p + "/_manifest")
+    res = update_manifest(spark, p, ["ts"])
+    assert res == {"added": 4, "removed": 0, "kept": 0}
+    got = (pruned_read(spark, p, "ts", TS_LO, TS_LO + 100)
+           .filter(F.col("ts") <= TS_LO + 100).count())
+    assert got == 101
+
+
 def test_stale_manifest_is_conservative(spark, tmp_path):
     """r4 ADVICE (medium): files appended AFTER the manifest build carry no
     stats and must still be read (kept unconditionally), and manifest rows

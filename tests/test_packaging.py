@@ -142,6 +142,37 @@ def test_one_micro_batch_protocol():
                       "logport_spark/streaming/adopt.py::run_adopt"}
 
 
+def test_one_filesystem_layer():
+    """The pipeline touches the filesystem of its own tables through one
+    layer: plans/ledger.py's Hadoop-FS helpers (hadoop_fs is the only
+    getFileSystem call) and one fold (stream.fold_batches owns the
+    `.compact` generation dir). The modules that keep those tables call
+    no Python os.path / os.listdir / os.walk, which see local disk only."""
+    import io
+    import tokenize
+
+    sites = _code_sites({".getFileSystem", '".compact"'})
+    assert sites[".getFileSystem"] == {
+        "logport_spark/plans/ledger.py::hadoop_fs"}
+    assert sites['".compact"'] == {
+        "logport_spark/streaming/stream.py::fold_batches"}
+    pkg = os.path.join(REPO, "logport_spark")
+    paths = [os.path.join(pkg, "plans", m)
+             for m in ("ledger.py", "iterstate.py", "manifest.py")]
+    paths.append(os.path.join(pkg, "operators", "route.py"))
+    stream_dir = os.path.join(pkg, "streaming")
+    paths += [os.path.join(stream_dir, fn)
+              for fn in sorted(os.listdir(stream_dir)) if fn.endswith(".py")]
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            toks = [t.string for t in
+                    tokenize.generate_tokens(io.StringIO(f.read()).readline)
+                    if t.type in (tokenize.NAME, tokenize.OP)]
+        calls = {".".join(toks[i:i + 3:2]) for i in range(len(toks) - 2)
+                 if toks[i] == "os" and toks[i + 1] == "."}
+        assert not calls & {"os.path", "os.listdir", "os.walk"}, (path, calls)
+
+
 def test_small_tables_build_no_rdd_and_infer_no_schema():
     """Small tables stay in the driver: no list-built frame anywhere in the
     package (a parallelized RDD whose first action starts a Python worker

@@ -238,6 +238,16 @@ def test_compact_sinks_preserves_rows_and_bounds_files(spark, tmp_path_factory):
     sink partition to its byte-targeted file count via dynamic overwrite
     — row count AND content identical (value hash over every envelope),
     file count collapsed, untouched partitions left alone."""
+    _compact_sinks_case(spark, tmp_path_factory, "")
+
+
+def test_compact_sinks_preserves_rows_and_bounds_files_on_file_uri(
+        spark, tmp_path_factory):
+    """The same compaction, handed the table as a file:// URI."""
+    _compact_sinks_case(spark, tmp_path_factory, "file://")
+
+
+def _compact_sinks_case(spark, tmp_path_factory, prefix):
     import hashlib
     import os
 
@@ -263,13 +273,13 @@ def test_compact_sinks_preserves_rows_and_bounds_files(spark, tmp_path_factory):
 
     h0, f0 = state()
     assert any(n > 1 for n in f0.values())  # fragmented before
-    done = compact_sinks(spark, out, target_file_bytes=1 << 30)
+    done = compact_sinks(spark, prefix + out, target_file_bytes=1 << 30)
     h1, f1 = state()
     assert h1 == h0                          # content byte-identical
     assert all(n == 1 for n in f1.values())  # collapsed to the target
     assert set(done) == {s for s, n in f0.items() if n > 1} != set()
     # idempotent: a second pass finds nothing to do
-    assert compact_sinks(spark, out, target_file_bytes=1 << 30) == {}
+    assert compact_sinks(spark, prefix + out, target_file_bytes=1 << 30) == {}
 
 
 def test_kafka_sink_gate_and_row_shape(spark, pages_small):
@@ -455,6 +465,16 @@ def test_compact_dedup_state_preserves_drops_and_bounds_files(
     """compact_dedup_state merges batch partitions into one batch_id=-1
     generation: file count bounded, and a post-compaction batch still drops
     a near-dup of a pre-compaction doc (state semantics unchanged)."""
+    _compact_dedup_state_case(spark, tmp_path_factory, "")
+
+
+def test_compact_dedup_state_preserves_drops_and_bounds_files_on_file_uri(
+        spark, tmp_path_factory):
+    """The same retention, every path handed over as a file:// URI."""
+    _compact_dedup_state_case(spark, tmp_path_factory, "file://")
+
+
+def _compact_dedup_state_case(spark, tmp_path_factory, prefix):
     import glob
 
     from logport_spark.streaming.dedup_stream import (
@@ -467,9 +487,9 @@ def test_compact_dedup_state_preserves_drops_and_bounds_files(
     ckpt = str(tmp_path_factory.mktemp("dedup_compact_ckpt"))
     _write_docs(d, "b1", [(0, _DEDUP_BASE), (2, _DEDUP_UNIQ)])
     _write_docs(d, "b2", [(5, " ".join(reversed(_DEDUP_UNIQ.split())) + " tail")])
-    run_stream_minhash_dedup(spark, d, out, ckpt)
+    run_stream_minhash_dedup(spark, prefix + d, prefix + out, prefix + ckpt)
 
-    compact_dedup_state(spark, out, sig_files=2)
+    compact_dedup_state(spark, prefix + out, sig_files=2)
     band_files = glob.glob(out + "/state/bands/**/*.parquet", recursive=True)
     sig_files = glob.glob(out + "/state/sigs/**/*.parquet", recursive=True)
     assert all("batch_id=-1" in f for f in band_files + sig_files)
@@ -481,7 +501,7 @@ def test_compact_dedup_state_preserves_drops_and_bounds_files(
     # batch 3 after compaction: near-dup of batch-1 doc 0 must still drop
     _write_docs(d, "b3", [(10, _DEDUP_BASE + " extra"),
                           (11, "totally different words " * 5)])
-    run_stream_minhash_dedup(spark, d, out, ckpt)
+    run_stream_minhash_dedup(spark, prefix + d, prefix + out, prefix + ckpt)
     clean = {r["doc_id"] for r in
              spark.read.parquet(out + "/clean").select("doc_id").collect()}
     assert clean == {0, 2, 5, 11}, clean
@@ -497,6 +517,17 @@ def test_compaction_spares_uncommitted_batches_and_replay_stays_lossless(
     checkpoint_dir passed, the crashed batch's partitions survive under
     their own batch_id and the replay remains lossless; compact_clean
     bounds the output listing the same way."""
+    _compaction_spares_uncommitted_case(spark, tmp_path_factory, "")
+
+
+def test_compaction_spares_uncommitted_batches_and_replay_stays_lossless_on_file_uri(
+        spark, tmp_path_factory):
+    """The same crash, compaction and replay, every path handed over as a
+    file:// URI."""
+    _compaction_spares_uncommitted_case(spark, tmp_path_factory, "file://")
+
+
+def _compaction_spares_uncommitted_case(spark, tmp_path_factory, prefix):
     import glob
     import os
 
@@ -512,7 +543,7 @@ def test_compaction_spares_uncommitted_batches_and_replay_stays_lossless(
     _write_docs(d, "b1", [(0, _DEDUP_BASE), (2, _DEDUP_UNIQ)])
     _write_docs(d, "b2", [(5, " ".join(reversed(_DEDUP_UNIQ.split()))
                            + " tail")])
-    run_stream_minhash_dedup(spark, d, out, ckpt)
+    run_stream_minhash_dedup(spark, prefix + d, prefix + out, prefix + ckpt)
 
     # crash: batch 1's outputs are on disk, its commit marker is not
     os.remove(ckpt + "/commits/1")
@@ -520,8 +551,9 @@ def test_compaction_spares_uncommitted_batches_and_replay_stays_lossless(
     if os.path.exists(crc):
         os.remove(crc)
 
-    compact_dedup_state(spark, out, sig_files=2, checkpoint_dir=ckpt)
-    compact_clean(spark, out, checkpoint_dir=ckpt, files=2)
+    compact_dedup_state(spark, prefix + out, sig_files=2,
+                        checkpoint_dir=prefix + ckpt)
+    compact_clean(spark, prefix + out, checkpoint_dir=prefix + ckpt, files=2)
     for sub in ("state/sigs", "state/bands", "clean"):
         parts = {p for p in os.listdir(f"{out}/{sub}")
                  if p.startswith("batch_id=")}
@@ -529,7 +561,7 @@ def test_compaction_spares_uncommitted_batches_and_replay_stays_lossless(
 
     # restart: batch 1 replays against state that still EXCLUDES its own
     # partition — no self-match, no lost docs
-    run_stream_minhash_dedup(spark, d, out, ckpt)
+    run_stream_minhash_dedup(spark, prefix + d, prefix + out, prefix + ckpt)
     clean = {r["doc_id"] for r in
              spark.read.parquet(out + "/clean").select("doc_id").collect()}
     assert clean == {0, 2, 5}, f"replay lost docs: {clean}"
@@ -537,14 +569,15 @@ def test_compaction_spares_uncommitted_batches_and_replay_stays_lossless(
     # stream moves on: a near-dup of a folded (batch-0) doc still drops
     _write_docs(d, "b3", [(10, _DEDUP_BASE + " extra"),
                           (11, "totally different words " * 5)])
-    run_stream_minhash_dedup(spark, d, out, ckpt)
+    run_stream_minhash_dedup(spark, prefix + d, prefix + out, prefix + ckpt)
     clean = {r["doc_id"] for r in
              spark.read.parquet(out + "/clean").select("doc_id").collect()}
     assert clean == {0, 2, 5, 11}, clean
 
     # clean shutdown → full fold: file count bounded by constant × 1 gen
-    compact_dedup_state(spark, out, sig_files=2, checkpoint_dir=ckpt)
-    compact_clean(spark, out, checkpoint_dir=ckpt, files=2)
+    compact_dedup_state(spark, prefix + out, sig_files=2,
+                        checkpoint_dir=prefix + ckpt)
+    compact_clean(spark, prefix + out, checkpoint_dir=prefix + ckpt, files=2)
     for sub, cap in (("state/sigs", 2), ("clean", 2)):
         parts = {p for p in os.listdir(f"{out}/{sub}")
                  if p.startswith("batch_id=")}
