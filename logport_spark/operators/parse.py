@@ -292,8 +292,11 @@ def json_mid_udf(line: pd.Series) -> pd.DataFrame:
       floats via PyFloat_Type.tp_repr directly (no subclass hook), so the
       parse_float hook flags float-BEARING docs and only those take the
       pure-Python sorted-compact re-serialization; float-free docs — the
-      entire bench corpus — keep the C-speed encoder."""
-    dumps, loads, jq = json.dumps, json.loads, json_quote
+      entire bench corpus — keep the C-speed encoder.
+
+    The decoder and encoder are built once per Arrow batch: json.loads and
+    json.dumps with keyword arguments build a new one for every line."""
+    jq = json_quote
 
     def _reject(_tok):
         raise ValueError("non-finite JSON constant (nlohmann rejects)")
@@ -304,6 +307,9 @@ def json_mid_udf(line: pd.Series) -> pd.DataFrame:
         has_float[0] = True
         return float(tok)
 
+    loads = json.JSONDecoder(parse_constant=_reject, parse_float=_pf).decode
+    dumps = json.JSONEncoder(sort_keys=True, separators=(",", ":"),
+                             ensure_ascii=False, allow_nan=False).encode
     mids, objs, fails = [], [], []
     for ln in line.to_numpy():
         if ln is None:
@@ -311,12 +317,8 @@ def json_mid_udf(line: pd.Series) -> pd.DataFrame:
             continue
         try:
             has_float[0] = False
-            obj = loads(ln, parse_constant=_reject, parse_float=_pf)
-            if has_float[0]:
-                body = _nlohmann_dumps(obj)
-            else:
-                body = dumps(obj, sort_keys=True, separators=(",", ":"),
-                             ensure_ascii=False, allow_nan=False)
+            obj = loads(ln)
+            body = _nlohmann_dumps(obj) if has_float[0] else dumps(obj)
             mids.append(',"log_obj":' + body)
             objs.append(True), fails.append(False)
         except ValueError:

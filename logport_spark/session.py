@@ -9,7 +9,16 @@ chosen to survive a 1000-executor / 100 TB deployment:
   overridden to ~2-3x total cores; AQE coalesces the tail),
 - UTC session timezone (deterministic `@timestamp` derivation from warc_ts),
 - dynamic partition overwrite (idempotent per-bucket sink rewrites — the
-  exactly-once half of the ledger protocol, see plans/ledger.py).
+  exactly-once half of the ledger protocol, see plans/ledger.py),
+- Python workers forked from `logport_spark.worker_daemon`
+  (`spark.python.daemon.module`): `pyspark.daemon` with a guard that stops
+  every task re-reading pyspark.zip and the spark-core jar on CPython 3.11.
+  On a 4-core VM (Spark 4.1.2, CPython 3.11.7, 50 trivial 4-task jobs)
+  that cut a Python task's worker CPU from 82-84 ms to 6-7 ms, and the
+  daemon's and four workers' start from 0.88 to 0.56 CPU-s,
+- the checkout root on the workers' PYTHONPATH (`spark.executorEnv`),
+  merged before any value the caller passes, so the workers import the
+  driver's own package (and the daemon) from any working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +27,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory `logport_spark` is imported from: the checkout, or the
+# --py-files zip
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -44,8 +56,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "logport_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    given = extra_conf.get("spark.executorEnv.PYTHONPATH")
+    extra_conf["spark.executorEnv.PYTHONPATH"] = (
+        ROOT + os.pathsep + given if given else ROOT)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -174,3 +174,67 @@ def test_log_obj_numeric_dialect(spark):
     for k, (_, want_obj) in cases.items():
         frag = f',"log_obj":{want_obj}'
         assert frag in got[k], f"case {k}: {frag!r} not in {got[k]!r}"
+
+
+def test_one_udf_batch_keeps_row_state_per_row(monkeypatch):
+    """json_mid_udf builds its decoder and encoder once per Arrow batch.
+    In one batch a float-bearing line is followed by a float-free one and a
+    line that fails after a float is followed by a valid one: every row
+    must equal its own per-line json.loads/json.dumps, and only the
+    float-bearing rows take the Grisu2 path (the float flag is per row)."""
+    import pandas as pd
+
+    from logport_spark.operators import parse
+
+    def per_line(ln):
+        floats = []
+
+        def pf(tok):
+            floats.append(tok)
+            return float(tok)
+
+        def reject(_tok):
+            raise ValueError(_tok)
+
+        try:
+            obj = json.loads(ln, parse_constant=reject, parse_float=pf)
+            body = (parse._nlohmann_dumps(obj) if floats else
+                    json.dumps(obj, sort_keys=True, separators=(",", ":"),
+                               ensure_ascii=False, allow_nan=False))
+            return ',"log_obj":' + body, True, False
+        except ValueError:
+            return ',"log":' + parse.json_quote(ln), False, True
+
+    lines = [
+        '{"f":1e15,"a":[1,2]}',     # float: Grisu2 1e+15, repr 1e15 as 1000000000000000.0
+        '{"z":1,"y":"\\u00e9x"}',  # float-free right after a float row
+        '{"g":2.5,"h":',            # fails after its parser saw a float
+        '{"k":[1,{"j":null}]}',     # valid and float-free after the failure
+        None,
+        '[1e400]',                  # overflows to inf: falls back to "log"
+        '[NaN]',                    # rejected constant
+        '[true,-0.0]',
+        '{"i":' + str(10**40) + '}',
+    ]
+    want = [(None, None, None) if ln is None else per_line(ln) for ln in lines]
+    # the test has power: the float row's bytes differ between the two paths
+    assert json.dumps({"a": [1, 2], "f": 1e15}, separators=(",", ":")) \
+        != parse._nlohmann_dumps({"a": [1, 2], "f": 1e15})
+
+    real, top, depth = parse._nlohmann_dumps, [], [0]
+
+    def spy(o):
+        if depth[0] == 0:
+            top.append(o)
+        depth[0] += 1
+        try:
+            return real(o)
+        finally:
+            depth[0] -= 1
+
+    monkeypatch.setattr(parse, "_nlohmann_dumps", spy)
+    out = parse.json_mid_udf.func(pd.Series(lines, dtype=object))
+    got = [(None, None, None) if m is None else (m, bool(o), bool(f))
+           for m, o, f in zip(out["mid"], out["is_obj"], out["parse_fail"])]
+    assert got == want
+    assert top == [{"f": 1e15, "a": [1, 2]}, [float("inf")], [True, -0.0]]

@@ -86,6 +86,28 @@ def test_copied_tree_runs_its_own_code(tmp_path):
     assert data_dir == str(copy / "data"), data_dir
 
 
+def test_workers_import_the_package_from_any_directory(tmp_path):
+    """A session started outside the checkout, with PYTHONPATH unset, runs
+    json_mid_udf: its Python workers (and their daemon,
+    logport_spark.worker_daemon) find the package through the checkout root
+    get_spark puts on spark.executorEnv.PYTHONPATH."""
+    child = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from logport_spark.operators.parse import json_mid_udf
+        from logport_spark.session import get_spark
+
+        spark = get_spark("udf_elsewhere", cpus=2)
+        df = spark.createDataFrame([('{{"b":1,"a":[2.5]}}',), ("[",)], "line string")
+        print("MIDS", [r.m for r in df.select(json_mid_udf("line").mid.alias("m")).collect()])
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run([sys.executable, "-c", child], cwd=str(tmp_path),
+                       env=env, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert """MIDS [',"log_obj":{"a":[2.5],"b":1}', ',"log":"["']""" in r.stdout
+
+
 def _code_sites(words: set[str], subdir: str = "logport_spark") -> dict:
     """{word: {"<module path>::<enclosing function>"}} for every code token
     in `words` under `subdir`: a name, an attribute ('.x') or a string
