@@ -10,7 +10,9 @@ path except none at all — everything is JVM expressions):
 - MinHash+LSH:  k=64 xxhash64 permutations → 16 bands × 4 rows → band-bucket
   self-join yields candidates → candidates verified with exact Jaccard.
   At 100 TB this is the scale path: the only shuffle is on (band, band_key),
-  and verification touches candidate pairs only.
+  and verification touches candidate pairs only. One core (shingle_hashes,
+  minhash_signatures_h64, lsh_bands, exact_jaccard) serves the batch pairs,
+  the fuzzy contamination scan and the streaming dedup.
 - SimHash:      60-bit signature from md5-per-token bit votes (md5 so the
   DuckDB oracle reproduces it bit-for-bit); near-dup pairs found by the
   4-band pigeonhole trick (hamming ≤ 3 ⇒ ≥1 of 4 15-bit bands equal) —
@@ -134,8 +136,25 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.5,
 
 # ---------------------------------------------------------- MinHash+LSH ----
 
+# signature width and banding; the streaming dedup persists signatures and
+# band keys of this shape (streaming/dedup_stream.py)
+NUM_HASHES = 64
+BANDS = 16
 
-def minhash_signatures_h64(shingle_hashes: DataFrame, num_hashes: int = 64) -> DataFrame:
+
+def shingle_hashes(docs: DataFrame, n: int = 3, text_col: str = "text",
+                   id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, h64): each distinct shingle hashed to 8 bytes once, before
+    anything shuffles — a third of the ~25-byte shingle string. Jaccard
+    over distinct 64-bit shingle hashes equals Jaccard over shingle sets up
+    to hash collisions (~n²/2^65 — immaterial beside MinHash's own
+    probabilistic banding)."""
+    return doc_shingles(docs, n, text_col, id_col).select(
+        "doc_id", F.xxhash64(F.col("sh")).alias("h64"))
+
+
+def minhash_signatures_h64(shingle_hashes: DataFrame,
+                           num_hashes: int = NUM_HASHES) -> DataFrame:
     """k min-hashes per doc from pre-hashed shingles (doc_id, h64):
     sig_i = min over shingles of xxhash64(i, h64). Each shingle string is
     hashed once upstream, so the k permutations re-hash only an 8-byte
@@ -172,15 +191,30 @@ def cap_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None) -> D
     return banded.join(over, keys, "left_anti")
 
 
-def lsh_candidates(sig: DataFrame, bands: int = 16, rows_per_band: int = 4,
-                   max_bucket: int | None = None) -> DataFrame:
-    """Band the signature, bucket-join docs sharing any band. (d1 < d2)."""
-    band_keys = F.array(*[
-        F.xxhash64(F.lit(b), *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)])
+def lsh_bands(sig: DataFrame, bands: int = BANDS,
+              rows_per_band: int = NUM_HASHES // BANDS,
+              max_bucket: int | None = None,
+              id_col: str = "doc_id") -> DataFrame:
+    """(id_col, band, key): one row per signature band, key =
+    xxhash64(band, its rows_per_band min-hashes), over-full buckets capped
+    (cap_buckets). The streaming dedup persists these rows as its band
+    state, so the key expression is a state format: changing it orphans
+    every existing state/bands directory."""
+    keys = F.array(*[
+        F.xxhash64(F.lit(b), *[F.col("sig")[b * rows_per_band + r]
+                               for r in range(rows_per_band)])
         for b in range(bands)
     ])
-    banded = sig.select("doc_id", F.posexplode(band_keys).alias("band", "key"))
-    banded = cap_buckets(banded, ["band", "key"], max_bucket)
+    banded = sig.select(F.col("doc_id").alias(id_col),
+                        F.posexplode(keys).alias("band", "key"))
+    return cap_buckets(banded, ["band", "key"], max_bucket)
+
+
+def lsh_candidates(sig: DataFrame, bands: int = BANDS,
+                   rows_per_band: int = NUM_HASHES // BANDS,
+                   max_bucket: int | None = None) -> DataFrame:
+    """Band the signature, bucket-join docs sharing any band. (d1 < d2)."""
+    banded = lsh_bands(sig, bands, rows_per_band, max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -191,76 +225,54 @@ def lsh_candidates(sig: DataFrame, bands: int = 16, rows_per_band: int = 4,
     )
 
 
-# the one live cached shingle table across batch minhash_lsh_pairs calls
-# (see its docstring); module-level so the leak is bounded at one entry
-_last_sh_cache: DataFrame | None = None
+def exact_jaccard(pairs: DataFrame, left: DataFrame, right: DataFrame,
+                  a: str = "d1", b: str = "d2") -> DataFrame:
+    """Exact shingle-set Jaccard for candidate pairs only: `pairs` holds
+    (a, b) ids, `left`/`right` the two sides' shingle hashes (doc_id, h64)
+    — the same table for a self-join. Returns (a, b, common, n1, n2,
+    jaccard), jaccard unrounded; the caller filters and shapes."""
+    x = left.select(F.col("doc_id").alias(a), F.col("h64").alias("_h"))
+    y = right.select(F.col("doc_id").alias(b), F.col("h64").alias("_h"))
+    common = (pairs.join(x, a).join(y, [b, "_h"])
+              .groupBy(a, b).agg(F.count(F.lit(1)).alias("common")))
+    n1 = x.groupBy(a).agg(F.count(F.lit(1)).alias("n1"))
+    n2 = y.groupBy(b).agg(F.count(F.lit(1)).alias("n2"))
+    return (common.join(n1, a).join(n2, b)
+            .withColumn("jaccard", F.col("common")
+                        / (F.col("n1") + F.col("n2") - F.col("common"))))
 
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
-                      num_hashes: int = 64, bands: int = 16,
+                      num_hashes: int = NUM_HASHES, bands: int = BANDS,
                       max_bucket: int | None = None) -> DataFrame:
     """MinHash+LSH candidates, then exact-Jaccard verification of candidates
     only. Returns (d1, d2, jaccard) — at high thresholds this equals the
     exact all-pairs result with near-certainty, at a fraction of the join.
 
-    The cached intermediate is (doc_id, xxhash64(shingle)) — 8 bytes per
-    shingle instead of the ~25-byte shingle string (a 3x cut in cached and
-    joined bytes); Jaccard over distinct 64-bit shingle hashes equals
-    Jaccard over shingle sets up to hash collisions (~n²/2^65 — immaterial
-    beside MinHash's own probabilistic banding).
-
-    Cache lifetime (r6): each call releases the PREVIOUS call's cached
-    shingle table before minting its own, so repeated batch invocations in
-    one application hold at most one live cache entry instead of leaking
-    one per call (the streaming path manages its own persist/unpersist and
-    never enters here). Unpersist is safe even if the prior result is
-    still lazily held — Spark just recomputes it — but note the contract:
-    EVALUATE one call's result before minting the next, or the earlier
-    plan silently forfeits its cache and re-runs the shingle pass once
-    per reference (~4x). Single-threaded mint-then-consume callers (every
-    caller in this repo) are unaffected; concurrent minting from driver
-    threads should manage its own persist lifecycle instead."""
-    global _last_sh_cache
-    if _last_sh_cache is not None:
-        try:
-            _last_sh_cache.unpersist()
-        except Exception:
-            pass
-    sh = doc_shingles(docs, n).select(
-        "doc_id", F.xxhash64(F.col("sh")).alias("h64")).cache()
-    _last_sh_cache = sh
+    The shingle hashes feed the signatures and the verify, so this call
+    materializes them once with an eager localCheckpoint: its blocks live
+    as long as the returned DataFrame, and no cache-manager entry lets
+    another query share or drop them. (A lazy one runs after its building
+    plan may be garbage: its tasks then log "attempted to access
+    non-existent accumulator".)"""
+    sh = shingle_hashes(docs, n).localCheckpoint(eager=True)
     return lsh_verified_pairs(sh, minhash_signatures_h64(sh, num_hashes),
                               threshold=threshold, bands=bands,
                               num_hashes=num_hashes, max_bucket=max_bucket)
 
 
 def lsh_verified_pairs(sh: DataFrame, sig: DataFrame, threshold: float = 0.8,
-                       bands: int = 16, num_hashes: int = 64,
+                       bands: int = BANDS, num_hashes: int = NUM_HASHES,
                        max_bucket: int | None = None) -> DataFrame:
-    """minhash_lsh_pairs' mining+verify core over PRECOMPUTED shingle
-    hashes (doc_id, h64) and signatures (doc_id, sig) — factored so a
-    caller that needs the signatures for something else too (the
-    streaming protocol persists them as cross-batch state) mints them
-    once instead of twice per batch. Same result, same plan shape."""
+    """minhash_lsh_pairs' mining+verify over PRECOMPUTED shingle hashes
+    (doc_id, h64) and signatures (doc_id, sig) — factored so a caller that
+    needs the signatures for something else too (the streaming protocol
+    persists them as cross-batch state) mints them once instead of twice
+    per batch. Same result, same plan shape."""
     cands = lsh_candidates(sig, bands, num_hashes // bands, max_bucket)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # exact common-shingle counts, but only for LSH candidate pairs
-    common = (
-        cands.alias("c")
-        .join(sh.alias("x"), F.col("c.d1") == F.col("x.doc_id"))
-        .join(sh.alias("y"), (F.col("c.d2") == F.col("y.doc_id")) & (F.col("x.h64") == F.col("y.h64")))
-        .groupBy("c.d1", "c.d2")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    j = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
-    return (
-        common.join(s1, "d1").join(s2, "d2")
-        .withColumn("jaccard", F.round(j, 4))
-        .filter(j >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    return (exact_jaccard(cands, sh, sh)
+            .filter(F.col("jaccard") >= threshold)
+            .select("d1", "d2", F.round("jaccard", 4).alias("jaccard")))
 
 
 # ---------------------------------------------------------- contamination ----
@@ -795,10 +807,8 @@ def ngram_contamination(train: DataFrame, test: DataFrame, n: int = 13,
     one shuffle on h64 joins test shingles against it (left semi), then a
     per-doc count. No text crosses the shuffle; at 10^12 train docs the
     distinct-hash table is the dedup-standard bloom/semi-join shape."""
-    tr = (doc_shingles(train, n, text_col, id_col)
-          .select(F.xxhash64(F.col("sh")).alias("h64")).distinct())
-    te = doc_shingles(test, n, text_col, id_col).select(
-        "doc_id", F.xxhash64(F.col("sh")).alias("h64"))
+    tr = shingle_hashes(train, n, text_col, id_col).select("h64").distinct()
+    te = shingle_hashes(test, n, text_col, id_col)
     totals = te.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (te.join(tr, "h64", "left_semi")
             .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_hits")))
@@ -819,8 +829,9 @@ def ngram_contamination(train: DataFrame, test: DataFrame, n: int = 13,
 
 
 def minhash_contamination(train: DataFrame, test: DataFrame, n: int = 3,
-                          threshold: float = 0.8, num_hashes: int = 64,
-                          bands: int = 16, max_bucket: int | None = None,
+                          threshold: float = 0.8,
+                          num_hashes: int = NUM_HASHES, bands: int = BANDS,
+                          max_bucket: int | None = None,
                           text_col: str = "text",
                           id_col: str = "doc_id") -> DataFrame:
     """FUZZY eval decontamination — the near-duplicate companion to
@@ -835,7 +846,8 @@ def minhash_contamination(train: DataFrame, test: DataFrame, n: int = 3,
     id among the highest-Jaccard matches (deterministic evidence pointer).
 
     Plan shape (the 10^12-train-doc story): both sides collapse to 8-byte
-    shingle hashes before any shuffle; MinHash signatures by one groupBy
+    shingle hashes before any shuffle, each materialized once by this call
+    (an eager localCheckpoint, as in minhash_lsh_pairs); MinHash signatures by one groupBy
     per side; candidates from a test-banded × train-banded (band, key)
     equi-join — never a self-join, so the (huge) train side joins the
     (small) eval side directly and AQE can broadcast the eval bands;
@@ -843,50 +855,25 @@ def minhash_contamination(train: DataFrame, test: DataFrame, n: int = 3,
     `minhash_lsh_pairs` argument. Capture at threshold 0.8 with 16×4
     banding is 1-(1-0.8^4)^16 ≈ 0.9998 per pair — the same guarantee the
     dedup contract query already relies on."""
-    sh_tr = doc_shingles(train, n, text_col, id_col).select(
-        F.col("doc_id").alias("train_id"),
-        F.xxhash64(F.col("sh")).alias("h64")).cache()
-    sh_te = doc_shingles(test, n, text_col, id_col).select(
-        "doc_id", F.xxhash64(F.col("sh")).alias("h64")).cache()
-    sig_tr = minhash_signatures_h64(
-        sh_tr.select(F.col("train_id").alias("doc_id"), "h64"), num_hashes)
-    sig_te = minhash_signatures_h64(sh_te, num_hashes)
+    sh_tr = shingle_hashes(train, n, text_col, id_col).localCheckpoint(
+        eager=True)
+    sh_te = shingle_hashes(test, n, text_col, id_col).localCheckpoint(
+        eager=True)
     rows = num_hashes // bands
-
-    def _banded(sig: DataFrame, out_id: str) -> DataFrame:
-        keys = F.array(*[
-            F.xxhash64(F.lit(b), *[F.col("sig")[b * rows + r]
-                                   for r in range(rows)])
-            for b in range(bands)
-        ])
-        banded = sig.select(F.col("doc_id").alias(out_id),
-                            F.posexplode(keys).alias("band", "key"))
-        return cap_buckets(banded, ["band", "key"], max_bucket)
-
-    cands = (_banded(sig_te, "doc_id")
-             .join(_banded(sig_tr, "train_id"), ["band", "key"])
+    cands = (lsh_bands(minhash_signatures_h64(sh_te, num_hashes), bands,
+                       rows, max_bucket)
+             .join(lsh_bands(minhash_signatures_h64(sh_tr, num_hashes),
+                             bands, rows, max_bucket, id_col="train_id"),
+                   ["band", "key"])
              .select("doc_id", "train_id").distinct())
-    # exact common-shingle counts for candidate (test, train) pairs only
-    tr_h = sh_tr.select(F.col("train_id").alias("_tid"),
-                        F.col("h64").alias("_h"))
-    common = (
-        cands.join(sh_te, "doc_id")
-        .join(tr_h, (F.col("train_id") == F.col("_tid"))
-              & (F.col("h64") == F.col("_h")))
-        .groupBy("doc_id", "train_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sz_te = sh_te.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_te"))
-    sz_tr = sh_tr.groupBy("train_id").agg(F.count(F.lit(1)).alias("n_tr"))
-    j = F.col("common") / (F.col("n_te") + F.col("n_tr") - F.col("common"))
-    flagged = (common.join(sz_te, "doc_id").join(sz_tr, "train_id")
-               .withColumn("jac", j).filter(F.col("jac") >= threshold))
-    best = F.min(F.struct((-F.col("jac")).alias("nj"),
+    flagged = (exact_jaccard(cands, sh_te, sh_tr, "doc_id", "train_id")
+               .filter(F.col("jaccard") >= threshold))
+    best = F.min(F.struct((-F.col("jaccard")).alias("nj"),
                           F.col("train_id").alias("tid")))
     return (
         flagged.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_matches"),
-             F.round(F.max("jac"), 4).alias("max_jaccard"),
+             F.round(F.max("jaccard"), 4).alias("max_jaccard"),
              best.alias("_b"))
         .select("doc_id", "n_matches", "max_jaccard",
                 F.col("_b.tid").alias("top_train_id"))

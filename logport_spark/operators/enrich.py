@@ -91,12 +91,19 @@ def enrich(df: DataFrame, lookups: dict[str, DataFrame]) -> DataFrame:
 
     Unmatched domains/langs stay (nulls) — they fall through to the default
     route, mirroring logport's settings-precedence defaults
-    (src/LogPort.cc:961-1048).
+    (src/LogPort.cc:961-1048). So does a category the routes table has no
+    row for (an unwatched one): route_key is the category only when it is
+    one of the routes' keys. The keys come from the routes lookup, a
+    driver-built LocalRelation, so reading them runs no job and the test is
+    a literal IN, not a join.
     """
     domain_tld = lookups["domain_tld"].select("domain", "tld", "category")
     lang_locale = lookups["lang_locale"].select("lang", "locale")
+    keys = [r.route_key
+            for r in lookups["routes"].select("route_key").collect()]
     out = df.join(F.broadcast(domain_tld), "domain", "left")
     out = out.join(F.broadcast(lang_locale), "lang", "left")
     return out.withColumn(
-        "route_key", F.coalesce(F.col("category"), F.lit(DEFAULT_ROUTE_KEY))
+        "route_key", F.when(F.col("category").isin(keys), F.col("category"))
+        .otherwise(F.lit(DEFAULT_ROUTE_KEY))
     )

@@ -31,6 +31,11 @@ from pyspark.sql import SparkSession
 # --py-files zip
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# a third of physical memory, at least 2g: a heap past the box's RAM lets
+# the JVM grow until the kernel kills it; the rest is for Python workers
+DEFAULT_DRIVER_MEM = "{}g".format(max(2, os.sysconf("SC_PHYS_PAGES")
+                                      * os.sysconf("SC_PAGE_SIZE")
+                                      // 3 // 2**30))
 
 
 def get_spark(
@@ -53,7 +58,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM",
+                                                     DEFAULT_DRIVER_MEM))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "logport_spark.worker_daemon")

@@ -12,6 +12,11 @@ design inside foreachBatch:
     state/sigs  — (doc_id, sig ARRAY<LONG>[64])            ~520 B/doc
     state/bands — (band, key, doc_id), 16 rows/doc          ~400 B/doc
 
+  Signatures and band keys come from the MinHash core in
+  operators/dedup.py (shingle_hashes, minhash_signatures_h64, lsh_bands);
+  this module signs and bands nothing itself, so the state it writes is
+  the batch operators' shape exactly.
+
   per micro-batch:
     1. in-batch near-dup pairs with the batch-local EXACT-verify miner
        (operators/dedup.lsh_verified_pairs over the batch's shingle
@@ -71,36 +76,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from ..operators.dedup import (
-    doc_shingles,
+    NUM_HASHES,
+    lsh_bands,
     lsh_verified_pairs,
     minhash_signatures_h64,
+    shingle_hashes,
 )
 from ..plans.ledger import plan_bytes, read_declared
 from .stream import (drain, fold_batches, last_committed_batch, pages_stream,
                      write_batch_partition)
-
-NUM_HASHES = 64
-BANDS = 16
-ROWS_PER_BAND = NUM_HASHES // BANDS
-
-
-def doc_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sig) MinHash signatures for a document batch."""
-    sh = doc_shingles(docs, n).select(
-        "doc_id", F.xxhash64(F.col("sh")).alias("h64"))
-    return minhash_signatures_h64(sh, NUM_HASHES)
-
-
-def band_rows(sig: DataFrame) -> DataFrame:
-    """(band, key, doc_id) LSH band rows — the join-key state shape."""
-    band_keys = F.array(*[
-        F.xxhash64(F.lit(b), *[F.col("sig")[b * ROWS_PER_BAND + r]
-                               for r in range(ROWS_PER_BAND)])
-        for b in range(BANDS)
-    ])
-    return sig.select(
-        "doc_id", F.posexplode(band_keys).alias("band", "key")
-    ).select("band", "key", "doc_id")
 
 
 def estimated_jaccard(s1: str, s2: str):
@@ -195,18 +179,15 @@ def process_batch_dedup(batch_df: DataFrame, batch_id: int, out_dir: str,
     # 1. in-batch near-dups, exact verify (text available). Shingle
     # hashes + signatures are minted ONCE for the batch: the miner's
     # verify core reuses them, and the kept rows of the same signature
-    # table become the cross-batch state (previously doc_signatures(kept)
-    # recomputed the whole shingle+sig pass a second time per batch).
-    sh = doc_shingles(docs, 3).select(
-        "doc_id", F.xxhash64(F.col("sh")).alias("h64")).persist()
-    sig_all = minhash_signatures_h64(sh, NUM_HASHES).persist()
-    drops = lsh_verified_pairs(sh, sig_all, threshold=threshold,
-                               bands=BANDS, num_hashes=NUM_HASHES).select(
+    # table become the cross-batch state.
+    sh = shingle_hashes(docs, 3).persist()
+    sig_all = minhash_signatures_h64(sh).persist()
+    drops = lsh_verified_pairs(sh, sig_all, threshold=threshold).select(
         F.col("d2").alias("doc_id")).distinct()
     kept = docs.join(drops, "doc_id", "left_anti")
     sig = sig_all.join(drops, "doc_id", "left_anti").persist()
     # 2. cross-batch candidates vs persisted bands, estimated-J verify
-    batch_bands = band_rows(sig).withColumn(
+    batch_bands = lsh_bands(sig).withColumn(
         "kb", F.pmod(F.col("key"), F.lit(n_state_buckets)).cast("int"))
     # bounded collect: ≤ n_state_buckets values, drives partition pruning
     kbs = [r["kb"] for r in batch_bands.select("kb").distinct().collect()]
@@ -235,8 +216,8 @@ def process_batch_dedup(batch_df: DataFrame, batch_id: int, out_dir: str,
 
     write_batch_partition(final, batch_id, clean_dir)
     write_batch_partition(final_sig, batch_id, sigs_dir)
-    final_bands = band_rows(final_sig).withColumn(
-        "kb", F.pmod(F.col("key"), F.lit(n_state_buckets)).cast("int"))
+    final_bands = (batch_bands.join(cross_drops, "doc_id", "left_anti")
+                   .select("band", "key", "doc_id", "kb"))
     write_batch_partition(final_bands.repartition("kb"), batch_id,
                           bands_dir, "kb")
     sig.unpersist()

@@ -11,13 +11,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-# The session default heap (48g) lets the test JVM grow past the RAM of a
-# small box before it collects, and the kernel then kills it mid-suite. A
-# third of physical memory leaves room for the Python workers and for the
-# sessions tests start in subprocesses (they inherit this variable).
-os.environ.setdefault("SPARK_DRIVER_MEM", "{}g".format(max(
-    2, os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 3 // 2**30)))
-
 from logport_spark.session import get_spark  # noqa: E402
 
 

@@ -136,6 +136,31 @@ def test_persisted_routes_bind_to_runs(spark, pages_small, tmp_path,
     assert '"prd":"prd5000"' in rec
 
 
+def test_unwatched_category_falls_through_to_default_route(
+        spark, pages_small, tmp_path, monkeypatch):
+    """After `unwatch news`, news lines take the catch-all route, envelope
+    constants included — byte-equal to the reference run with the same
+    routes table (oracle.route_for falls back to the default route)."""
+    from logport_spark import oracle
+    from logport_spark.config import routes_by_key
+    from logport_spark.datagen import gen_docs
+    from logport_spark.plans.pipeline import parsed_routed
+    from logport_spark.store import ConfigStore
+
+    out_dir = str(tmp_path / "out")
+    assert ConfigStore(out_dir).unwatch("news")
+    kept = {k: v for k, v in routes_by_key().items() if k != "news"}
+    monkeypatch.setattr(oracle, "routes_by_key", lambda: kept)
+    want = {(r["url"], r["line_no"]): (r["sink"], r["record"])
+            for r in oracle.run_oracle(gen_docs(range(200)))["records"]
+            if r["category"] == "news"}
+    assert want and {s for s, _ in want.values()} == {"sink_default"}
+    got = {(r.url, r.line_no): (r.sink, r.record)
+           for r in parsed_routed(spark, pages_small, config_dir=out_dir)
+           .filter("category = 'news'").collect()}
+    assert got == want
+
+
 def test_lookups_are_built_in_the_driver(spark, tmp_path, monkeypatch):
     """The lookup tables are built in the driver from rows it already holds
     (the built-in seed, or a ConfigStore's stored routes): each plans as a

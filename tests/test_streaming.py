@@ -406,10 +406,13 @@ def test_stream_dedup_state_scan_prunes_key_buckets(spark, tmp_path_factory):
     being (re)processed and (b) the kb key buckets the batch's own band keys
     hash into — both are literal partition predicates, checked via
     inputFiles on the exact DataFrame process() joins against."""
+    from logport_spark.operators.dedup import (
+        lsh_bands,
+        minhash_signatures_h64,
+        shingle_hashes,
+    )
     from logport_spark.streaming.dedup_stream import (
         _pruned_state_bands,
-        band_rows,
-        doc_signatures,
         run_stream_minhash_dedup,
     )
 
@@ -424,7 +427,7 @@ def test_stream_dedup_state_scan_prunes_key_buckets(spark, tmp_path_factory):
     # one-doc hypothetical next batch → ≤16 band keys → ≤16 of 64 buckets
     probe = spark.createDataFrame(
         [(99, _DEDUP_BASE + " probe")], "doc_id long, text string")
-    bands = band_rows(doc_signatures(probe)).withColumn(
+    bands = lsh_bands(minhash_signatures_h64(shingle_hashes(probe))).withColumn(
         "kb", F.pmod(F.col("key"), F.lit(n_kb)).cast("int"))
     kbs = sorted({r["kb"] for r in bands.select("kb").distinct().collect()})
     assert len(kbs) <= 16 < n_kb

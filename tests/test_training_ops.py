@@ -30,6 +30,30 @@ def test_minhash_lsh_equals_exact_pairs(spark, docs):
     assert lsh == exact
 
 
+def test_minhash_calls_leave_no_cached_table(spark):
+    """minhash_lsh_pairs and minhash_contamination leave nothing in the
+    cache manager, however often they run on new inputs, and a result
+    minted before another call equals its own single-call result."""
+    from logport_spark.operators.dedup import (minhash_contamination,
+                                               minhash_lsh_pairs)
+
+    spark.catalog.clearCache()
+    cached = spark._jsparkSession.sharedState().cacheManager()
+    src = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    parts = [src.filter(F.col("doc_id") >= 50 * k) for k in range(3)]
+    for part in parts:
+        assert minhash_lsh_pairs(part, 3, 0.8).collect()
+        assert minhash_contamination(
+            part.filter(F.col("doc_id") % 2 == 0),
+            part.filter(F.col("doc_id") % 2 == 1), n=3).collect()
+        assert cached.isEmpty()
+    single = [sorted(minhash_lsh_pairs(p, 3, 0.8).collect())
+              for p in parts[:2]]
+    minted = [minhash_lsh_pairs(p, 3, 0.8) for p in parts[:2]]
+    assert [sorted(m.collect()) for m in minted] == single
+    assert cached.isEmpty()
+
+
 def test_simhash_near_dups_align_with_jaccard(spark, docs):
     """Docs that are Jaccard near-dups should also be SimHash-close."""
     from logport_spark.operators.dedup import (

@@ -45,9 +45,15 @@ ANNOTATED = {
         "exactly one Exchange hashpartitioning in the plan."
     ),
     "dedup_minhash_pairs": (
-        "MinHash+LSH: shingle explode and the 64-hash signature aggregate "
-        "shuffle on doc_id; LSH banding joins on (band, key); only LSH "
-        "candidates reach the exact-Jaccard verify join."
+        "MinHash+LSH: the shingle hashes (doc_id, h64) are materialized once "
+        "by an eager localCheckpoint while the query is built (the shingle "
+        "explode and the `_docs` RoundRobin widen run there), so every read "
+        "of them here is a Scan ExistingRDD, not an InMemoryTableScan; the "
+        "64-hash signature aggregate shuffles on doc_id once (the second "
+        "side is a ReusedExchange); LSH banding joins on (band, key); only "
+        "LSH candidates reach the exact-Jaccard verify join, and the two "
+        "shingle-count aggregates are one (ReusedExchange). AQE broadcasts "
+        "the 26,136-row shingle table into the verify joins here."
     ),
     "asof_purchase_click": (
         "As-of join as union+window: one Exchange on the key, no "
