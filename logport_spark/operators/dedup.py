@@ -281,10 +281,11 @@ def lsh_verified_pairs(sh: DataFrame, sig: DataFrame, threshold: float = 0.8,
 def _doc_line_arrays(docs: DataFrame, text_col: str,
                      id_col: str, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id[, extras], _arr): one row per doc with its split line array —
-    the shared base of the line-grain operators' two passes (metadata
-    decision pass + text rebuild pass). The split materializes as an
-    attribute so the rebuild's element_at lambda indexes a computed array
-    instead of re-splitting the doc per kept line."""
+    the base of both passes of every line-grain operator, batch and
+    stream: the metadata decision pass (_line_meta) and the text rebuild
+    (_rebuild_docs). The split materializes as an attribute so the
+    rebuild's element_at lambda indexes a computed array instead of
+    re-splitting the doc per kept line."""
     return docs.select(
         F.col(id_col).alias("doc_id"),
         *[F.col(c) for c in extra_cols],
@@ -292,30 +293,28 @@ def _doc_line_arrays(docs: DataFrame, text_col: str,
 
 
 def _line_meta(d: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Exploded non-empty line METADATA (doc_id[, extras], line_no, first,
-    h1, h2): a 128-bit line fingerprint (two independently-seeded
-    xxhash64's — joint collision ~2^-128, the C4 convention of deciding on
-    hashes) instead of the ~80-byte line text, so every decision shuffle
-    ships id-plus-fingerprint rows. The corpus text itself never enters a
-    decision exchange (guide-§8 discipline: decide on a lightweight proxy,
-    move heavy bytes once).
+    """The one line explode: non-empty line METADATA (doc_id[, extras],
+    line_no, first, h1, h2). A 128-bit line fingerprint (two
+    independently-seeded xxhash64's — joint collision ~2^-128, the C4
+    convention of deciding on hashes) stands in for the ~80-byte line
+    text, so every decision shuffle ships id-plus-fingerprint rows and
+    the corpus text never enters a decision exchange (guide-§8
+    discipline: decide on a lightweight proxy, move heavy bytes once).
+    h1 alone is plain xxhash64(line), the 64-bit key the streaming line
+    dedup keeps as its `h` state.
 
-    Input contract (all four line operators): `id_col` values are UNIQUE
-    — the id is a URL or doc key by construction everywhere in the repo.
-    (With duplicate ids the r5 shapes would have merged the rows at the
-    rebuild groupBy; the r6 join rebuild would emit one row per
-    duplicate instead. No caller ships duplicates; stated so the
-    difference is a documented contract, not a surprise.)
+    Input contract (every line operator): `id_col` values are UNIQUE —
+    the id is a URL or doc key by construction everywhere in the repo;
+    with duplicate ids the rebuild join would emit one row per duplicate.
 
     `first` marks the line's first occurrence WITHIN its document,
     computed narrowly inside the doc row (array_position over the doc's
     own line array — exact string equality, so no collision risk inside a
-    doc): the per-doc distinct set that r5 bought with a corpus-wide
-    (doc, line) exchange is now a zero-shuffle flag. The position scan is
-    O(lines²) string-prefix compares per doc — immaterial at web-page
-    line counts (fixture ~18, real pages tens); a corpus of pathological
-    10^4-line documents would want the old (doc, fingerprint) groupBy
-    back."""
+    doc): the per-doc distinct set is a zero-shuffle flag. The position
+    scan is O(lines²) string-prefix compares per doc — immaterial at
+    web-page line counts (fixture ~18, real pages tens); a corpus of
+    pathological 10^4-line documents would want a (doc, fingerprint)
+    groupBy instead."""
     first = (F.array_position(F.col("_arr"), F.col("line"))
              == (F.col("idx") + 1).cast("long"))
     return d.select(
@@ -328,19 +327,70 @@ def _line_meta(d: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
         F.xxhash64(F.lit(1), F.col("line")).alias("h2"))
 
 
-def _rebuild_docs(keep: DataFrame, d: DataFrame,
+def _rebuild_docs(kept: DataFrame, d: DataFrame,
                   out_cols: tuple = ()) -> DataFrame:
-    """Re-attach per-doc keep decisions (doc_id, n_kept, _lns sorted line
-    numbers) to the un-exploded doc arrays and rebuild surviving text in
-    original line order — the ONLY place text bytes can cross an exchange,
-    and they cross at most once (when `keep` is small enough Spark
-    broadcasts it and the rebuild is a fully narrow map over the doc scan).
-    Docs with no surviving line drop out via the inner join."""
+    """Rebuild documents from their kept (doc_id[, out_cols], line_no)
+    rows: the one per-doc keep-list aggregate (n_kept, sorted line
+    numbers — doc-sized metadata) re-attaches to the un-exploded doc
+    arrays (`d`, from _doc_line_arrays) and the surviving text is rebuilt
+    in original line order. This join is the ONLY place text bytes can
+    cross an exchange, and they cross at most once; which side it
+    broadcasts, if any, is decided here for every line operator. Docs
+    with no kept line drop out via the inner join."""
+    keep = kept.groupBy("doc_id", *out_cols).agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.array_sort(F.collect_list("line_no")).alias("_lns"))
     rebuilt = F.array_join(
         F.transform(F.col("_lns"), lambda ln: F.element_at(F.col("_arr"), ln)),
         "\n").alias("text")
     return (keep.join(d.select("doc_id", "_arr"), "doc_id")
             .select("doc_id", *out_cols, "n_kept", rebuilt))
+
+
+def _first_winners(lines: DataFrame, keys: tuple[str, ...] = ("h1", "h2"),
+                   min_docs: int | None = None) -> DataFrame:
+    """Keep-first winners over _line_meta rows: (keys..., doc_id, line_no)
+    of each distinct line key's first occurrence, the lowest (doc_id,
+    line_no). In-doc repeats can never beat their own first occurrence,
+    so only `first` rows enter the argmin — same winner, fewer exchange
+    rows. ONE groupBy over the key with map-side partial aggregation of
+    min(struct(doc_id, line_no)): a boilerplate line repeated on 10^9
+    pages combines to one row per map task before the exchange, where a
+    row_number window over the same key would ship every copy to one
+    reducer (the classic hot-key cliff).
+
+    With `min_docs`, a line whose doc frequency (its count of in-doc-first
+    rows, from the same aggregate) reaches `min_docs` is boilerplate and
+    wins nowhere."""
+    agg = lines.filter("first").groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("df"),
+        F.min(F.struct("doc_id", "line_no")).alias("w"))
+    if min_docs is not None:
+        agg = agg.filter(F.col("df") < min_docs)
+    return agg.select(*keys, F.col("w.doc_id").alias("doc_id"),
+                      F.col("w.line_no").alias("line_no"))
+
+
+def _strip_boilerplate(docs: DataFrame, min_docs: int, text_col: str,
+                       id_col: str, group: tuple[str, ...] = ()) -> DataFrame:
+    """Drop every occurrence of the lines that occur in ≥ `min_docs`
+    distinct documents (of the same `group` value, when one is given),
+    then rebuild the docs. The doc frequency is ONE partial agg over
+    (group, 16-byte fingerprint) rows of the narrow in-doc-first flag, and
+    the boilerplate set left_anti-joins the line METADATA stream on
+    (group, h1, h2). No join strategy is forced: the set is small by
+    construction at one grain and grows with the number of groups at the
+    other, so AQE broadcasts it when it is small and shuffles both sides
+    when it is not (skew-safe: a hot group's rows split across its
+    distinct lines)."""
+    d = _doc_line_arrays(docs, text_col, id_col, extra_cols=group)
+    lines = _line_meta(d, extra_cols=group)
+    keys = [*group, "h1", "h2"]
+    boiler = (lines.filter("first").groupBy(*keys)
+              .agg(F.count(F.lit(1)).alias("df"))
+              .filter(F.col("df") >= min_docs).select(*keys))
+    return _rebuild_docs(lines.join(boiler, keys, "left_anti"), d,
+                         out_cols=group)
 
 
 def dedup_lines_corpus(docs: DataFrame, text_col: str = "text",
@@ -354,44 +404,19 @@ def dedup_lines_corpus(docs: DataFrame, text_col: str = "text",
     lines in original order; documents losing every line drop out.
 
     Plan shape (the part that matters at 10^12 docs): NO window over the
-    line key, NO self-join, and (r6) NO corpus text in any decision
-    exchange —
-      1. posexplode line metadata (narrow; 128-bit line fingerprint +
-         in-doc-first flag, no text — see _line_meta); in-doc repeats
-         can never beat their own first occurrence, so only first rows
-         continue,
-      2. groupBy(h1, h2).agg(min(struct(doc_id, line_no))) — ONE shuffle
-         with map-side partial aggregation over (id, line_no,
-         fingerprint) rows, so a boilerplate line repeated on 10^9 pages
-         combines to one row per map task before the exchange (a
-         row_number window over the same key would ship every copy to
-         one reducer — the classic hot-key cliff),
-      3. winners groupBy(doc_id) → sorted keep-list — second metadata
-         shuffle, doc-sized,
-      4. one doc-keyed join back to the un-exploded docs rebuilds the
-         surviving text (text moves at most once; broadcast when small).
-    Versus the r5 form, which shuffled the full corpus TEXT through both
-    aggregations (~90 bytes/line twice), the decision exchanges now ship
-    ~28 bytes/line — the r5 sf1 rehearsal named exactly this term 45% of
-    the 100 TB chain cost.
+    line key, NO self-join, NO corpus text in any decision exchange —
+    one line explode of metadata (_line_meta), the keep-first winners agg
+    on the fingerprint (_first_winners), then the per-doc keep-list and
+    one doc-keyed join back to the un-exploded docs (_rebuild_docs). The
+    decision exchanges ship ~28 bytes/line of (id, line_no, fingerprint)
+    rows, never the ~90-byte line text. It is curate_lines_corpus with no
+    boilerplate threshold.
 
     The reference never dedups (SURVEY §2.6) — this is the C4 half of the
     curation story, complementing minhash (near-dup docs) and
     ngram_contamination (train/test overlap)."""
     d = _doc_line_arrays(docs, text_col, id_col)
-    # in-doc repeats can never win against their own first occurrence, so
-    # only `first` rows enter the corpus-wide argmin — same winner, fewer
-    # exchange rows
-    winners = (
-        _line_meta(d).filter("first").groupBy("h1", "h2")
-        .agg(F.min(F.struct("doc_id", "line_no")).alias("w"))
-        .select(F.col("w.doc_id").alias("doc_id"),
-                F.col("w.line_no").alias("line_no"))
-    )
-    keep = winners.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_sort(F.collect_list("line_no")).alias("_lns"))
-    return _rebuild_docs(keep, d)
+    return _rebuild_docs(_first_winners(_line_meta(d)), d)
 
 
 def strip_boilerplate_lines(docs: DataFrame, min_docs: int = 10,
@@ -402,31 +427,11 @@ def strip_boilerplate_lines(docs: DataFrame, min_docs: int = 10,
     banners, footers) is boilerplate and is removed from EVERY document —
     including its first occurrence, which is what distinguishes this from
     line dedup (keep-one) — then documents are rebuilt in original line
-    order (docs losing every line drop out).
-
-    Plan shape: the per-doc distinct set is the narrow in-doc-first flag
-    (zero shuffle — see _line_meta), line doc-frequencies are ONE partial
-    agg over bare 16-byte fingerprints, and the boilerplate set — tiny by
-    construction, it's the lines above a high-frequency threshold —
-    broadcast anti-joins the line METADATA stream (r6: 128-bit
-    fingerprints, never text), after which the per-doc keep-list
-    re-attaches to the un-exploded docs and the surviving text rebuilds
-    in one doc-keyed join (text crosses at most one exchange; zero when
-    the keep-list broadcasts). No window over the line key, no O(corpus)
-    set on the driver."""
-    d = _doc_line_arrays(docs, text_col, id_col)
-    lines = _line_meta(d)
-    # doc frequency = count of in-doc-FIRST rows per fingerprint — the
-    # per-doc distinct set is the narrow `first` flag, so the df exchange
-    # ships bare 16-byte fingerprints (partial-agg collapsed)
-    doc_freq = (lines.filter("first").select("h1", "h2")
-                .groupBy("h1", "h2").agg(F.count(F.lit(1)).alias("df")))
-    boiler = doc_freq.filter(F.col("df") >= min_docs).select("h1", "h2")
-    kept = lines.join(F.broadcast(boiler), ["h1", "h2"], "left_anti")
-    keep = kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_sort(F.collect_list("line_no")).alias("_lns"))
-    return _rebuild_docs(keep, d)
+    order (docs losing every line drop out). It is
+    domain_boilerplate_lines over a single group; the plan shape is
+    _strip_boilerplate's: no window over the line key, no O(corpus) set
+    on the driver, and text crosses at most the one rebuild join."""
+    return _strip_boilerplate(docs, min_docs, text_col, id_col)
 
 
 def domain_boilerplate_lines(docs: DataFrame, min_docs: int = 5,
@@ -446,42 +451,18 @@ def domain_boilerplate_lines(docs: DataFrame, min_docs: int = 5,
     domain grain at min_docs=5 flags 521 (domain, line) chrome pairs where
     the global operator's safe threshold flags 10 lines.
 
-    Plan shape at 10^12 docs: the per-doc distinct set is the narrow
-    in-doc-first flag (zero shuffle — see _line_meta); per-(domain,
-    fingerprint) doc frequencies are ONE partial agg over (domain,
-    16-byte fingerprint) rows (a footer on 10^9 pages of one host
-    collapses per map task before the exchange), then a left_anti join of
-    the line METADATA stream on (domain, h1, h2) (r6: 128-bit
-    fingerprints, never text — see _line_meta). Unlike the
-    global variant the boilerplate set scales with the number of DOMAINS
-    (millions of hosts × dozens of chrome lines — too big to broadcast
-    honestly), so the anti join is a shuffled join on (domain, h1, h2):
-    skew-safe because a hot domain's rows split across its distinct lines,
-    and AQE still broadcasts when the set is small. No window over any
-    content key; the rebuild re-attaches the per-doc keep-list to the
-    un-exploded docs in one doc-keyed join, so text crosses at most one
-    exchange (zero when the keep-list broadcasts).
+    Plan shape: _strip_boilerplate keyed on (domain, h1, h2). The
+    boilerplate set scales with the number of DOMAINS (millions of hosts
+    × dozens of chrome lines), so at web scale its anti join is a
+    shuffled join on (domain, h1, h2); AQE still broadcasts the set when
+    it is small.
 
     The reference ships every line as-is (SURVEY §2.6); this extends the
     curation family's boilerplate story to the host grain."""
-    d = _doc_line_arrays(docs, text_col, id_col,
-                         extra_cols=(group_col,)).withColumnRenamed(
-        group_col, "_grp")
-    lines = _line_meta(d, extra_cols=("_grp",))
-    # per-(domain, fingerprint) doc frequency over the narrow in-doc-FIRST
-    # rows: the exchange ships (domain, 16-byte fingerprint) only
-    doc_freq = (lines.filter("first").select("_grp", "h1", "h2")
-                .groupBy("_grp", "h1", "h2")
-                .agg(F.count(F.lit(1)).alias("df")))
-    boiler = doc_freq.filter(F.col("df") >= min_docs).select(
-        "_grp", "h1", "h2")
-    kept = lines.join(boiler, ["_grp", "h1", "h2"], "left_anti")
-    keep = kept.groupBy("doc_id", "_grp").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_sort(F.collect_list("line_no")).alias("_lns"))
-    return (_rebuild_docs(keep, d, out_cols=("_grp",))
-            .withColumnRenamed("_grp", group_col)
-            .select("doc_id", group_col, "n_kept", "text"))
+    # the group rides under a private name, clear of the line columns
+    return (_strip_boilerplate(docs.withColumnRenamed(group_col, "_grp"),
+                               min_docs, text_col, id_col, group=("_grp",))
+            .withColumnRenamed("_grp", group_col))
 
 
 def curate_lines_corpus(docs: DataFrame, min_docs: int = 10,
@@ -492,46 +473,17 @@ def curate_lines_corpus(docs: DataFrame, min_docs: int = 10,
     (pytest-pinned row-for-row), at roughly half the cost.
 
     The sequential composition explodes the corpus text twice and pays
-    five shuffles (strip: (doc,line) distinct, line df, doc rebuild;
-    dedup: line keep-first, doc rebuild) — the r5 sf1 dress rehearsal
-    measured the line-grain stages as 45% of the whole chain. Both
-    per-line decisions are functions of the SAME (doc, line) pre-agg:
-
-      1. posexplode line metadata once (narrow; 128-bit fingerprints +
-         the in-doc-first flag, no text — see _line_meta). The flag IS
-         the (doc, line) pre-agg: r5 paid a corpus-wide exchange for it,
-      2. groupBy(h1, h2).agg(count(*) AS df, min(struct(doc, line_no)))
-         over in-doc-first rows — doc-frequency (the boilerplate verdict,
-         df ≥ min_docs drops the line everywhere) and the keep-first
-         winner in ONE partial-aggregated metadata shuffle; still never a
-         window over the line key,
-      3. winners groupBy(doc_id) → sorted keep-list (doc-sized metadata),
-      4. one doc-keyed join back to the un-exploded docs rebuilds the
-         surviving text — original line order via the ORIGINAL line_no
-         (relative order equals the stripped-rebuilt order, so the
-         keep-first winner and the output text match the sequential
-         composition exactly).
-
-    2 decision shuffles + 1 explode vs the sequential composition's 5 +
-    2 — and as of r6 the decision shuffles carry (id, line_no,
-    fingerprint) rows, never the line text; text bytes cross at most the
-    one rebuild join (zero exchanges when the keep-list broadcasts)."""
+    two doc rebuilds. Both per-line decisions are functions of the SAME
+    in-doc-first rows, so one keep-first winners agg (_first_winners)
+    carries the doc frequency too: df ≥ min_docs drops the line
+    everywhere, otherwise its first occurrence wins. The rebuild uses the
+    ORIGINAL line_no, whose relative order equals the stripped-rebuilt
+    order, so the keep-first winner and the output text match the
+    sequential composition exactly. One explode, two metadata shuffles
+    (the fingerprint agg and the per-doc keep-list) and one rebuild join,
+    the only place text can cross an exchange."""
     d = _doc_line_arrays(docs, text_col, id_col)
-    # the narrow `first` flag IS the (doc, line) pre-agg: one in-doc-first
-    # row per (doc, distinct line), no exchange paid for it
-    per_doc = _line_meta(d).filter("first")
-    winners = (
-        per_doc.groupBy("h1", "h2")
-        .agg(F.count(F.lit(1)).alias("df"),
-             F.min(F.struct("doc_id", "line_no")).alias("w"))
-        .filter(F.col("df") < min_docs)
-        .select(F.col("w.doc_id").alias("doc_id"),
-                F.col("w.line_no").alias("line_no"))
-    )
-    keep = winners.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_sort(F.collect_list("line_no")).alias("_lns"))
-    return _rebuild_docs(keep, d)
+    return _rebuild_docs(_first_winners(_line_meta(d), min_docs=min_docs), d)
 
 
 CANON_TRACKING_PARAMS = "utm_[a-z]+|fbclid|gclid|msclkid|ref"

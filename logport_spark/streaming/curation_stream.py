@@ -129,7 +129,6 @@ def run_stream_curation(
             write_batch_partition(
                 fresh.select("h", "hb").repartition("hb"), batch_id,
                 out_dir.rstrip("/") + "/state/lines", "hb")
-            fresh.unpersist()
 
     return drain(pages_stream(spark, docs_dir, max_files)
                  .writeStream.foreachBatch(process), checkpoint_dir)

@@ -77,6 +77,10 @@ from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from ..operators.dedup import (
     NUM_HASHES,
+    _doc_line_arrays,
+    _first_winners,
+    _line_meta,
+    _rebuild_docs,
     lsh_bands,
     lsh_verified_pairs,
     minhash_signatures_h64,
@@ -231,37 +235,31 @@ def line_dedup_core(batch_df: DataFrame, batch_id: int, out_dir: str,
                     ) -> tuple[DataFrame, DataFrame]:
     """The stateful heart of cross-batch line dedup, factored so
     composites (streaming/curation_stream.py) can chain it BEFORE their
-    gates: returns (rebuilt_docs, fresh_hashes) — rebuilt docs carry only
-    this batch's first-occurrence-of-unseen lines; fresh_hashes (h, hb)
-    is what the caller must persist under the batch's state partition.
-    Both are persisted DataFrames; the caller unpersists after writing."""
+    gates: returns (rebuilt_docs, fresh) — rebuilt docs carry only this
+    batch's first occurrences of unseen lines; fresh (h, hb, doc_id,
+    line_no) are those occurrences, whose (h, hb) the caller persists
+    under the batch's state partition.
+
+    It runs on the batch line-grain core of operators/dedup.py: the one
+    line explode (_line_meta, whose h1 is the xxhash64(line) the state
+    keeps as h), the keep-first winners on h, and the shared rebuild
+    (_rebuild_docs). The winners carry (doc_id, line_no), never text, and
+    are materialized once per batch with an eager localCheckpoint before
+    the bucket collect, so the batch explodes once; their blocks live as
+    long as the returned frames."""
     lines_dir = out_dir.rstrip("/") + "/state/lines"
     sp = batch_df.sparkSession
-    batch_df = ensure_parallelism(batch_df)
-    lines = batch_df.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("text"), "\n")).alias("idx", "line"),
-    ).filter(F.length("line") > 0).select(
-        "doc_id", (F.col("idx") + 1).alias("line_no"), "line",
-        F.xxhash64("line").alias("h"))
-    firsts = (lines.groupBy("h")
-              .agg(F.min(F.struct("doc_id", "line_no", "line")).alias("w"))
-              .select("h", F.col("w.doc_id").alias("doc_id"),
-                      F.col("w.line_no").alias("line_no"),
-                      F.col("w.line").alias("line"))
-              .withColumn("hb", F.pmod(F.col("h"),
-                                       F.lit(n_state_buckets)).cast("int")))
-    kbs = [r["hb"] for r in firsts.select("hb").distinct().collect()]
+    d = _doc_line_arrays(ensure_parallelism(batch_df), "text", "doc_id")
+    winners = (_first_winners(_line_meta(d), keys=("h1",))
+               .withColumnRenamed("h1", "h")
+               .withColumn("hb", F.pmod(F.col("h"),
+                                        F.lit(n_state_buckets)).cast("int"))
+               .localCheckpoint(eager=True))
+    kbs = [r["hb"] for r in winners.select("hb").distinct().collect()]
     state = (_read_state(sp, lines_dir, "h long, hb int", batch_id)
              .filter(F.col("hb").isin(kbs)))
-    fresh = firsts.join(state, "h", "left_anti").persist()
-    rebuilt = (fresh.groupBy("doc_id")
-               .agg(F.count(F.lit(1)).alias("n_kept"),
-                    F.array_join(F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("line_no", "line"))),
-                        lambda x: x["line"]), "\n").alias("text")))
-    return rebuilt, fresh
+    fresh = winners.join(state, "h", "left_anti")
+    return _rebuild_docs(fresh, d), fresh
 
 
 def process_batch_line_dedup(batch_df: DataFrame, batch_id: int,
@@ -273,12 +271,13 @@ def process_batch_line_dedup(batch_df: DataFrame, batch_id: int,
     batch excluded at partition level, idempotent dynamic overwrites, so
     crash-replay is lossless and the same compaction machinery applies).
 
-    Per batch: explode lines → xxhash64 → keep a line occurrence iff its
-    hash is absent from PRIOR state (anti-join, state scan pruned to the
-    batch's hash buckets hb = pmod(h, N)) and it is the first occurrence
-    within this batch (min (doc_id, line_no) per hash — a partial-agg
-    groupBy, never a window). Docs rebuild batch-locally (a doc lives in
-    one batch; only LINE HASHES cross batches — 8 B/line, never text).
+    Per batch (line_dedup_core): explode lines → xxhash64 → keep a line
+    occurrence iff it is the first occurrence within this batch (min
+    (doc_id, line_no) per hash — a partial-agg groupBy, never a window)
+    and its hash is absent from PRIOR state (anti-join, state scan pruned
+    to the batch's hash buckets hb = pmod(h, N)). Docs rebuild
+    batch-locally (a doc lives in one batch; only LINE HASHES cross
+    batches — 8 B/line, never text).
 
     First-occurrence semantics: ARRIVAL-first (the first batch that ships
     a line keeps it) — what a rolling crawl wants; the batch operator's
@@ -294,7 +293,6 @@ def process_batch_line_dedup(batch_df: DataFrame, batch_id: int,
                           out_dir.rstrip("/") + "/clean")
     write_batch_partition(fresh.select("h", "hb").repartition("hb"), batch_id,
                           out_dir.rstrip("/") + "/state/lines", "hb")
-    fresh.unpersist()
 
 
 def run_stream_line_dedup(spark: SparkSession, docs_dir: str, out_dir: str,

@@ -164,6 +164,28 @@ def test_one_micro_batch_protocol():
                       "logport_spark/streaming/adopt.py::run_adopt"}
 
 
+def test_one_line_grain_core():
+    """The line-dedup family, batch and stream, runs on one core in
+    operators/dedup.py: the per-doc line-number keep-list is aggregated in
+    _rebuild_docs only, the streaming line dedup explodes no line of its
+    own, and no line operator forces a broadcast."""
+    dedup = "logport_spark/operators/dedup.py"
+    stream = "logport_spark/streaming/dedup_stream.py"
+    sites = _code_sites({".collect_list", '"line_no"', ".posexplode",
+                         ".split", ".broadcast"})
+    assert sites[".collect_list"] & sites['"line_no"'] == {
+        f"{dedup}::_rebuild_docs"}
+    assert not {s for s in sites[".posexplode"] | sites[".split"]
+                if s.startswith(f"{stream}::")}
+    line_family = {f"{dedup}::{f}" for f in (
+        "_doc_line_arrays", "_line_meta", "_rebuild_docs", "_first_winners",
+        "_strip_boilerplate", "dedup_lines_corpus", "strip_boilerplate_lines",
+        "domain_boilerplate_lines", "curate_lines_corpus")}
+    line_family |= {f"{stream}::{f}" for f in (
+        "line_dedup_core", "process_batch_line_dedup")}
+    assert not sites[".broadcast"] & line_family
+
+
 def test_one_filesystem_layer():
     """The pipeline touches the filesystem of its own tables through one
     layer: plans/ledger.py's Hadoop-FS helpers (hadoop_fs is the only

@@ -687,6 +687,57 @@ def test_stream_line_dedup_equals_batch_and_replays_lossless(
     assert got9 and got9[0].text == "brand new line"
 
 
+def test_line_dedup_batch_explodes_once(spark, tmp_path):
+    """One process_batch_line_dedup batch explodes its lines once: the
+    Generate output rows summed over the batch's SQL executions equal the
+    batch's line count (the winners are materialized before the bucket
+    collect, and the rebuild indexes the split arrays instead of
+    exploding them again)."""
+    import uuid
+
+    import pandas as pd
+
+    from logport_spark.profile import metric_value
+    from logport_spark.streaming.dedup_stream import process_batch_line_dedup
+
+    pdf = pd.DataFrame(datagen.gen_docs(range(60)))
+    pdf["doc_id"] = range(len(pdf))
+    docs = spark.createDataFrame(pdf[["doc_id", "text"]],
+                                 "doc_id long, text string")
+    n_lines = sum(len(t.split("\n")) for t in pdf["text"])
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    prior = {k: sc.getLocalProperty(k) for k in props}
+    group = f"line-batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        process_batch_line_dedup(docs, 0, str(tmp_path / "out"))
+    finally:
+        for k, v in prior.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    listed = as_java(store.executionsList())
+    generated = 0.0
+    for i in range(len(listed)):
+        e = listed[i]
+        if e.description() != group:
+            continue
+        values = store.executionMetrics(e.executionId())
+        for n in as_java(store.planGraph(e.executionId()).allNodes()):
+            if n.name() != "Generate":
+                continue
+            for m in as_java(n.metrics()):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    generated += metric_value(v.get())
+    assert generated == n_lines
+
+
 def test_cli_compact_state_verb(spark, tmp_path_factory, capsys, monkeypatch):
     """The compact-state CLI verb drives checkpoint-aware retention end to
     end: committed batches fold to -1, clean/ folds with --clean, and the

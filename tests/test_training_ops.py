@@ -1191,7 +1191,7 @@ def test_unigram_logprob_hand_computed(spark):
 
 
 def test_curate_lines_fused_equals_sequential_composition(spark):
-    """r5 fusion: curate_lines_corpus ≡ dedup_lines_corpus ∘
+    """The fused curate_lines_corpus ≡ dedup_lines_corpus ∘
     strip_boilerplate_lines row-for-row (doc_id, n_kept, text) on a
     randomized corpus covering every interaction: within-doc duplicate
     lines, cross-doc duplicates at and around the boilerplate threshold,
@@ -1233,6 +1233,14 @@ def test_curate_lines_fused_equals_sequential_composition(spark):
         a = {(r.doc_id, r.n_kept, r.text) for r in seq.collect()}
         b = {(r.doc_id, r.n_kept, r.text) for r in fused.collect()}
         assert a == b, f"min_docs={min_docs}: {len(a ^ b)} differing rows"
+
+    # with a threshold no line can reach, the fused operator is plain
+    # corpus line dedup
+    plain = {(r.doc_id, r.n_kept, r.text)
+             for r in dedup_lines_corpus(df).collect()}
+    never = {(r.doc_id, r.n_kept, r.text) for r in
+             curate_lines_corpus(df, min_docs=len(docs) + 1).collect()}
+    assert plain == never
 
 
 def test_dedup_lines_corpus_semantics(spark):
@@ -1355,6 +1363,11 @@ def test_domain_boilerplate_lines_is_site_local(spark):
     glob = {r.doc_id: r.text for r in
             strip_boilerplate_lines(docs, min_docs=3).collect()}
     assert glob[4] == "other site content"
+    # and it IS the domain grain over one constant group
+    one = {r.doc_id: (r.n_kept, r.text) for r in domain_boilerplate_lines(
+        docs.withColumn("domain", F.lit("all")), min_docs=3).collect()}
+    assert one == {r.doc_id: (r.n_kept, r.text) for r in
+                   strip_boilerplate_lines(docs, min_docs=3).collect()}
 
 
 def test_domain_filter_drops_whole_domains(spark):

@@ -122,7 +122,7 @@ ANNOTATED = {
         "single-row total is not the only broadcast."
     ),
     "line_dedup_corpus": (
-        "C4 corpus line dedup (r6 shape): posexplode line METADATA (128-bit "
+        "C4 corpus line dedup: posexplode line METADATA (128-bit "
         "fingerprint + in-doc-first flag, no text) → min(struct) agg on (h1, "
         "h2) (map-side combine — no window, so a boilerplate line repeated "
         "corpus-wide combines before the exchange) → per-doc keep-list agg → "
@@ -133,24 +133,25 @@ ANNOTATED = {
         "carries text."
     ),
     "strip_boilerplate": (
-        "Boilerplate removal (r6 shape): the per-doc distinct set is the "
-        "narrow in-doc-first flag (zero shuffle), line doc-freq is ONE "
-        "partial agg over bare 16-byte fingerprints, the ≥min_docs set "
-        "(tiny) BROADCAST anti-joins the line METADATA stream, and the "
-        "per-doc keep-list joins back to the un-exploded docs for the text "
-        "rebuild, where AQE broadcasts the docs text side (BuildRight, "
-        "10,000 rows): text crosses that one BroadcastExchange and no "
-        "shuffle exchange."
+        "Boilerplate removal: the per-doc distinct set is the narrow "
+        "in-doc-first flag (zero shuffle), line doc-freq is ONE partial agg "
+        "over bare 16-byte fingerprints, and the ≥min_docs set anti-joins "
+        "the line METADATA stream. No broadcast is forced: AQE broadcasts "
+        "the set because it is small here (10 rows), and would shuffle both "
+        "sides if it were not. The per-doc keep-list joins back to the "
+        "un-exploded docs for the text rebuild, where AQE broadcasts the "
+        "docs text side (BuildRight, 10,000 rows): text crosses that one "
+        "BroadcastExchange and no shuffle exchange."
     ),
     "domain_boilerplate": (
-        "Per-domain site chrome (r6 shape): per-doc distinct via the narrow "
+        "Per-domain site chrome: per-doc distinct via the narrow "
         "in-doc-first flag → (domain, fingerprint) doc-freq partial agg → "
         "the ≥min_docs set anti-joins the line METADATA stream on (domain, "
         "h1, h2) — SHUFFLED, not broadcast, because at web scale the set "
         "grows with domain count (millions of hosts × chrome lines); AQE "
         "demotes it to broadcast when small. Skew-safe: a hot domain's rows "
         "split across its distinct lines. Per-doc keep-list + doc-keyed join "
-        "rebuild — the whole line family's r6 shape, with its runtime catch: "
+        "rebuild — the whole line family's shape, with its runtime catch: "
         "AQE broadcasts the docs text side of the rebuild (BuildRight, "
         "10,000 rows), so text crosses one BroadcastExchange; no shuffle "
         "exchange carries text."
@@ -163,7 +164,7 @@ ANNOTATED = {
         "the embedding_lsh_pairs tail with cells instead of bands."
     ),
     "web_curation": (
-        "End-to-end pages curation (r6 fused line shape): url keep-max agg "
+        "End-to-end pages curation (fused line shape): url keep-max agg "
         "-> left-semi on url -> fingerprint-keyed fused df+keep-first agg "
         "over in-doc-first line metadata -> per-doc keep-list -> doc-keyed "
         "rebuild join -> n_kept filter. Every shuffle is an aggregating "
@@ -693,7 +694,10 @@ ANNOTATED = {
 
 
 # counters that depend on the data, not on timing, so PLANS.md only
-# changes when a plan or its input does
+# changes when a plan or its input does. A BroadcastExchange's "data size"
+# is not one: it reports the hashed relation's allocated pages, which
+# follow the driver heap (the same 7-row lookup reads 16,777,216 with a
+# 5g heap and 67,108,864 with 48g), so it is left out there.
 METRICS = ("number of output rows", "shuffle records written",
            "shuffle bytes written", "data size", "size of files read",
            "spill size", "number of sort fallback tasks")
@@ -711,7 +715,8 @@ def _section(name: str, note: str, rec: dict) -> list[str]:
     counters = []
     for n in rec["nodes"]:
         vals = [f"{k}={n['metrics'][k]:,.0f}" for k in METRICS
-                if n["metrics"].get(k)]
+                if n["metrics"].get(k) and not (
+                    k == "data size" and n["name"] == "BroadcastExchange")]
         if vals:
             counters.append(f"{n['name']}: " + ", ".join(vals))
     return (["", f"## {name}", "", note, "", "```", plan.rstrip(), "```"]
