@@ -2238,8 +2238,9 @@ _ROTATE_OUT = [
     "q4_order_priority",       # EXISTS semi join graded via
                                # contamination_scan (left_semi) +
                                # crawl_frontier (left_anti)
-    "q5_regional_revenue",     # broadcast multi-join graded via lp_enrich
-                               # (broadcast dims) + q3 (SMJ multi-join)
+    "q5_regional_revenue",     # broadcast multi-join graded via
+                               # hybrid_rrf_topk (broadcast BM25 joins)
+                               # + q3 (SMJ multi-join)
     "cust_minus_supp_nations", # EXCEPT graded via lp_resume_anti_join
                                # (anti-join semantics) + lp_replay_union
     "events_distinct_stats",   # multi-distinct agg graded via

@@ -187,23 +187,15 @@ def cmd_status(args) -> int:
 def cmd_routes(args) -> int:
     """`logport watches` analog: print the routing table — persisted
     mutations under --out when given, the built-in seed otherwise."""
-    rows = _route_rows(getattr(args, "out", None))
+    from .store import route_rows
+
+    rows = route_rows(getattr(args, "out", None))
     for r in rows:
         print(f"{r['id']}\t{r['route_key']}\t{r['sink']}\t"
               f"{r['producer_type']}\t{r['brokers']}\t"
               f"{r['product_code'] or '-'}\t{r['log_type'] or '-'}\t"
               f"{r['hostname']}")
     return 0
-
-
-def _route_rows(out_dir: str | None) -> list[dict]:
-    if out_dir:
-        from .store import ConfigStore
-
-        return ConfigStore(out_dir).list_routes()
-    from .config import routes_rows
-
-    return routes_rows()
 
 
 def cmd_watch(args) -> int:

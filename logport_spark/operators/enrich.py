@@ -1,21 +1,23 @@
-"""Enrichment: URL decomposition + broadcast hash joins against small lookups.
+"""Enrichment: URL decomposition + map-literal lookups against small tables.
 
 Mirrors the reference's side-table reads (watches/settings,
 src/Database.cc:65-84) and URL parsing (src/Url.cc:192-359) — Spark-first:
-`parse_url` is a JVM built-in, and the lookups are broadcast so enrichment
-adds ZERO shuffles regardless of input scale (the lookup tables are
-O(domains) ≪ executor memory; at 100 TB the fact side never moves).
+`parse_url` is a JVM built-in, and each lookup is a map literal built from
+rows the driver holds (as logport holds its `vector<Watch>`), so enrichment
+is one narrow Project: no join, shuffle or broadcast job at any scale.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import json
 
-from ..config import (DEFAULT_ROUTE_KEY, domain_tld_rows, lang_locale_rows,
-                      routes_rows)
-from ..store import ConfigStore
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StringType
+
+from ..config import DEFAULT_ROUTE_KEY, domain_tld_rows, lang_locale_rows
+from ..store import route_rows
 
 
 def with_domain(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -71,39 +73,44 @@ def url_blocklist(pages: DataFrame, blocklist: list[str],
 
 def load_lookups(spark: SparkSession,
                  config_dir: str | None = None) -> dict[str, DataFrame]:
-    """Lookup tables for the broadcast joins, built in the driver from the
+    """Lookup tables for the map literals, built in the driver from the
     rows it already holds: each is a LocalRelation, so no file is read or
-    written and no job runs until the join broadcasts it. When
+    written and collecting it (lookup_map) runs no job. When
     ``config_dir`` names an out_dir, its ConfigStore's routes (the persisted
     `watch`/`unwatch` CLI mutations, store.py; the built-in seed when none
     were ever made) REPLACE the built-in table — the run consumes the same
     bytes the CLI wrote, the logport watches-table contract."""
-    routes = (ConfigStore(config_dir).list_routes() if config_dir is not None
-              else routes_rows())
     return {name: spark.createDataFrame(pd.DataFrame(rows))
             for name, rows in (("domain_tld", domain_tld_rows()),
                                ("lang_locale", lang_locale_rows()),
-                               ("routes", routes))}
+                               ("routes", route_rows(config_dir)))}
+
+
+def lookup_map(lookup: DataFrame, key: str) -> Column:
+    """``lookup``'s row for this row's ``key``, as a struct (null for a null
+    or unmatched key, as a left join; keys are unique, so no row fans out),
+    from one map literal: from_json of a JSON literal, which Catalyst folds.
+    The lookups are config-sized: Spark probes a literal map by scanning
+    its keys (codegen probes it once per row, whatever fields are read)."""
+    entries = {r[key]: r.asDict() for r in lookup.collect()}
+    return F.from_json(F.lit(json.dumps(entries)),
+                       MapType(StringType(), lookup.schema))[F.col(key)]
 
 
 def enrich(df: DataFrame, lookups: dict[str, DataFrame]) -> DataFrame:
-    """Left broadcast joins: domain→(tld, category), lang→locale.
+    """Map-literal lookups: domain→(tld, category), lang→locale.
 
     Unmatched domains/langs stay (nulls) — they fall through to the default
     route, mirroring logport's settings-precedence defaults
     (src/LogPort.cc:961-1048). So does a category the routes table has no
     row for (an unwatched one): route_key is the category only when it is
-    one of the routes' keys. The keys come from the routes lookup, a
-    driver-built LocalRelation, so reading them runs no job and the test is
-    a literal IN, not a join.
+    one of the routes' keys, a literal IN.
     """
-    domain_tld = lookups["domain_tld"].select("domain", "tld", "category")
-    lang_locale = lookups["lang_locale"].select("lang", "locale")
     keys = [r.route_key
             for r in lookups["routes"].select("route_key").collect()]
-    out = df.join(F.broadcast(domain_tld), "domain", "left")
-    out = out.join(F.broadcast(lang_locale), "lang", "left")
-    return out.withColumn(
-        "route_key", F.when(F.col("category").isin(keys), F.col("category"))
-        .otherwise(F.lit(DEFAULT_ROUTE_KEY))
-    )
+    dom = lookup_map(lookups["domain_tld"], "domain")
+    return df.withColumns({
+        "tld": dom.tld, "category": dom.category,
+        "locale": lookup_map(lookups["lang_locale"], "lang").locale,
+        "route_key": F.when(dom.category.isin(keys), dom.category)
+        .otherwise(F.lit(DEFAULT_ROUTE_KEY))})

@@ -1,8 +1,8 @@
-"""Routing: broadcast route resolution, dead-letter split, sink compaction.
+"""Routing: map-literal route resolution, dead-letter split, sink compaction.
 
 - R1 route resolution (file→topic, src/LogPort.cc:639-643 +
-  src/Database.cc:65-77): broadcast join on route_key → sink + envelope
-  constants (hostname/prd/log_type).
+  src/Database.cc:65-77): one probe of the routes map literal on route_key
+  → sink + envelope constants (hostname/prd/log_type).
 - R2 partitioning (src/KafkaProducer.cc:389-397 uses rdkafka's keyless
   round-robin): records land in per-sink table partitions; a hot domain
   would funnel one partition through one task, so the fan-out write
@@ -19,17 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .enrich import lookup_map
+
 
 def resolve_route(df: DataFrame, routes: DataFrame) -> DataFrame:
-    """R1: attach sink + envelope constants via broadcast hash join."""
-    r = routes.select(
-        "route_key",
-        "sink",
-        F.col("hostname").alias("route_hostname"),
-        F.col("product_code").alias("route_prd"),
-        F.col("log_type").alias("route_log_type"),
-    )
-    return df.join(F.broadcast(r), "route_key", "left")
+    """R1: attach sink + envelope constants from the routes map literal."""
+    r = lookup_map(routes, "route_key")
+    return df.withColumns({"sink": r.sink, "route_hostname": r.hostname,
+                           "route_prd": r.product_code,
+                           "route_log_type": r.log_type})
 
 
 ROUTED_COLS = [

@@ -1,13 +1,13 @@
 """Pipeline assembly: scan → enrich/route → parse → aggregate.
 
 This is the Spark re-expression of logport's tail→envelope→produce loop
-(SURVEY.md §3.1): the `vector<Watch>` routing table becomes broadcast-joined
-config DataFrames, the fork-per-watch process model becomes task
+(SURVEY.md §3.1): the `vector<Watch>` routing table becomes map literals of
+driver-held config rows, the fork-per-watch process model becomes task
 parallelism, and the per-sink Kafka topics become per-sink table partitions.
 
 A route belongs to a watch (one file), not to a line (SURVEY §1.1), so the
 DAG routes each page once, then splits it into lines; it is shuffle-minimal:
-  scan(pages, html pruned) → broadcast joins per page (narrow) →
+  scan(pages, html pruned) → map-literal lookups per page (narrow) →
   explode+filter (narrow) → envelope UDF (narrow) → ONE shuffle (the
   bucket repartition before the fan-out write, plans/ledger.py) → per-sink
   metrics (partial agg map-side).

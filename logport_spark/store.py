@@ -7,7 +7,7 @@ PARQUET tables under `<out_dir>/config/` — written with pyarrow directly
 (no JVM spin-up for a control-plane verb; a CLI `watch` returns in
 milliseconds). The pipeline reads the stored bytes through `list_routes`
 (operators/enrich.load_lookups builds its routes lookup in the driver from
-them), so its broadcast route join consumes the SAME bytes the CLI wrote.
+them), so its routes map literal holds the SAME bytes the CLI wrote.
 
 Semantics:
 - routes: the built-in ROUTES list (config.py) is the SEED; the first
@@ -24,8 +24,8 @@ Semantics:
   holds the same assumption via SQLite's single-file locking; SURVEY §2.4
   documents why busy-retry (L3) is n/a here).
 
-Scale note: config tables are O(routes) rows — they ride the broadcast
-path (operators/enrich.py), never a shuffle.
+Scale note: config tables are O(routes) rows — they ride the plan as map
+literals (operators/enrich.py), never a join or a shuffle.
 """
 
 from __future__ import annotations
@@ -130,3 +130,8 @@ class ConfigStore:
                                 "value": [vals[k] for k in keys]}),
                       self.settings_path)
         return True
+
+
+def route_rows(out_dir: str | None) -> list[dict]:
+    """The routes a run under ``out_dir`` uses: its store's, else the seed."""
+    return ConfigStore(out_dir).list_routes() if out_dir else routes_rows()

@@ -73,7 +73,7 @@ def test_baselines_match_oracles(spark, duck):
         # r4 session-7: hits_scores/host_components/crawl_frontier/
         # host_quality claimed contract slots; the displaced relational
         # rows land here — each capability keeps a graded representative
-        # (semi: contamination_scan; broadcast join: lp_enrich; except:
+        # (semi: contamination_scan; broadcast join: hybrid_rrf_topk; except:
         # lp_resume_anti_join; multi-distinct: crawl_frontier)
         "q4_order_priority", "q5_regional_revenue",
         "cust_minus_supp_nations", "events_distinct_stats",

@@ -161,6 +161,50 @@ def test_unwatched_category_falls_through_to_default_route(
     assert got == want
 
 
+def test_route_strings_and_lookup_misses_reach_the_records(
+        spark, tmp_path, monkeypatch):
+    """Watched route strings holding quotes, a backslash, non-ASCII text or
+    nothing at all reach the sink column and the envelope's host/prd keys
+    byte-equal to the reference serializer's records; a url with no host
+    and an unknown lang miss their lookups (null tld, category, locale)
+    and take the catch-all route."""
+    import json
+
+    import pandas as pd
+
+    from logport_spark import oracle
+    from logport_spark.config import RouteSpec, UNMATCHED_LANG
+    from logport_spark.datagen import PAGES_DDL, gen_docs
+    from logport_spark.plans.pipeline import parsed_routed
+    from logport_spark.store import ConfigStore
+
+    odd = "q\"u'o\\te \u00e9\u4e16"
+    out_dir = str(tmp_path / "out")
+    store = ConfigStore(out_dir)
+    store.watch("news", odd, hostname=odd, product_code=odd)
+    store.watch("shop", "", hostname="", product_code="")
+    routes = {r["route_key"]: RouteSpec(**r) for r in store.list_routes()}
+    monkeypatch.setattr(oracle, "routes_by_key", lambda: routes)
+    docs = gen_docs(range(200))
+    docs.append(dict(docs[0], url="no-host-page", lang=UNMATCHED_LANG))
+    want = {(r["url"], r["line_no"]): (r["sink"], r["record"], r["tld"],
+                                       r["category"], r["locale"])
+            for r in oracle.run_oracle(docs)["records"]}
+    pages = spark.createDataFrame(pd.DataFrame(docs), schema=PAGES_DDL)
+    got = {(r.url, r.line_no): (r.sink, r.record, r.tld, r.category, r.locale)
+           for r in parsed_routed(spark, pages, config_dir=out_dir)
+           .collect()}
+    assert got == want
+    sinks = {v[0] for v in got.values()}
+    assert {odd, "", "sink_default"} <= sinks
+    hostless = {v for (url, _), v in got.items() if url == "no-host-page"}
+    assert hostless and {v[0] for v in hostless} == {"sink_default"}
+    assert {v[2:] for v in hostless} == {(None, None, None)}
+    odd_json = json.dumps(odd, ensure_ascii=False)
+    news = next(v[1] for v in got.values() if v[0] == odd)
+    assert f'"host":{odd_json}' in news and f'"prd":{odd_json}' in news
+
+
 def test_lookups_are_built_in_the_driver(spark, tmp_path, monkeypatch):
     """The lookup tables are built in the driver from rows it already holds
     (the built-in seed, or a ConfigStore's stored routes): each plans as a

@@ -49,14 +49,54 @@ def test_scan_prunes_and_pushes_down(spark, tmp_path):
     assert "html" not in plan  # binary column pruned from ReadSchema
 
 
-def test_enrich_uses_broadcast_joins(spark, pages_small):
-    """Enrichment must plan as BroadcastHashJoin (zero shuffle on the fact side)."""
-    from logport_spark.operators.enrich import enrich, load_lookups, with_domain
+def _pages_scan(spark, pages_small, tmp_path):
+    """pages_small as a parquet scan: over the in-memory frame Catalyst
+    folds the whole route into its LocalTableScan."""
+    p = str(tmp_path / "pages")
+    pages_small.write.parquet(p)
+    return spark.read.parquet(p)
 
-    df = enrich(with_domain(pages_small.select("url", "lang")), load_lookups(spark))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "SortMergeJoin" not in plan
+
+def test_enrich_route_is_one_join_free_project(spark, pages_small, tmp_path):
+    """Enrichment and routing read map literals built from the driver-held
+    lookups: the executed plan has no join and no exchange of any kind
+    (no shuffle, no broadcast), only the scan and narrow projects."""
+    from logport_spark.operators.enrich import enrich, load_lookups, with_domain
+    from logport_spark.operators.route import resolve_route
+
+    lookups = load_lookups(spark)
+    pages = _pages_scan(spark, pages_small, tmp_path).select("url", "lang")
+    df = resolve_route(enrich(with_domain(pages), lookups), lookups["routes"])
+    df.collect()
+    names = [n.nodeName() for n in
+             _plan_nodes(df._jdf.queryExecution().executedPlan())]
+    assert not [n for n in names if "Join" in n or "Exchange" in n], names
+    assert "Project" in names
+
+
+def test_route_runs_one_job(spark, pages_small, tmp_path):
+    """A noop write of the enrich→route chain runs exactly one Spark job:
+    the lookups are plan literals, so no lookup is broadcast by a job of
+    its own."""
+    import uuid
+
+    from logport_spark.plans.pipeline import route
+
+    pages = _pages_scan(spark, pages_small, tmp_path)
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    prior = {k: sc.getLocalProperty(k) for k in props}
+    group = f"route-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        (route(spark, pages).write.format("noop").mode("overwrite").save())
+    finally:
+        for k, v in prior.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) == 1, jobs
 
 
 def _plan_nodes(node):
@@ -75,26 +115,27 @@ def _plan_nodes(node):
         yield from _plan_nodes(kids.apply(i))
 
 
-def test_parse_path_has_no_shuffle(spark, pages_small):
-    """scan -> broadcast enrich/route per page -> explode -> envelope is
-    exchange-free (the only Exchange at scale is the bucket repartition
-    before the ledger's fan-out write), and the three lookup joins run
-    below the line Generate, once per page."""
+def test_parse_path_has_no_shuffle(spark, pages_small, tmp_path):
+    """scan -> enrich/route per page -> explode -> envelope has no join and
+    no exchange of any kind (the only Exchange at scale is the bucket
+    repartition before the ledger's fan-out write), and the route columns
+    are computed below the line Generate, once per page."""
     from logport_spark.plans.pipeline import parsed_routed
 
-    routed = parsed_routed(spark, pages_small)
+    routed = parsed_routed(spark, _pages_scan(spark, pages_small, tmp_path))
     routed.collect()  # AQE fixes the plan that runs only once the query has run
     executed = routed._jdf.queryExecution().executedPlan()
-    plan = executed.toString()
-    assert "isFinalPlan=true" in plan
-    # BroadcastExchange is fine; a hash-partitioned shuffle exchange is not
-    assert "Exchange hashpartitioning" not in plan
-    assert "ShuffledHashJoin" not in plan and "SortMergeJoin" not in plan
     names = [n.nodeName() for n in _plan_nodes(executed)]
-    assert names.count("BroadcastHashJoin") == 3
+    assert not [n for n in names if "Join" in n or "Exchange" in n], names
     gen = next(n for n in _plan_nodes(executed) if n.nodeName() == "Generate")
-    below = [n.nodeName() for n in _plan_nodes(gen)]
-    assert below.count("BroadcastHashJoin") == 3
+    below = gen.child().output()
+    cols = {below.apply(i).name() for i in range(below.size())}
+    route_cols = {"domain", "tld", "category", "locale", "route_key", "sink",
+                  "route_hostname", "route_prd", "route_log_type"}
+    assert route_cols <= cols, cols
+    scan = next(n for n in _plan_nodes(executed) if "Scan" in n.nodeName())
+    out = scan.output()
+    assert not route_cols & {out.apply(i).name() for i in range(out.size())}
 
 
 def test_observer_lines_plan_is_codegen_only(spark):

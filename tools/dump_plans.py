@@ -19,9 +19,9 @@ SF = "/root/testdata/sf0.01"
 ANNOTATED = {
     "lp_envelope": (
         "The parse hot path, with no shuffle exchange. Each page is enriched "
-        "and routed BEFORE the line split: the three lookup "
-        "BroadcastHashJoins (domain, lang, route) run on the page rows "
-        "(10,000 here), then Generate + Filter emit the lines (185,071), all "
+        "and routed BEFORE the line split: the domain, lang and route map "
+        "literals are probed by a Project on the page rows (10,000 here), no "
+        "join, then Generate + Filter emit the lines (185,071), all "
         "in ONE WholeStageCodegen span from the scan. ArrowEvalPython "
         "appears once, fed a NULL-masked line column (JSON candidates only; "
         "it still receives every line), and it ends that span: the envelope "
