@@ -68,13 +68,8 @@ def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
     (d1, d2, jaccard) with d1 < d2. The groupBy on (d1, d2) is the shuffle;
     common shingles fan out the join — use minhash_lsh_pairs at scale."""
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    common = (shared_key_pairs(shingles, ["sh"]).groupBy("d1", "d2")
+              .agg(F.count(F.lit(1)).alias("common")))
     s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     j = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
@@ -114,18 +109,13 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.5,
 
     Output: (d1, d2, shared, n1, n2, containment) with d1 < d2 and
     containment rounded to 4."""
-    fp = winnow_fingerprints(docs, text_col=text_col, id_col=id_col,
-                             k=k, w=w)
-    if max_df is not None:
-        fp = cap_buckets(fp, ["fp"], max_df)
-    a = fp.select(F.col(id_col).alias("d1"), F.col("n_fp").alias("n1"),
-                  "fp")
-    b = fp.select(F.col(id_col).alias("d2"), F.col("n_fp").alias("n2"),
-                  "fp")
+    fp = cap_buckets(winnow_fingerprints(docs, text_col=text_col,
+                                         id_col=id_col, k=k, w=w),
+                     ["fp"], max_df)
     return (
-        a.join(b, "fp")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2", "n1", "n2")
+        shared_key_pairs(fp, ["fp"], id_col, carry=("n_fp",))
+        .groupBy("d1", "d2", F.col("n_fp1").alias("n1"),
+                 F.col("n_fp2").alias("n2"))
         .agg(F.count(F.lit(1)).alias("shared"))
         .withColumn("containment",
                     F.round(F.col("shared") / F.least("n1", "n2"), 4))
@@ -170,9 +160,11 @@ def minhash_signatures_h64(shingle_hashes: DataFrame,
 
 
 def cap_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None) -> DataFrame:
-    """100 TB guardrail for any LSH band join: drop buckets holding more
-    than `max_bucket` members before the self-join. A single pathological
-    band key with b members yields b(b-1)/2 candidate pairs in one task —
+    """100 TB guardrail for any shared-key self-join (shared_key_pairs —
+    LSH bands, cells, fingerprints, sparse dims, link sources): the one
+    hot-key cap. Drop buckets holding more than `max_bucket` members
+    before the self-join. A single pathological band key with b members
+    yields b(b-1)/2 candidate pairs in one task —
     the classic web-dedup blow-up (boilerplate/empty shingles) — and
     production pipelines cap it (members of an over-full bucket are
     near-dups of half the corpus, not of each other). None = exact
@@ -189,6 +181,25 @@ def cap_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None) -> D
     over = (banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") > max_bucket).drop("_n"))
     return banded.join(over, keys, "left_anti")
+
+
+def shared_key_pairs(rows: DataFrame, keys: list[str], id_col: str = "doc_id",
+                     carry: tuple[str, ...] = ()) -> DataFrame:
+    """The near-duplicate family's one self-join: one row per shared key
+    and id pair, (*keys, d1, d2, <c>1, <c>2 for c in carry), with d1 < d2
+    — the canonical pair order every pair miner reports. The id inequality
+    rides the equi-join's condition, so each unordered pair is minted once
+    per shared key. Callers cap hot keys first (cap_buckets) and own the
+    tail: a distinct over the ids, a count, or a sum of carried products."""
+    a, b = rows.alias("a"), rows.alias("b")
+    on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for k in keys:
+        on &= F.col(f"a.{k}") == F.col(f"b.{k}")
+    return a.join(b, on).select(
+        *[F.col(f"a.{k}").alias(k) for k in keys],
+        F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"),
+        *[F.col(f"{side}.{c}").alias(f"{c}{i}")
+          for c in carry for i, side in ((1, "a"), (2, "b"))])
 
 
 def lsh_bands(sig: DataFrame, bands: int = BANDS,
@@ -215,14 +226,7 @@ def lsh_candidates(sig: DataFrame, bands: int = BANDS,
                    max_bucket: int | None = None) -> DataFrame:
     """Band the signature, bucket-join docs sharing any band. (d1 < d2)."""
     banded = lsh_bands(sig, bands, rows_per_band, max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    return shared_key_pairs(banded, ["band", "key"]).select("d1", "d2").distinct()
 
 
 def exact_jaccard(pairs: DataFrame, left: DataFrame, right: DataFrame,
@@ -1259,15 +1263,9 @@ def _simhash_banded(sig: DataFrame, band_slices, max_hamming: int,
     banded = sig.select("doc_id", "simhash",
                         F.posexplode(bands).alias("band", "key"))
     banded = cap_buckets(banded, ["band", "key"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"),
-                F.col("a.simhash").alias("s1"), F.col("b.simhash").alias("s2"))
-        .distinct()
-    )
-    ham = F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
+    pairs = (shared_key_pairs(banded, ["band", "key"], carry=("simhash",))
+             .select("d1", "d2", "simhash1", "simhash2").distinct())
+    ham = F.bit_count(F.col("simhash1").bitwiseXOR(F.col("simhash2")))
     return (
         pairs.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)

@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import cap_buckets, shared_key_pairs
+
 # RE2-safe (no lookaround/backreferences — the pii_scrub convention, so the
 # DuckDB oracle runs the IDENTICAL pattern verbatim). Matches the simple
 # double-quoted href-first anchor form; a production crawl parser widens
@@ -858,31 +860,25 @@ def cocitation_pairs(graph: DataFrame, min_common: int = 2,
     classic guardrail: joining on src_domain mints C(out_degree, 2)
     pairs per source, so a directory-style page linking 10^5 domains
     mints 5·10^9 pairs alone. ``max_fanout`` drops sources with
-    out-degree above the cap via one tiny broadcast anti-join BEFORE the
-    self-join (the cap_buckets argument: such hubs assert taxonomy
+    out-degree above the cap BEFORE the self-join, through the family's
+    one hot-key cap (dedup.cap_buckets: such hubs assert taxonomy
     membership, not topical kinship — standard practice in co-citation
-    mining). After the cap the pair agg is one shuffle on (d1, d2) with
-    map-side combine; per-domain in-degrees broadcast back for the
-    Jaccard denominator (|domains|-bounded)."""
-    edges = graph.select("src_domain", "dst_domain").distinct()
-    if max_fanout is not None:
-        hot = (edges.groupBy("src_domain")
-               .agg(F.count("*").alias("_fan"))
-               .where(F.col("_fan") > max_fanout)
-               .select("src_domain"))
-        edges = edges.join(F.broadcast(hot), "src_domain", "left_anti")
+    mining). In-degrees come from the capped edges. After the cap the pair
+    agg is one shuffle on (d1, d2) with map-side combine; the in-degree
+    table has one row per destination domain, so it grows with the corpus
+    and its joins for the Jaccard denominator are left to AQE, not forced
+    to broadcast."""
+    edges = cap_buckets(graph.select("src_domain", "dst_domain").distinct(),
+                        ["src_domain"], max_fanout)
     indeg = (edges.groupBy(F.col("dst_domain").alias("d"))
              .agg(F.count("*").alias("deg")))
-    a, b = edges.alias("a"), edges.alias("b")
-    common = (a.join(b, (F.col("a.src_domain") == F.col("b.src_domain"))
-                     & (F.col("a.dst_domain") < F.col("b.dst_domain")))
-              .groupBy(F.col("a.dst_domain").alias("d1"),
-                       F.col("b.dst_domain").alias("d2"))
+    common = (shared_key_pairs(edges, ["src_domain"], id_col="dst_domain")
+              .groupBy("d1", "d2")
               .agg(F.count("*").alias("n_common"))
               .where(F.col("n_common") >= min_common))
     return (common
-            .join(F.broadcast(indeg.selectExpr("d AS d1", "deg AS _g1")), "d1")
-            .join(F.broadcast(indeg.selectExpr("d AS d2", "deg AS _g2")), "d2")
+            .join(indeg.selectExpr("d AS d1", "deg AS _g1"), "d1")
+            .join(indeg.selectExpr("d AS d2", "deg AS _g2"), "d2")
             .select("d1", "d2", "n_common",
                     F.round(F.col("n_common") / (F.col("_g1") + F.col("_g2")
                                                  - F.col("n_common")), 6)

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import cap_buckets, shared_key_pairs
+
 LSH_SEED = 42
 
 
@@ -37,9 +39,52 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 
 def _dot(a: str, b: str):
+    """The one dot-product fold: Σ a_i·b_i in DOUBLE, left to right — the
+    fold order the SQL oracles use. `a` and `b` are SQL array exprs."""
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
     )
+
+
+def _vec_side(emb: DataFrame, key: str, i: int, id_col: str,
+              vec_col: str) -> DataFrame:
+    """(key, v<i>, n<i>): each vector by id, in double, with its L2 norm —
+    one side of a pair's exact-cosine join."""
+    return with_norm(emb, vec_col).select(
+        F.col(id_col).alias(key), F.col("_vecd").alias(f"v{i}"),
+        F.col("norm").alias(f"n{i}"))
+
+
+def _cosine_pairs(pairs: DataFrame, emb: DataFrame, threshold: float,
+                  id_col: str, vec_col: str) -> DataFrame:
+    """Exact-cosine verify of candidate id pairs (d1, d2): the vectors
+    re-join by id only after the candidates are final, so no vector rides
+    a band or cell shuffle. Output (d1, d2, cos) with cos >= threshold,
+    rounded to 4."""
+    return (pairs.join(_vec_side(emb, "d1", 1, id_col, vec_col), "d1")
+            .join(_vec_side(emb, "d2", 2, id_col, vec_col), "d2")
+            .withColumn("cos", _dot("v1", "v2") / (F.col("n1") * F.col("n2")))
+            .filter(F.col("cos") >= threshold)
+            .select("d1", "d2", F.round("cos", 4).alias("cos")))
+
+
+def _cosine_rerank(cands: DataFrame, emb: DataFrame, query_ids: list[int],
+                   k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact-cosine rerank of (query_id, neighbor_id) candidates: top-k per
+    query on (cos DESC, neighbor_id ASC). The query vectors are a
+    broadcast — query-sized by design; neighbor vectors join by id.
+    Output (query_id, neighbor_id, cos, rank), cos rounded to 4."""
+    from pyspark.sql import Window
+
+    qv = _vec_side(emb.filter(F.col(id_col).isin(query_ids)), "query_id", 1,
+                   id_col, vec_col)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (cands.join(F.broadcast(qv), "query_id")
+            .join(_vec_side(emb, "neighbor_id", 2, id_col, vec_col), "neighbor_id")
+            .withColumn("cos", _dot("v1", "v2") / (F.col("n1") * F.col("n2")))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", F.round("cos", 4).alias("cos"), "rank"))
 
 
 def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
@@ -268,36 +313,15 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.44,
     Plan shape (PLANS.md): the band join carries ONLY (doc_id, t, key) —
     vectors never ride through the band shuffle or the candidate distinct;
     surviving id pairs re-join the corpus to fetch vectors for the
-    exact-cosine verify. posexplode_outer (not posexplode) keeps the
-    signature UDF evaluated ONCE — the inner generator's implicit
-    size(sig)>0 pushdown would re-run the ArrowEvalPython below the
-    filter."""
-    from .dedup import cap_buckets
-
+    exact-cosine verify (_cosine_pairs). posexplode_outer (not
+    posexplode) keeps the signature UDF evaluated ONCE — the inner
+    generator's implicit size(sig)>0 pushdown would re-run the
+    ArrowEvalPython below the filter."""
     sigs = lsh_signatures(emb, dim, n_tables, bits_per_table, id_col, vec_col)
     banded = sigs.select("doc_id", F.posexplode_outer("sig").alias("t", "key"))
     banded = cap_buckets(banded, ["t", "key"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(b, (F.col("a.t") == F.col("b.t")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    vecs = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("_id"), F.col("_vecd").alias("_v"), F.col("norm").alias("_nm"))
-    dot = F.expr(
-        "aggregate(zip_with(v1, v2, (x,y)->x*y), cast(0.0 as double), (a,v)->a+v)")
-    return (
-        cands
-        .join(vecs.select(F.col("_id").alias("d1"), F.col("_v").alias("v1"),
-                          F.col("_nm").alias("n1")), "d1")
-        .join(vecs.select(F.col("_id").alias("d2"), F.col("_v").alias("v2"),
-                          F.col("_nm").alias("n2")), "d2")
-        .withColumn("cos", dot / (F.col("n1") * F.col("n2")))
-        .filter(F.col("cos") >= threshold)
-        .select("d1", "d2", F.round("cos", 4).alias("cos"))
-    )
+    cands = shared_key_pairs(banded, ["t", "key"]).select("d1", "d2").distinct()
+    return _cosine_pairs(cands, emb, threshold, id_col, vec_col)
 
 
 def lowest_id_centroids(emb: DataFrame, nlist: int,
@@ -356,19 +380,12 @@ def _centroid_scores_sql(emb: DataFrame, cents: list[list[float]],
     interpreted lambda folds per row is the same pathology pq_encode's
     kernel replaced (2-32s swings on identical plans, BENCH/BASELINE.md
     session-9 note)."""
-    cnorm = _centroid_norms(cents)
     vd = f"transform({vec_col}, x -> cast(x as double))"
-    per = []
-    for c, nm in zip(cents, cnorm):
-        lits = ", ".join(repr(x) for x in c)
-        per.append(
-            f"aggregate(zip_with({vd}, array({lits}), (x, y) -> x * y),"
-            f" cast(0.0 as double), (a, p) -> a + p) / {nm!r}"
-        )
-    return emb.select(
-        F.col(id_col).alias("_id"),
-        F.expr(f"array({', '.join(per)})").alias("_sc"),
-    )
+    # the literals stay SQL literals (decimals, coerced to double) as the
+    # oracle writes them, the norm included
+    per = [_dot(vd, f"array({', '.join(map(repr, c))})") / F.expr(repr(nm))
+           for c, nm in zip(cents, _centroid_norms(cents))]
+    return emb.select(F.col(id_col).alias("_id"), F.array(*per).alias("_sc"))
 
 
 def _centroid_scores(emb: DataFrame, cents: list[list[float]],
@@ -480,28 +497,13 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
     wq = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("cell"))
     probed = (qcells.withColumn("r", F.row_number().over(wq))
               .filter(F.col("r") <= nprobe).select("query_id", "cell"))
-    vecs = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("_id"), F.col("_vecd").alias("_vd"), F.col("norm").alias("_nm"))
-    qv = vecs.filter(F.col("_id").isin(query_ids)).select(
-        F.col("_id").alias("query_id"), F.col("_vd").alias("v1"), F.col("_nm").alias("n1"))
-    dot = F.expr(
-        "aggregate(zip_with(v1, v2, (x,y)->x*y), cast(0.0 as double), (a,v)->a+v)")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     cands = (
         corpus.join(F.broadcast(probed), "cell")
         .filter(F.col("_id") != F.col("query_id"))
         .select("query_id", F.col("_id").alias("neighbor_id"))
         .distinct()
     )
-    nv = vecs.select(F.col("_id").alias("neighbor_id"),
-                     F.col("_vd").alias("v2"), F.col("_nm").alias("n2"))
-    return (
-        cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
-        .withColumn("cos", dot / (F.col("n1") * F.col("n2")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 4).alias("cos"), "rank")
-    )
+    return _cosine_rerank(cands, emb, query_ids, k, id_col, vec_col)
 
 
 def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.95,
@@ -525,38 +527,18 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float = 0.95,
     bounded (the paper runs 50k clusters on 5B embeddings for the same
     reason). Cell assignment is a zero-shuffle narrow map (centroids ride
     the Arrow kernel's closure — see _centroid_scores); the self-join
-    shuffles bare (cell, id) pairs only;
-    vectors rejoin by id for the exact verify — the embedding_lsh_pairs
-    tail. `max_cell` caps degenerate cells (cap_buckets guardrail)."""
-    from .dedup import cap_buckets
-
+    (dedup.shared_key_pairs) shuffles bare (cell, id) pairs only; vectors
+    rejoin by id for the exact verify (_cosine_pairs, shared with
+    embedding_lsh_pairs). `max_cell` caps degenerate cells
+    (dedup.cap_buckets)."""
     cents = centroids if centroids is not None else \
         lowest_id_centroids(emb, nlist, id_col, vec_col)
     scored = _centroid_scores(emb, cents, id_col, vec_col)
     cell = F.array_position(F.col("_sc"), F.array_max("_sc")).cast("int")
     corpus = scored.select(F.col("_id").alias("doc_id"), cell.alias("cell"))
     corpus = cap_buckets(corpus, ["cell"], max_cell)
-    a, b = corpus.alias("a"), corpus.alias("b")
-    cands = (
-        a.join(b, (F.col("a.cell") == F.col("b.cell"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-    )
-    vecs = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("_id"), F.col("_vecd").alias("_v"),
-        F.col("norm").alias("_nm"))
-    dot = F.expr(
-        "aggregate(zip_with(v1, v2, (x,y)->x*y), cast(0.0 as double), (a,v)->a+v)")
-    return (
-        cands
-        .join(vecs.select(F.col("_id").alias("d1"), F.col("_v").alias("v1"),
-                          F.col("_nm").alias("n1")), "d1")
-        .join(vecs.select(F.col("_id").alias("d2"), F.col("_v").alias("v2"),
-                          F.col("_nm").alias("n2")), "d2")
-        .withColumn("cos", dot / (F.col("n1") * F.col("n2")))
-        .filter(F.col("cos") >= threshold)
-        .select("d1", "d2", F.round("cos", 4).alias("cos"))
-    )
+    cands = shared_key_pairs(corpus, ["cell"]).select("d1", "d2")
+    return _cosine_pairs(cands, emb, threshold, id_col, vec_col)
 
 
 def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
@@ -570,8 +552,6 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
     id pairs are deduped bare, then vectors are fetched by id for the exact
     rerank (query vectors via a second broadcast). posexplode_outer keeps
     the signature UDF evaluated once (see embedding_lsh_pairs)."""
-    from pyspark.sql import Window
-
     sigs = lsh_signatures(emb, dim, n_tables, bits_per_table, id_col, vec_col)
     banded = sigs.select("doc_id", F.posexplode_outer("sig").alias("t", "key"))
     qb = (
@@ -584,22 +564,7 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
         .select("query_id", F.col("doc_id").alias("neighbor_id"))
         .distinct()
     )
-    vecs = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("_id"), F.col("_vecd").alias("_v"), F.col("norm").alias("_nm"))
-    qv = vecs.filter(F.col("_id").isin(query_ids)).select(
-        F.col("_id").alias("query_id"), F.col("_v").alias("v1"), F.col("_nm").alias("n1"))
-    nv = vecs.select(
-        F.col("_id").alias("neighbor_id"), F.col("_v").alias("v2"), F.col("_nm").alias("n2"))
-    dot = F.expr(
-        "aggregate(zip_with(v1, v2, (x,y)->x*y), cast(0.0 as double), (a,v)->a+v)")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
-        .withColumn("cos", dot / (F.col("n1") * F.col("n2")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 4).alias("cos"), "rank")
-    )
+    return _cosine_rerank(cands, emb, query_ids, k, id_col, vec_col)
 
 
 # --------------------------------------------------------------------- PQ --
@@ -680,9 +645,9 @@ def _adc_topk_rerank(stacked: DataFrame, emb: DataFrame,
                      n_salts: int, id_col: str, vec_col: str) -> DataFrame:
     """Shared PQ/IVF∘PQ tail: salted two-phase top-``rerank`` on
     (adc ASC, neighbor_id ASC) over the (query_id, neighbor_id, adc)
-    stream, then the exact-cosine rerank join — ONE copy of the
-    determinism-critical path (salting, tiebreaks, rounding) for both
-    ANN legs."""
+    stream, then the exact-cosine rerank (_cosine_rerank, shared with
+    ivf_topk and ann_lsh_topk) — ONE copy of the determinism-critical
+    path (salting, tiebreaks, rounding) for both ANN legs."""
     from pyspark.sql import Window
 
     order = [F.asc("adc"), F.asc("neighbor_id")]
@@ -696,22 +661,7 @@ def _adc_topk_rerank(stacked: DataFrame, emb: DataFrame,
              .withColumn("_r2", F.row_number().over(w2))
              .where(F.col("_r2") <= rerank)
              .select("query_id", "neighbor_id"))
-    vecs = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("_vid"), F.col("_vecd").alias("_v"),
-        F.col("norm").alias("_nm"))
-    qv = vecs.filter(F.col("_vid").isin(query_ids)).select(
-        F.col("_vid").alias("query_id"), F.col("_v").alias("v1"),
-        F.col("_nm").alias("n1"))
-    nv = vecs.select(F.col("_vid").alias("neighbor_id"),
-                     F.col("_v").alias("v2"), F.col("_nm").alias("n2"))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id"))
-    return (cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
-            .withColumn("cos", _dot("v1", "v2") / (F.col("n1") * F.col("n2")))
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round("cos", 4).alias("cos"), "rank"))
+    return _cosine_rerank(cands, emb, query_ids, k, id_col, vec_col)
 
 
 def pq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
@@ -1085,9 +1035,10 @@ def sparse_near_pairs(vecs: DataFrame, threshold: float = 0.8,
     product is a partial-aggregated sum of per-dimension products — no
     dense array ever materializes and absent dims cost nothing.
 
-    `max_dim_df` is the AllPairs hot-dimension prune (the cap_buckets
-    analogue): a dimension shared by d docs contributes d(d-1)/2
-    candidate pairs, and the hottest dims (stopword buckets, in
+    `max_dim_df` is the AllPairs hot-dimension prune, applied by the
+    family's one hot-key cap (dedup.cap_buckets on dim_id, so AQE picks
+    the anti-join's strategy): a dimension shared by d docs contributes
+    d(d-1)/2 candidate pairs, and the hottest dims (stopword buckets, in
     embed_docs' hashing space) carry the least signal — dropping dims
     with df > max_dim_df bounds the candidate volume at the cost of
     underestimating cosines by those dims' (small) products. WWW'07's
@@ -1097,19 +1048,18 @@ def sparse_near_pairs(vecs: DataFrame, threshold: float = 0.8,
 
     Input vals are embed_docs' L2-normalized components, so the pair dot
     IS the cosine. Output: (d1, d2, cos) with d1 < d2, cos >= threshold."""
-    v = vecs
-    if max_dim_df is not None:
-        hot = (v.groupBy("dim_id").agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > max_dim_df).select("dim_id"))
-        v = v.join(F.broadcast(hot), "dim_id", "left_anti")
-    a, b = v.alias("a"), v.alias("b")
-    return (a.join(b, (F.col("a.dim_id") == F.col("b.dim_id"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("d1"),
-                     F.col("b.doc_id").alias("d2"))
-            .agg(F.round(F.sum(F.col("a.val") * F.col("b.val")), 4)
-                 .alias("cos"))
+    return (_dim_dots(cap_buckets(vecs, ["dim_id"], max_dim_df))
+            .select("d1", "d2", F.round("dot", 4).alias("cos"))
             .filter(F.col("cos") >= threshold))
+
+
+def _dim_dots(vecs: DataFrame) -> DataFrame:
+    """(d1, d2, dot): the sparse dot of every doc pair sharing a dimension,
+    one dim-keyed self-join and a pair-keyed partial-aggregated sum of
+    per-dimension products."""
+    return (shared_key_pairs(vecs, ["dim_id"], carry=("val",))
+            .groupBy("d1", "d2")
+            .agg(F.sum(F.col("val1") * F.col("val2")).alias("dot")))
 
 
 def hybrid_near_pairs(vecs: DataFrame, threshold: float = 0.8,
@@ -1231,16 +1181,10 @@ def hybrid_near_pairs(vecs: DataFrame, threshold: float = 0.8,
              .repartition(n_blocks)
              .mapInPandas(gemm, "d1 long, d2 long, hot double"))
 
-    tail = vecs.filter(~F.col("dim_id").isin(head_ids))
-    a, b = tail.alias("a"), tail.alias("b")
-    tail_dots = (a.join(b, (F.col("a.dim_id") == F.col("b.dim_id"))
-                        & (F.col("a.doc_id") < F.col("b.doc_id")))
-                 .groupBy(F.col("a.doc_id").alias("d1"),
-                          F.col("b.doc_id").alias("d2"))
-                 .agg(F.sum(F.col("a.val") * F.col("b.val")).alias("tl")))
+    tail_dots = _dim_dots(vecs.filter(~F.col("dim_id").isin(head_ids)))
     return (cands.join(tail_dots, ["d1", "d2"], "left")
             .select("d1", "d2",
-                    F.round(F.col("hot") + F.coalesce(F.col("tl"),
+                    F.round(F.col("hot") + F.coalesce(F.col("dot"),
                                                       F.lit(0.0)), 4)
                     .alias("cos"))
             .filter(F.col("cos") >= threshold))

@@ -321,6 +321,31 @@ def shingles_expr(text_col: str, n: int, toks_col: str | None = None) -> str:
     )
 
 
+def _winnow_sel(df: DataFrame, text_col: str, k: int, w: int) -> DataFrame:
+    """`df` plus the winnow selection columns: _toks (the tokens), _grams
+    (md5 of each k-gram) and _sel (the distinct w-window minima)."""
+    grams = (
+        f"CASE WHEN size(_toks) >= {k} THEN "
+        f"transform(sequence(1, size(_toks) - {k - 1}),"
+        f" i -> md5(array_join(slice(_toks, i, {k}), ' '))) "
+        f"ELSE array(md5({text_col})) END"
+    )
+    # Materialize each intermediate as a COLUMN: Spark does no
+    # common-subexpression elimination inside lambdas, so inlining `grams`
+    # into the per-window slice re-hashes the whole gram array once per
+    # window (measured 20s -> sub-second at sf0.1). CollapseProject keeps
+    # multi-referenced non-trivial columns materialized; _toks keeps the
+    # per-gram slice from re-splitting the text (see shingles_expr).
+    return (df.withColumn("_toks", F.expr(f"split({text_col},' ')"))
+            .withColumn("_grams", F.expr(grams))
+            # windows: j in 1..max(len-w+1, 1), each of size min(w, len)
+            .withColumn("_sel", F.expr(
+                f"array_distinct(transform("
+                f" sequence(1, greatest(size(_grams) - {w - 1}, 1)),"
+                f" j -> array_min(slice(_grams, j, least({w}, size(_grams))))))"
+            )))
+
+
 def winnow(df: DataFrame, text_col: str = "text", k: int = 4,
            w: int = 5) -> DataFrame:
     """Winnowing fingerprint (Schleimer/Wilkerson/Aiken, the MOSS scheme):
@@ -337,30 +362,7 @@ def winnow(df: DataFrame, text_col: str = "text", k: int = 4,
     raw text. Output: n_fp (selected count) + fp_digest (md5 of the sorted
     selected set) — the set itself stays an internal array so the driver
     canon sees scalars."""
-    grams = (
-        f"CASE WHEN size(_toks) >= {k} THEN "
-        f"transform(sequence(1, size(_toks) - {k - 1}),"
-        f" i -> md5(array_join(slice(_toks, i, {k}), ' '))) "
-        f"ELSE array(md5({text_col})) END"
-    )
-    # Materialize each intermediate as a COLUMN: Spark does no
-    # common-subexpression elimination inside lambdas, so inlining `grams`
-    # into the per-window slice re-hashes the whole gram array once per
-    # window (measured 20s -> sub-second at sf0.1). CollapseProject keeps
-    # multi-referenced non-trivial columns materialized; _toks keeps the
-    # per-gram slice from re-splitting the text (see shingles_expr).
-    out = (df.withColumn("_toks", F.expr(f"split({text_col},' ')"))
-           .withColumn("_grams", F.expr(grams)))
-    # windows: j in 1..max(len-w+1, 1), each of size min(w, len)
-    out = out.withColumn(
-        "_sel",
-        F.expr(
-            f"array_distinct(transform("
-            f" sequence(1, greatest(size(_grams) - {w - 1}, 1)),"
-            f" j -> array_min(slice(_grams, j, least({w}, size(_grams))))))"
-        ),
-    )
-    return out.select(
+    return _winnow_sel(df, text_col, k, w).select(
         *df.columns,
         F.expr("size(_sel)").alias("n_fp"),
         F.expr("md5(array_join(array_sort(_sel), ''))").alias("fp_digest"),
@@ -372,23 +374,9 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
                         w: int = 5) -> DataFrame:
     """The exploded form of :func:`winnow`: one row per (id, fp) selected
     fingerprint, n_fp carried — the join-able representation containment
-    detection and cross-corpus fingerprint indexes need. Same selection
-    exprs as winnow (pytest pins n_fp equal), still zero-shuffle."""
-    grams = (
-        f"CASE WHEN size(_toks) >= {k} THEN "
-        f"transform(sequence(1, size(_toks) - {k - 1}),"
-        f" i -> md5(array_join(slice(_toks, i, {k}), ' '))) "
-        f"ELSE array(md5({text_col})) END"
-    )
-    out = (df.withColumn("_toks", F.expr(f"split({text_col},' ')"))
-           .withColumn("_grams", F.expr(grams))
-           .withColumn(
-               "_sel",
-               F.expr(
-                   f"array_distinct(transform("
-                   f" sequence(1, greatest(size(_grams) - {w - 1}, 1)),"
-                   f" j -> array_min(slice(_grams, j, least({w}, size(_grams))))))"
-               )))
+    detection and cross-corpus fingerprint indexes need. The same
+    selection as winnow (_winnow_sel), still zero-shuffle."""
+    out = _winnow_sel(df, text_col, k, w)
     # explode_OUTER, deliberately: plain explode triggers Catalyst's
     # InferFiltersFromGenerate, which synthesizes `size(_sel) > 0` and
     # pushes it below the _toks/_grams projections — fully inlining the

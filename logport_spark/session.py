@@ -75,7 +75,7 @@ def get_spark(
     return spark
 
 
-def ensure_min_parallelism(df, min_parts: int | None = None):
+def ensure_min_parallelism(df):
     """Small-file guard for CPU-heavy operators (dedup/minhash/fingerprint).
 
     A scan of one small parquet file yields ONE input partition, serializing
@@ -91,8 +91,7 @@ def ensure_min_parallelism(df, min_parts: int | None = None):
     the wrong proxy for work — widening to the cores is correct. The
     streaming widen runs once per micro-batch forever and over-widening
     there mints near-empty tasks on every trigger, hence its cap."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -186,6 +186,58 @@ def test_one_line_grain_core():
     assert not sites[".broadcast"] & line_family
 
 
+def test_one_pair_core():
+    """The near-duplicate pair miners run on one core: dedup.shared_key_pairs
+    is the one id-ordered self-join (the brute theta join
+    similarity.embedding_near_pairs aside), dedup.cap_buckets the one
+    hot-key anti-join, and similarity._dot the one dot-product fold. No
+    pair miner forces a broadcast: the relations they join grow with the
+    corpus, so AQE picks each join's strategy."""
+    import ast
+
+    ops = "logport_spark/operators"
+    dedup, sim = f"{ops}/dedup.py", f"{ops}/similarity.py"
+    miners = {f"{dedup}::{f}" for f in (
+        "jaccard_pairs", "containment_pairs", "lsh_candidates",
+        "_simhash_banded")}
+    miners |= {f"{sim}::{f}" for f in (
+        "embedding_lsh_pairs", "semantic_dedup_pairs", "sparse_near_pairs",
+        "hybrid_near_pairs")}
+    miners.add(f"{ops}/linkgraph.py::cocitation_pairs")
+    caps = {"max_bucket", "max_df", "max_cell", "max_dim_df", "max_fanout"}
+    sites = _code_sites({".alias", '"a"', '"b"', "shared_key_pairs",
+                         "_dim_dots", '"left_anti"', ".broadcast", *caps},
+                        ops)
+    assert sites[".alias"] & sites['"a"'] & sites['"b"'] == {
+        f"{dedup}::shared_key_pairs", f"{sim}::embedding_near_pairs"}
+    # the sparse dot miners reach the self-join through their one dim-join
+    assert f"{sim}::_dim_dots" in sites["shared_key_pairs"]
+    assert miners <= sites["shared_key_pairs"] | sites["_dim_dots"]
+    capped = set().union(*(sites[c] for c in caps))
+    assert sites['"left_anti"'] & capped == {f"{dedup}::cap_buckets"}
+    assert not sites[".broadcast"] & miners
+
+    folds = set()
+    root = os.path.join(REPO, ops)
+    for fn in sorted(os.listdir(root)):
+        if not fn.endswith(".py"):
+            continue
+        with open(os.path.join(root, fn), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        docs = {id(n.body[0].value) for n in ast.walk(tree)
+                if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+                and ast.get_docstring(n) is not None}
+        funcs = [(n.lineno, n.end_lineno, n.name) for n in ast.walk(tree)
+                 if isinstance(n, ast.FunctionDef)]
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and "aggregate(zip_with(" in n.value
+                    and id(n) not in docs):
+                inner = max((f for f in funcs if f[0] <= n.lineno <= f[1]),
+                            key=lambda f: f[0], default=(0, 0, "<module>"))
+                folds.add(f"{ops}/{fn}::{inner[2]}")
+    assert folds == {f"{sim}::_dot"}
+
 def test_one_filesystem_layer():
     """The pipeline touches the filesystem of its own tables through one
     layer: plans/ledger.py's Hadoop-FS helpers (hadoop_fs is the only

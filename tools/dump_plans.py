@@ -66,11 +66,12 @@ ANNOTATED = {
     ),
     "embedding_lsh_pairs": (
         "Embedding near-dup at scale: ONE ArrowEvalPython computes all 16 "
-        "band keys per row (numpy matmul), posexplode, then a hash join on "
-        "(t, key) — never an O(n^2) cross product; AQE broadcasts one band "
-        "table here (8,000 rows), so the only keyed shuffle is the (d1, d2) "
-        "candidate dedup; only deduped candidates reach the exact-cosine "
-        "filter."
+        "band keys per row (numpy matmul), posexplode, then the family's "
+        "one self-join (dedup.shared_key_pairs) on (t, key) — never an "
+        "O(n^2) cross product; no hint: AQE broadcasts one band table here "
+        "(8,000 rows), so the only keyed shuffle is the (d1, d2) candidate "
+        "dedup; only deduped candidates re-join the vectors for the "
+        "exact-cosine filter (similarity._cosine_pairs)."
     ),
     "corpus_clean": (
         "Curation composite: exact dedup on md5(text) is a min(struct) "
@@ -160,8 +161,9 @@ ANNOTATED = {
         "SemDeDup: centroid scoring in one narrow MapInPandas (centroids "
         "ride the Arrow kernel's closure; the RoundRobin Exchange below it "
         "is the `_emb` single-file ingest widen) -> cell self-join on bare "
-        "(cell, id) -> vectors re-joined by id for the exact-cosine verify — "
-        "the embedding_lsh_pairs tail with cells instead of bands."
+        "(cell, id) (dedup.shared_key_pairs) -> vectors re-joined by id for "
+        "the exact-cosine verify (similarity._cosine_pairs, the same verify "
+        "embedding_lsh_pairs runs)."
     ),
     "web_curation": (
         "End-to-end pages curation (fused line shape): url keep-max agg "
@@ -524,12 +526,14 @@ ANNOTATED = {
     ),
     "cocitation_pairs": (
         "Co-citation self-join with the fan-out guardrail: hot sources "
-        "drop via a broadcast anti-join BEFORE the self-join (a "
-        "directory hub would mint C(out_degree, 2) pairs), the pair "
-        "aggregate is one map-side-combined exchange on (d1, d2), and "
-        "in-degrees come back as broadcasts for the Jaccard "
-        "denominator. Everything downstream of link extraction is "
-        "|host-graph|-sized."
+        "drop through dedup.cap_buckets BEFORE the self-join (a "
+        "directory hub would mint C(out_degree, 2) pairs; the cap's "
+        "anti-join is AQE's to plan), the pair aggregate is one "
+        "map-side-combined exchange on (d1, d2), and the in-degrees join "
+        "back for the Jaccard denominator. No side is forced to "
+        "broadcast: the in-degree table has a row per destination "
+        "domain; AQE broadcasts it at this size. Everything downstream "
+        "of link extraction is |host-graph|-sized."
     ),
     "crawl_plan": (
         "The fetch-plan composite: the robots verdict join (host-keyed; at "
@@ -684,9 +688,10 @@ ANNOTATED = {
         "one ArrowEvalPython/mapInPandas span is the blocked GEMM over the "
         "dense head (the quadratic part, in BLAS instead of a ~230M-row dim "
         "join — 169s -> ~2s at 5k docs), the sparse tail joins on rare dims "
-        "only (here its aggregate came back empty, so AQE dropped the "
-        "left-outer SortMergeJoin and the whole tail branch at runtime), and "
-        "the final project rounds and filters. Output bit-equal to the "
+        "only, through sparse_near_pairs' dim-join dot (similarity._dim_dots; "
+        "here its aggregate came back empty, so AQE dropped the left-outer "
+        "SortMergeJoin and the whole tail branch at runtime), and the final "
+        "project rounds and filters. Output bit-equal to the "
         "unpruned AllPairs join (Cauchy-Schwarz emission floor with 4dp "
         "rounding slack)."
     ),
